@@ -46,7 +46,9 @@ def main() -> None:
     ap.add_argument("--links-canonical", action="store_true",
                     help="links table is pre-canonicalized (typically "
                          "src_host-partitioned parquet: per-wave host "
-                         "partition pruning, no full-graph cache)")
+                         "partition pruning, no full-graph cache); "
+                         "optional src_domain/dst_domain columns keep "
+                         "the PSL domain UDF out of same-domain waves")
     ap.add_argument("--corpus-buckets", type=int, default=0,
                     help="--images was written by write_corpus_bucketed "
                          "with this bucket count: big waves prune the "

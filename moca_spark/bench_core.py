@@ -163,6 +163,10 @@ def frontier_schedule_dedup(
         except (OSError, ValueError):
             have = False
         if not have:
+            # drop the stale marker first: a crash mid-rewrite must not
+            # leave old params validating half-overwritten inputs
+            if _os.path.exists(marker):
+                _os.remove(marker)
             for name, df in (("frontier", frontier), ("seen", seen),
                              ("candidates", candidates),
                              ("fresh_prev", fresh_prev)):

@@ -53,14 +53,19 @@ Scale notes (the 100 TB story):
 - The runs/criteria table and robots rules are broadcast.
 - Lineage is cut per wave (localCheckpoint / snapshot re-read), so
   plans stay one scan deep regardless of wave count.
-- Python appears only in Arrow UDFs (canonicalize, PSL domain) and in
-  the optional bloom pre-filter; everything else is codegen'd JVM.
+- Python appears only in Arrow UDFs, and none of them in the wave
+  loop: canonicalize and the PSL domain run once per engine over the
+  link graph, whose src_domain/dst_domain columns the criteria read
+  off the joined link rows (_link_graph). The exceptions are the
+  optional monolith bloom pre-filter and a canonical links table
+  without domain columns (warned). Everything else is codegen'd JVM.
 """
 
 from __future__ import annotations
 
 import tempfile
 import zlib
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pandas as pd
@@ -325,6 +330,7 @@ class CrawlEngine:
         self.state_broadcast_max = state_broadcast_max
         self._state_rows_bound: int | None = 0
         self._run_ords: list[str] | None = None
+        self._run_criteria: dict[str, F.Column] | None = None
         # U3 partition selector (partition/PartitionSelector.scala:6-16;
         # default = ByHostPartitionSelector): Column -> partition key.
         # The frontier 'host' column IS the partition key; criteria
@@ -376,13 +382,20 @@ class CrawlEngine:
         # Canonicalize the graph once: both endpoints normalized, invalid
         # dropped (R9 scheme whitelist happens inside canonicalize).
         # The graph is re-joined every wave. Two input shapes:
-        # - raw links (default): canonicalize once and cache (the
+        # - raw links (default): canonicalize once per engine, into a
+        #   local checkpoint the first wave materializes (the
         #   pandas-UDF normalization must not re-run per wave);
         # - links_canonical=True: the table is already normalized —
         #   typically a parquet dir PARTITIONED BY src_host, which lets
         #   the per-wave expand join prune to the scheduled hosts'
         #   partitions via dynamic partition pruning instead of
         #   scanning the whole web graph (the 10^10 expand-join story).
+        #   Optional src_domain/dst_domain columns (the ingest layout)
+        #   are used as they are; without them the PSL domains are
+        #   derived on the pruned link rows (_link_graph warns once).
+        # Either way the wave loop reads src_domain/dst_domain off the
+        # joined link rows (url/Url.scala:25-26: the domain is a
+        # derived field of the URL) and never calls the domain UDF.
         self.links_canonical = links_canonical
         self.prune_hosts_threshold = 10_000
         if links_canonical:
@@ -400,8 +413,9 @@ class CrawlEngine:
                 .filter(F.col("src_url").isNotNull() & F.col("dst_url").isNotNull())
                 .distinct()
                 .withColumn("src_host", url_host(F.col("src_url")))
-                .cache()
             )
+        # raw links materialize once, in the first run (_link_graph)
+        self._links_checkpointed = False
         self.runs: list[dict] = []
         self.custom_by_name: dict[str, tuple[str, ...]] = {}
 
@@ -515,6 +529,22 @@ class CrawlEngine:
             .withColumn("run_id", F.element_at(arr, F.col("_run_ord") + 1))
         )
 
+    def _criteria_lookups(self) -> dict[str, F.Column]:
+        """Per-run criteria as O(1) literal-array lookups on the
+        carried run ordinal (trim mode, round 6): the criteria are
+        driver-side constants, so the expand phase attaches them
+        without the per-wave runs broadcast join. Built once per
+        run(), next to ``_run_ords``; bounded by runid_trim_max_runs
+        literals per array, exactly like _rerun_id."""
+        by_id = {r["run_id"]: r for r in self.runs}
+        return {
+            c: F.element_at(
+                F.array(*[F.lit(by_id[rid][c]) for rid in self._run_ords]),
+                F.col("_run_ord") + 1)
+            for c in ("criteria_name", "max_depth", "same_host",
+                      "same_domain", "robots_txt")
+        }
+
     def _runs_df(self) -> DataFrame:
         cols = ["run_id", "seed_url", "seed_seq", "criteria_name",
                 "max_depth", "same_host", "same_domain", "robots_txt"]
@@ -548,6 +578,7 @@ class CrawlEngine:
 
         self._run_ords = None  # (re)built below iff lsm mode; a stale
         # dictionary from a previous run() must never leak into this one
+        self._run_criteria = None
         if self._frontier_lsm and _wave_mod.SLICE_DEDUP_MODE == "hashagg_packed":
             # the packed-long dedup is exact only for depth < 2^16 and
             # seq < 2^47 (seq = wave*2^32 + parent_rank ⇒ wave < 2^15)
@@ -634,6 +665,8 @@ class CrawlEngine:
             self._run_ords = (
                 rids if len(rids) <= self.runid_trim_max_runs else None
             )
+            if self._run_ords is not None:
+                self._run_criteria = self._criteria_lookups()
             frontier = self._trim_frontier(frontier)
             seen_t = self._trim_runids(seen)
             if seen_t is not seen:
@@ -647,6 +680,7 @@ class CrawlEngine:
         self._seen_base, self._seen_deltas = seen, []
 
         runs_b = F.broadcast(self._runs_df())
+        links = self._link_graph()
         wave = start
         self.wave_times: list[float] = []
         import time as _time
@@ -657,7 +691,7 @@ class CrawlEngine:
             # job every wave pays anyway) doubles as the emptiness
             # signal — it returns None on an exhausted frontier before
             # committing anything (round 6, one fewer action per wave)
-            stepped = self._step(wave + 1, frontier, runs_b)
+            stepped = self._step(wave + 1, frontier, runs_b, links)
             if stepped is None:
                 break
             wave += 1
@@ -733,10 +767,20 @@ class CrawlEngine:
             df = df.sortWithinPartitions(*STATE_KEYS)
         if not aqe_off:
             return df.localCheckpoint(eager=True)
+        with self._aqe_off():
+            return df.localCheckpoint(eager=True)
+
+    @contextmanager
+    def _aqe_off(self):
+        """Plan with AQE off inside the block, restoring the conf on
+        exit and on error (session-global; see _materialize). Also
+        what makes a ``localCheckpoint(eager=False)`` actually lazy:
+        under AQE, planning the checkpoint materializes every
+        intermediate query stage eagerly (getFinalPhysicalPlan)."""
         aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            return df.localCheckpoint(eager=True)
+            yield
         finally:
             self.spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
@@ -909,18 +953,13 @@ class CrawlEngine:
         eager by nature (the write IS the durability)."""
         if self.durable:
             return self.store.write_increment(wave, name, df)
-        # AQE-off planning makes the checkpoint ACTUALLY lazy: under
-        # AQE, toRdd materializes every intermediate query stage
-        # eagerly (getFinalPhysicalPlan), so even eager=False would run
-        # the increment's broadcast/shuffle stages per wave. The
-        # increment plans are projections over the wave's cached slice
-        # and a broadcast fetch join — nothing AQE helps with.
-        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        # AQE-off planning makes the checkpoint ACTUALLY lazy (else
+        # the increment's broadcast/shuffle stages would run per wave;
+        # _aqe_off). The increment plans are projections over the
+        # wave's cached slice and a broadcast fetch join — nothing AQE
+        # helps with.
+        with self._aqe_off():
             c = df.localCheckpoint(eager=False)
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", aqe)
         (self._results_acc if name == "results" else self._metrics_acc).append(c)
         return c
 
@@ -930,6 +969,57 @@ class CrawlEngine:
         return bool(self.custom_by_name) or any(
             r["same_domain"] for r in self.runs
         )
+
+    def _link_graph(self) -> DataFrame:
+        """The link graph one run() expands over, carrying
+        ``src_domain``/``dst_domain`` columns, so the criteria read
+        them off the joined link rows and the wave loop never crosses
+        the Arrow boundary for PSL domains. Called once per run():
+
+        - a table that has both columns (canonical ingest layout, or
+          derived by an earlier run of this engine) is used as is;
+        - no run reads domains: null literals, free;
+        - raw links: canonicalization and the domain UDF run once per
+          engine, into a LAZY local checkpoint — the first wave's job
+          materializes it, so run() start stays free of Python work.
+          A checkpoint, not ``cache()``: the cache manager shares
+          cached data between equal plans, so another engine over the
+          same input (or anyone unpersisting its blocks) could turn
+          this graph back into a per-wave recomputation;
+        - canonical links without the columns: derived on the scan,
+          so the UDF runs per wave on the host-pruned link rows only
+          (warned, once: the derived frame replaces ``self.links``).
+        """
+        links = self.links
+        if (self._needs_domains()
+                and not {"src_domain", "dst_domain"} <= set(links.columns)):
+            if self.links_canonical:
+                import warnings
+
+                warnings.warn(
+                    "links_canonical table has no src_domain/dst_domain "
+                    "columns but a run needs domains (same_domain "
+                    "criteria or a custom filter): the PSL domain UDF "
+                    "now runs on the pruned link rows every wave. Write "
+                    "the domains into the links table to take it out "
+                    "of the wave loop",
+                    stacklevel=3,
+                )
+            links = links.withColumns({
+                "src_domain": domain_udf(F.col("src_host")),
+                "dst_domain": domain_udf(url_host(F.col("dst_url"))),
+            })
+            self._links_checkpointed = False
+        if not (self.links_canonical or self._links_checkpointed):
+            with self._aqe_off():  # AQE would run the distinct's
+                # shuffle stage at planning time (see _aqe_off)
+                links = links.localCheckpoint(eager=False)
+            self._links_checkpointed = True
+        self.links = links
+        if "dst_domain" not in links.columns:
+            none = F.lit(None).cast("string")
+            links = links.withColumns({"src_domain": none, "dst_domain": none})
+        return links
 
     def _reconstruct(self) -> tuple[DataFrame, DataFrame]:
         """Eventlog mode: (frontier, seen) from the committed journal.
@@ -966,9 +1056,10 @@ class CrawlEngine:
     # threshold, so each branch scan gets an exact pushed In.
     FETCH_PRUNE_CHUNK = 200
 
-    def _pruned_links(self, parents: DataFrame) -> DataFrame:
-        """The links-graph side of the expand join, pruned to the
-        wave's scheduled hosts. Joining on (src_url, src_host) —
+    def _pruned_links(self, parents: DataFrame, links: DataFrame) -> DataFrame:
+        """The links-graph side (``links``, the run's _link_graph) of
+        the expand join, pruned to the wave's scheduled hosts. Joining
+        on (src_url, src_host) —
         src_url alone determines the match; the redundant src_host key
         enables partition pruning on a src_host-partitioned links
         table. With links_canonical, two pruning shapes by host count:
@@ -983,7 +1074,6 @@ class CrawlEngine:
           PartitionFilters (DPP), so pruning survives ANY host count
           instead of silently disappearing (tools/plan_audit.py
           asserts the DPP shape)."""
-        links = self.links
         if not self.links_canonical:
             return links
         hosts = [
@@ -1242,7 +1332,8 @@ class CrawlEngine:
         return self.spark.read.schema(self.images.schema).parquet(*files)
 
     def _step(
-        self, wave: int, frontier: DataFrame, runs_b: DataFrame
+        self, wave: int, frontier: DataFrame, runs_b: DataFrame,
+        links: DataFrame,
     ) -> DataFrame | None:
         # 1. SLICE — per-host politeness-bounded queue heads
         if self._frontier_lsm:
@@ -1373,23 +1464,10 @@ class CrawlEngine:
 
         # 4. EXPAND — max-depth gates the PARENT (MaxDepthCriteria)
         parents_src = fetched.filter(F.col("bytes").isNotNull())
-        if "_run_ord" in fetched.columns and self._run_ords is not None:
-            # trim mode (round 6): the per-run criteria are driver-side
-            # constants and the ordinal is already on every row, so the
-            # criteria columns attach as O(1) literal-array lookups —
-            # the per-wave runs broadcast join (a broadcast-build job
-            # each wave) disappears. Bounded by runid_trim_max_runs
-            # (<= 4096 literals per array), exactly like _rerun_id.
-            by_id = {r["run_id"]: r for r in self.runs}
-
-            def _crit(col: str) -> F.Column:
-                arr = F.array(*[F.lit(by_id[rid][col])
-                                for rid in self._run_ords])
-                return F.element_at(arr, F.col("_run_ord") + 1)
-
-            for c in ("criteria_name", "max_depth", "same_host",
-                      "same_domain", "robots_txt"):
-                parents_src = parents_src.withColumn(c, _crit(c))
+        if self._run_criteria is not None:
+            # trim mode: literal-array lookups on the carried ordinal,
+            # built once per run (_criteria_lookups)
+            parents_src = parents_src.withColumns(self._run_criteria)
         else:
             parents_src = parents_src.join(
                 runs_b.drop("seed_url", "seed_seq"), "run_id")
@@ -1404,14 +1482,6 @@ class CrawlEngine:
                 # frontier 'host' column is the partition key, which
                 # differs under a non-default partition_selector (U3)
                 url_host(F.col("url")).alias("src_host"),
-                # PSL domains need a pandas UDF (Arrow round-trip); skip
-                # it when no run's criteria and no custom filter can
-                # look at domains
-                (
-                    domain_udf(url_host(F.col("url")))
-                    if self._needs_domains()
-                    else F.lit(None).cast("string")
-                ).alias("src_domain"),
                 (F.col("depth") + 1).alias("depth"),
                 F.col("rank").alias("parent_rank"),
                 # ord passthrough (trim mode): candidates inherit the
@@ -1421,7 +1491,7 @@ class CrawlEngine:
                   if "_run_ord" in fetched.columns else []),
             )
         )
-        links = self._pruned_links(parents)
+        links = self._pruned_links(parents, links)
         # deliberate join strategy (round 6): the parent side is
         # bounded by the slice (n_delta rows, known exactly) — when it
         # is provably small, hint the broadcast instead of leaving the
@@ -1429,15 +1499,10 @@ class CrawlEngine:
         # AQE path (runtime broadcast + skew join) stands.
         if n_delta <= self.expand_broadcast_max:
             parents = F.broadcast(parents)
+        # src_domain/dst_domain come with the link rows (_link_graph)
         cand = (
             parents.join(links, ["src_url", "src_host"])
             .withColumn("dst_host", url_host(F.col("dst_url")))
-            .withColumn(
-                "dst_domain",
-                domain_udf(F.col("dst_host"))
-                if self._needs_domains()
-                else F.lit(None).cast("string"),
-            )
         )
         cand = apply_criteria(cand, self.robots, self.custom_by_name)
 

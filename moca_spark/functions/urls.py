@@ -12,7 +12,9 @@ as Spark-native column functions:
 - ``url_host`` / ``url_domain`` — host via built-in ``parse_url``
   (JVM-side, codegen) on the already-canonical URL; eTLD+1 domain via a
   pandas UDF over the PSL (functions/psl.py) since no built-in knows
-  the public-suffix list.
+  the public-suffix list. Each call crosses the Python/Arrow boundary,
+  so callers derive domains once per dataset (the crawl engine does it
+  once per link graph, never per wave) rather than per iteration.
 - ``with_url_columns``  — the standard projection used by every stage:
   url (canonical), url_hash (xxhash64 — deliberately 64-bit where the
   reference used 32-bit String.hashCode, url/Url.scala:44-45, which

@@ -285,26 +285,52 @@ class EventLogStore(CheckpointStore):
 
     def append_events(self, wave: int, events: DataFrame,
                       extra: dict | None = None) -> None:
+        """Write wave ``wave``'s events and publish its marker. The
+        events land in a staging dir first and are swapped in by
+        rename, so a committed wave's log (the one compaction rewrites)
+        is never overwritten in place: a failed write leaves it intact,
+        and a crash between the two renames leaves it as
+        ``events.old``, which read_log falls back to."""
         d = self._wave_dir(wave)
-        events.write.mode("overwrite").parquet(os.path.join(d, "events"))
+        final = os.path.join(d, "events")
+        old = os.path.join(d, "events.old")
+        staging = os.path.join(d, "events.staging")
+        events.write.mode("overwrite").parquet(staging)
+        if os.path.isdir(final):
+            shutil.rmtree(old, ignore_errors=True)
+            os.rename(final, old)
+        os.rename(staging, final)
         tmp = os.path.join(d, "_COMMIT.tmp")
         with open(tmp, "w") as f:
             json.dump({"wave": wave, **(extra or {})}, f)
         os.rename(tmp, os.path.join(d, "_COMMIT"))
+        shutil.rmtree(old, ignore_errors=True)
+
+    def _events_dir(self, wave: int) -> str | None:
+        """A committed wave's events dir: ``events``, else the
+        ``events.old`` a crash between append_events' renames left."""
+        for name in ("events", "events.old"):
+            p = os.path.join(self._wave_dir(wave), name)
+            if os.path.isdir(p):
+                return p
+        return None
 
     def read_log(self) -> DataFrame | None:
-        paths = [
-            os.path.join(self._wave_dir(w), "events")
-            for w in self.committed_waves()
-            if os.path.isdir(os.path.join(self._wave_dir(w), "events"))
-        ]
+        paths = [p for p in map(self._events_dir, self.committed_waves()) if p]
         return self.spark.read.parquet(*paths) if paths else None
 
     def compact(self, wave: int) -> None:
         """Fold the whole log into a single minimal event set (one add
         per pending url, one consume per seen url) written as wave
         ``wave``'s events; older wave dirs are dropped. The periodic
-        compaction of the merge-on-read layout."""
+        compaction of the merge-on-read layout.
+
+        Crash-safe at every step: the compacted set replaces the wave's
+        committed events by rename (append_events), and the older
+        waves' events are deleted only after that. A crash before the
+        deletes leaves them beside the compacted set, which already
+        subsumes them — re-reading them is harmless, because
+        reconstruction takes mins and is idempotent."""
         from pyspark.sql import functions as F
 
         log = self.read_log()
@@ -330,8 +356,9 @@ class EventLogStore(CheckpointStore):
         # results/metrics increments remain (they are the crawl output)
         for w in old:
             if w != wave:
-                shutil.rmtree(os.path.join(self._wave_dir(w), "events"),
-                              ignore_errors=True)
+                for name in ("events", "events.old"):
+                    shutil.rmtree(os.path.join(self._wave_dir(w), name),
+                                  ignore_errors=True)
 
 
 def _reconstruct_state(log: DataFrame):

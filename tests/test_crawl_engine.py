@@ -722,6 +722,81 @@ def test_eventlog_resume_and_compaction(spark, tmp_path):
     assert_match(resumed, want)
 
 
+def _journal_state(store):
+    """Sorted (frontier, seen) rows reconstructed from the committed log."""
+    from moca_spark.store.lakehouse import _reconstruct_state
+
+    frontier, seen = _reconstruct_state(store.read_log())
+    return (sorted(tuple(r) for r in frontier.collect()),
+            sorted(tuple(r) for r in seen.collect()))
+
+
+def test_compaction_failure_keeps_committed_log(spark, tmp_path, monkeypatch):
+    """A compaction that fails while writing its compacted log, or
+    crashes between the two renames that swap it in, must
+    leave the committed journal state unchanged (the compacted set
+    used to overwrite the committed wave's events in place, so a
+    failed write left the marker over an empty log). A later
+    compaction and a resume still reproduce the oracle."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from moca_spark.store import lakehouse
+    from moca_spark.store.lakehouse import EventLogStore
+
+    edges = zipf_graph(n_hosts=4, pages_per_host=5)
+    works = [W("w1", "http://host0.test/p0", max_depth=4)]
+    eng, urls = make_engine(spark, tmp_path / "el", works, edges, budget=1,
+                            durable="eventlog")
+    assert eng.run(max_waves=3).waves == 3
+    store = eng.store
+    before = _journal_state(store)
+    assert before[0] and before[1]
+
+    append = EventLogStore.append_events
+
+    def failing_append(self, wave, events, extra=None):
+        if extra and extra.get("compacted"):  # the compacted write fails
+            events = events.withColumn(
+                "kind", F.raise_error(F.lit("injected")).cast("string"))
+        return append(self, wave, events, extra)
+
+    monkeypatch.setattr(EventLogStore, "append_events", failing_append)
+    with pytest.raises(Exception, match="injected"):
+        store.compact(3)
+    monkeypatch.undo()
+    assert store.committed_waves() == [0, 1, 2, 3]
+    assert _journal_state(store) == before
+
+    rename = os.rename
+
+    def crash_on_swap(src, dst):
+        if str(src).endswith("events.staging"):
+            raise OSError("injected crash between the renames")
+        return rename(src, dst)
+
+    monkeypatch.setattr(lakehouse.os, "rename", crash_on_swap)
+    with pytest.raises(OSError, match="injected"):
+        store.compact(3)
+    monkeypatch.undo()
+    wave3 = tmp_path / "el" / "chk" / "wave=3"
+    assert not (wave3 / "events").exists()
+    assert (wave3 / "events.old").is_dir()
+    assert _journal_state(store) == before
+
+    store.compact(3)
+    assert _journal_state(store) == before
+    assert [w for w in store.committed_waves()
+            if store._events_dir(w)] == [3]
+    assert not (wave3 / "events.old").exists()
+
+    eng2, _ = make_engine(spark, tmp_path / "el", works, edges, budget=1,
+                          durable="eventlog")
+    want = oracle_crawl(works, edges, budget=1, corpus_urls=urls)
+    assert_match(eng2.run(resume=True), want)
+
+
 def test_everything_enabled_parity(spark, tmp_path):
     """The kitchen sink: Zipf graph + robots + partial corpus (fetch
     failures) + two runs with different criteria + sharded bloom +
@@ -789,6 +864,119 @@ def test_links_canonical_partitioned_pruning(spark, tmp_path):
     got = eng.run()
     want = oracle_crawl(works, edges, budget=2, corpus_urls=urls)
     assert_match(got, want)
+
+
+_DOMAIN_EDGES = [
+    ("http://a.shop.test/x", "http://a.shop.test/y"),
+    ("http://a.shop.test/x", "http://b.shop.test/z"),
+    ("http://a.shop.test/y", "http://other.test/q"),
+    ("http://b.shop.test/z", "http://c.shop.test/w"),
+    ("http://other.test/q", "http://a.shop.test/v"),
+]
+
+
+@pytest.mark.parametrize("with_domains", [False, True])
+def test_same_domain_canonical_links_parity(spark, tmp_path, monkeypatch,
+                                            with_domains):
+    """same_domain over a canonical, src_host-partitioned links table:
+    the engine uses the table's own src_domain/dst_domain columns when
+    it has them (never calling the domain UDF), and otherwise derives
+    them on the pruned link rows with a warning. Oracle parity either
+    way."""
+    import warnings
+
+    import pandas as pd
+
+    from moca_spark.crawl import engine as crawl_engine
+    from moca_spark.crawl.oracle import _host
+    from moca_spark.functions.psl import effective_domain
+
+    works = [W("wd", "http://a.shop.test/x", max_depth=4, same_domain=True),
+             W("wa", "http://other.test/q", max_depth=2)]
+    urls = oracle_corpus_urls(_DOMAIN_EDGES, works)
+    rows = pd.DataFrame(_DOMAIN_EDGES, columns=["src_url", "dst_url"])
+    rows["src_host"] = rows.src_url.map(_host)
+    if with_domains:
+        rows["src_domain"] = rows.src_host.map(effective_domain)
+        rows["dst_domain"] = rows.dst_url.map(
+            lambda u: effective_domain(_host(u)))
+
+        def no_udf(col):
+            raise AssertionError("domain UDF called despite domain columns")
+
+        monkeypatch.setattr(crawl_engine, "domain_udf", no_udf)
+    ldir = str(tmp_path / "links_part")
+    spark.createDataFrame(rows).write.partitionBy("src_host").parquet(ldir)
+    eng = CrawlEngine(
+        spark, spark.read.parquet(ldir), images_for_urls(spark, sorted(urls)),
+        budget=1, durable=False, n_salts=2, links_canonical=True,
+    )
+    eng.add_works(works)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = eng.run()
+    warned = [w for w in caught if "src_domain" in str(w.message)]
+    assert len(warned) == (0 if with_domains else 1)
+    want = oracle_crawl(works, _DOMAIN_EDGES, budget=1, corpus_urls=urls)
+    assert_match(got, want)
+    assert {r["url"] for r in want.crawl_order if r["run_id"] == "wd"} == {
+        "http://a.shop.test/x", "http://a.shop.test/y",
+        "http://b.shop.test/z", "http://c.shop.test/w"}
+
+
+def test_social_media_filter_drops_facebook_and_twitter(spark, tmp_path):
+    """The registered ``social-media`` custom filter reads dst_domain
+    off the raw-links graph: its work drops every facebook.com and
+    twitter.com link (any subdomain), a work without the filter keeps
+    them. The oracle has no custom filters, so the expected fetches are
+    spelled out."""
+    edges = [
+        ("http://blog.test/a", "http://www.facebook.com/p"),
+        ("http://blog.test/a", "http://twitter.com/u"),
+        ("http://blog.test/a", "http://m.facebook.com/q"),
+        ("http://blog.test/a", "http://blog.test/b"),
+        ("http://blog.test/b", "http://other.test/c"),
+        ("http://blog.test/b", "http://notfacebook.test/d"),
+    ]
+    social = {"http://www.facebook.com/p", "http://twitter.com/u",
+              "http://m.facebook.com/q"}
+    works = [
+        Work("ws", "http://blog.test/a",
+             CriteriaSpec(name="social", max_depth=3,
+                          custom_filters=("social-media",))),
+        Work("wp", "http://blog.test/a", CriteriaSpec(max_depth=3)),
+    ]
+    urls = {u for e in edges for u in e}
+    eng, _ = make_engine(spark, tmp_path, works, edges, budget=4,
+                         corpus_urls=urls)
+    got = eng.run()
+    fetched = {}
+    for r in got.results.collect():
+        fetched.setdefault(r.run_id, set()).add(r.url)
+    assert fetched["ws"] == urls - social
+    assert fetched["wp"] == urls
+
+
+def test_domain_udf_runs_once_per_engine(spark, tmp_path, monkeypatch):
+    """PSL domains are columns of the link graph, derived once per
+    engine: a 4-wave same_domain crawl references the domain UDF a
+    constant number of times (src + dst), not once or twice per wave."""
+    from moca_spark.crawl import engine as crawl_engine
+
+    calls = []
+    domain_udf = crawl_engine.domain_udf
+
+    def counting(col):
+        calls.append(col)
+        return domain_udf(col)
+
+    monkeypatch.setattr(crawl_engine, "domain_udf", counting)
+    edges = chain_graph(n=4)
+    works = [W("w1", "http://site0.test/0", max_depth=10, same_domain=True)]
+    got, want = run_both(spark, tmp_path, works, edges, budget=1)
+    assert_match(got, want)
+    assert got.waves == 4
+    assert len(calls) == 2
 
 
 def test_same_host_criteria_with_domain_selector(spark, tmp_path):

@@ -36,6 +36,25 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def exec_node_names(plan) -> list[str]:
+    """Names of the physical operators a query runs, descending through
+    AQE wrappers and query stages but not behind a checkpoint or cache
+    scan (those leaves read data built once, outside this query)."""
+    names, stack = [], [plan]
+    while stack:
+        p = stack.pop()
+        names.append(p.nodeName())
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(p.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(p.plan())
+        else:
+            children = p.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(master="local[8]", shuffle_partitions=8)
@@ -179,7 +198,7 @@ def main() -> int:
     parents_fix = spark.createDataFrame(
         [(f"http://h{i}.test/a", f"h{i}.test", 1) for i in range(5)],
         ["src_url", "src_host", "depth"]).filter(F.col("depth") < 3)
-    p = plan_of(parents_fix.join(eng_l._pruned_links(parents_fix),
+    p = plan_of(parents_fix.join(eng_l._pruned_links(parents_fix, eng_l.links),
                                  ["src_url", "src_host"]))
     check("links prune: DPP on partitioned scan past host threshold",
           "dynamicpruning" in p)
@@ -240,6 +259,48 @@ def main() -> int:
     n_sorts = p.count(" Sort [")
     check("seen base: exactly one Sort (candidates only — base pre-sorted "
           "at fold)", n_sorts == 1, f"found {n_sorts}")
+
+    # 9. PSL domains live on the link graph (engine._link_graph): a
+    #    same-domain wave's fused `fresh` plan (expand -> criteria ->
+    #    consolidate -> admit) reads them off the checkpointed link
+    #    rows and runs no Python. The checkpoint's own lineage (where
+    #    the domain UDF runs, once per engine) is not part of the wave.
+    from moca_spark.criteria.dsl import CriteriaSpec, Work
+    from moca_spark.functions.urls import domain_udf
+    from moca_spark.sources.synth import links_df
+
+    dom_edges = [("http://a.shop.test/x", "http://a.shop.test/y"),
+                 ("http://a.shop.test/x", "http://b.shop.test/z"),
+                 ("http://a.shop.test/y", "http://other.test/q"),
+                 ("http://b.shop.test/z", "http://a.shop.test/w")]
+    dom_urls = sorted({u for e in dom_edges for u in e})
+    eng_d = CrawlEngine(spark, links_df(spark, dom_edges),
+                        images_for_urls(spark, dom_urls), budget=1,
+                        durable=False)
+    eng_d.add_works([Work("wd", "http://a.shop.test/x",
+                          CriteriaSpec(max_depth=3, same_domain=True))])
+    fresh_plans = []
+    materialize = eng_d._materialize
+
+    def record(df, sort=False, aqe_off=True):
+        out = materialize(df, sort=sort, aqe_off=aqe_off)
+        if not sort:  # the wave's fresh materialization (exact path)
+            fresh_plans.append(exec_node_names(
+                df._jdf.queryExecution().executedPlan()))
+        return out
+
+    eng_d._materialize = record
+    waves = eng_d.run(max_waves=3).waves
+    check("domains: every same-domain wave recorded its fresh plan",
+          waves >= 2 and len(fresh_plans) == waves,
+          f"{waves} waves, {len(fresh_plans)} fresh plans")
+    udf_plan = links_df(spark, dom_edges).select(
+        domain_udf(F.col("src_url")))._jdf.queryExecution().executedPlan()
+    check("domains: the plan walk finds a domain UDF where one runs",
+          "ArrowEvalPython" in exec_node_names(udf_plan))
+    check("domains: no ArrowEvalPython in a same-domain wave's fresh plan",
+          not any("ArrowEvalPython" in names for names in fresh_plans),
+          str([names.count("ArrowEvalPython") for names in fresh_plans]))
 
     spark.stop()
     print(f"\n{'ALL PASS' if not FAILED else f'{len(FAILED)} FAILED: {FAILED}'}")
