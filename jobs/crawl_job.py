@@ -6,10 +6,13 @@
         --checkpoint <dir> [--budget N] [--max-waves N] [--resume]
 
 Reads the seed file (criteria DSL included), crawls the link graph
-against the image+caption corpus, commits every wave to the checkpoint
-dir (exactly-once resume), and prints a JSON summary line. This is the
-deployment shape the north rule prescribes; ``--demo`` synthesizes a
-small world first so the job is runnable without pre-built tables.
+against the image+caption corpus, appends every wave to the event
+journal in the checkpoint dir (store/lakehouse.py EventLogStore:
+O(delta) writes per wave, exactly-once ``--resume``; a dir written in
+the removed full-state snapshot layout is refused), and prints a JSON
+summary line. This is the deployment shape the north rule prescribes;
+``--demo`` synthesizes a small world first so the job is runnable
+without pre-built tables.
 """
 
 from __future__ import annotations
@@ -30,17 +33,12 @@ def main() -> None:
     ap.add_argument("--budget", type=int, default=8)
     ap.add_argument("--max-waves", type=int, default=10_000)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--eventlog", action="store_true",
-                    help="append-only journal layout (O(delta) writes)")
-    ap.add_argument("--bloom", choices=["off", "broadcast", "sharded", "cuckoo"],
+    ap.add_argument("--bloom", choices=["off", "sharded", "cuckoo"],
                     default="off",
-                    help="approximate seen-set prefilter: broadcast bloom, "
-                         "sharded bitmap table (10^10 layout), or the "
-                         "deletable cuckoo fallback")
+                    help="approximate seen-set prefilter: sharded bitmap "
+                         "table (10^10 layout) or the deletable cuckoo "
+                         "fallback")
     ap.add_argument("--bloom-capacity", type=int, default=1_000_000)
-    ap.add_argument("--bucket-state", type=int, default=0,
-                    help="write snapshot state as N-bucket tables "
-                         "(hash-partitioned+sorted re-reads/resume)")
     ap.add_argument("--fold-every", type=int, default=8,
                     help="seen-LSM fold cadence in waves")
     ap.add_argument("--links-canonical", action="store_true",
@@ -109,14 +107,12 @@ def main() -> None:
         works = seeds_to_works(seeds, named)
 
     robots = spark.read.parquet(args.robots) if args.robots else None
-    use_bloom = {"off": False, "broadcast": True,
-                 "sharded": "sharded", "cuckoo": "cuckoo"}[args.bloom]
     eng = CrawlEngine(
         spark, links, images, robots,
         budget=args.budget, checkpoint_dir=args.checkpoint,
-        durable="eventlog" if args.eventlog else True,
-        use_bloom=use_bloom, bloom_capacity=args.bloom_capacity,
-        bucket_state=args.bucket_state, fold_every=args.fold_every,
+        durable="eventlog",
+        use_bloom=False if args.bloom == "off" else args.bloom,
+        bloom_capacity=args.bloom_capacity, fold_every=args.fold_every,
         links_canonical=args.links_canonical,
         corpus_buckets=args.corpus_buckets,
     )

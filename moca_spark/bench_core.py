@@ -4,9 +4,10 @@ The north-star metric (BASELINE.json) is *frontier URLs
 scheduled+deduped per second* on a synthetic Zipf-skewed frontier. The
 kernel below is exactly the per-wave hot path of the crawl engine:
 
-  schedule: salted two-phase top-K per host     (operators/wave.py)
+  schedule: dedup + salted two-phase top-K per host + split
+            (operators/wave.py slice_split)
   dedup:    candidate consolidation + anti-join vs seen (J1/J2)
-  merge:    min-(depth,seq) frontier merge      (engine step 6)
+  merge:    the lazy rest ∪ fresh frontier union (engine step 6)
 
 Inputs are generated lazily with ``spark.range`` (sources/synth.py
 scale_frontier) — zero driver memory, any scale. Work is forced with a
@@ -21,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from moca_spark.functions.urls import url_host
-from moca_spark.operators.wave import top_k_per_host
+from moca_spark.operators.wave import slice_split
 from moca_spark.sources.synth import scale_frontier
 
 
@@ -67,7 +68,6 @@ def frontier_schedule_dedup(
     materialize_dir: str | None = None,
     fold_every: int = 8,
     dedup_aqe: bool = False,
-    mode: str = "lsm",
 ) -> dict:
     """One full scheduling+dedup wave at scale; returns throughput.
 
@@ -76,25 +76,19 @@ def frontier_schedule_dedup(
     and pre-sorted by those keys (as _fold_seen leaves it) so the
     admission join runs exchange-free/sort-free on the base side, the
     periodic seen-LSM fold timed separately and amortized over
-    ``fold_every`` waves, and the frontier handled per ``mode``:
-
-    - ``mode="lsm"`` (engine default, frontier_lsm): the frontier
-      arrives as last wave's deduped rest PLUS an unmerged fresh layer
-      (n_frontier//8 rows — steady-state admit ratio); slice_split
-      dedupes+slices+splits it in ONE exchange, and the "merge" is a
-      lazy union of rest and fresh (forced, but exchange-free).
-    - ``mode="merge"`` (snapshot-mode shape, round-2 hot path): merged
-      KEYS-partitioned+sorted frontier state, top-K slice, slice
-      anti-join, union+groupBy min-merge — the second per-wave
-      O(frontier) exchange the LSM mode deletes.
+    ``fold_every`` waves, and the LSM frontier: it arrives as last
+    wave's deduped rest PLUS an unmerged fresh layer (n_frontier//8
+    rows — steady-state admit ratio); slice_split dedupes+slices+splits
+    it in ONE exchange, and the "merge" is a lazy union of rest and
+    fresh (forced, but exchange-free).
 
     With ``materialize_dir`` the synthetic inputs are written to parquet
     first (untimed) and state tables are prepared from table scans —
     the cluster-faithful shape. State prep (the fold result carried
     from previous waves) is untimed; its per-wave amortized cost is
     measured by timing one real fold and dividing by fold_every."""
-    # engine hot-loop schema (round 5, engine._trim_frontier/
-    # _trim_runids): in lsm mode rows carry the 64-bit politeness key
+    # engine hot-loop schema (round 5, engine._trim_state/
+    # _trim_runids): rows carry the 64-bit politeness key
     # instead of the host string AND the dense run ordinal instead of
     # the run_id string (the _key is still computed from the STRING —
     # the engine computes it at creation sites where the string
@@ -102,8 +96,6 @@ def frontier_schedule_dedup(
     _rdds_at_entry = _persistent_rdd_ids(spark)
 
     def _trim(df):
-        if mode != "lsm":
-            return df
         if "host" in df.columns:
             df = df.withColumn("host_key", F.xxhash64("host")).drop("host")
         return df.withColumn("run_id", F.lit(0))
@@ -123,19 +115,17 @@ def frontier_schedule_dedup(
         .select("url", "host", "depth",
                 (F.col("seq") % 100 + 1).alias("parent_rank"))
         .withColumn("run_id", F.lit("bench"))
-    )
-    if mode == "lsm":
-        # candidates enter the timed region ALREADY in ord space (the
-        # engine's _run_ord is a real column carried from the slice) —
-        # trimming after the parquet round-trip instead would leave a
-        # foldable literal whose constant-folded consolidation
-        # partitioning (_key, 0, url) can never satisfy the admission
-        # join's clustering, forcing a second O(candidates) exchange
-        # the engine does not pay (round 6)
-        candidates = candidates.withColumn("run_id", F.lit(0))
+    ).withColumn("run_id", F.lit(0))
+    # candidates enter the timed region ALREADY in ord space (the
+    # engine's _run_ord is a real column carried from the slice) —
+    # trimming after the parquet round-trip instead would leave a
+    # foldable literal whose constant-folded consolidation partitioning
+    # (_key, 0, url) can never satisfy the admission join's clustering,
+    # forcing a second O(candidates) exchange the engine does not pay
+    # (round 6)
     # steady-state fresh layer riding unmerged on the LSM frontier
     # (~admit ratio of a mid-crawl wave); not counted in `processed`
-    # (conservative: the lsm kernel does MORE rows per reported URL)
+    # (conservative: the kernel does MORE rows per reported URL)
     fresh_prev = _trim(_with_key(
         scale_frontier(spark, max(n_frontier // 8, 1), n_hosts, partitions,
                        seed=3)
@@ -153,8 +143,7 @@ def frontier_schedule_dedup(
         import os as _os
 
         params = {"n_frontier": n_frontier, "n_candidates": n_candidates,
-                  "n_hosts": n_hosts, "partitions": partitions,
-                  "mode": mode}
+                  "n_hosts": n_hosts, "partitions": partitions}
         marker = f"{materialize_dir}/_INPUTS_OK"
         have = False
         try:
@@ -182,9 +171,9 @@ def frontier_schedule_dedup(
         fresh_prev = spark.read.parquet(f"{materialize_dir}/fresh_prev")
 
     # ---- state prep (untimed): the shape previous waves left behind —
-    # merge mode: KEYS-partitioned, KEYS-sorted, checkpointed with AQE
-    # off so partitioning/ordering survive into this wave's plans;
-    # lsm mode: a deduped claim-free checkpoint (last slice_split's
+    # the seen base KEYS-partitioned, KEYS-sorted, checkpointed with
+    # AQE off so partitioning/ordering survive into this wave's plans;
+    # the frontier a deduped claim-free checkpoint (last slice_split's
     # ranked rest) plus the unmerged fresh layer
     aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -194,48 +183,38 @@ def frontier_schedule_dedup(
         .sortWithinPartitions(*STATE_KEYS)
         .localCheckpoint(eager=True)
     )
-    hcol = "host_key" if mode == "lsm" else "host"
     fr_dedup = (
         frontier.groupBy(*STATE_KEYS)
         .agg(F.min(F.struct("depth", "seq")).alias("m"),
-             F.first(hcol).alias(hcol))
-        .select("_key", "run_id", "url", hcol,
+             F.first("host_key").alias("host_key"))
+        .select("_key", "run_id", "url", "host_key",
                 F.col("m.depth").alias("depth"), F.col("m.seq").alias("seq"))
     )
-    if mode == "lsm":
-        fr_state = fr_dedup.localCheckpoint(eager=True).unionByName(
-            fresh_prev.select(
-                "_key", "run_id", "url", "host_key", "depth", "seq")
-            .localCheckpoint(eager=True)
-        )
-    else:
-        fr_state = fr_dedup.sortWithinPartitions(*STATE_KEYS) \
-            .localCheckpoint(eager=True)
+    fr_state = fr_dedup.localCheckpoint(eager=True).unionByName(
+        fresh_prev.select(
+            "_key", "run_id", "url", "host_key", "depth", "seq")
+        .localCheckpoint(eager=True)
+    )
     spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
     t0 = time.time()
     # SCHEDULE: politeness-bounded per-host priority-queue heads (AQE
     # on); cached like the engine does — the slice is consumed by the
-    # anti-join/split, the seen delta and (in the engine) the fetch join
-    if mode == "lsm":
-        from moca_spark.operators.wave import slice_split
-
-        # eager=False mirrors the engine (round 6): the split-point
-        # checkpoint materializes inside the first full-scan action on
-        # ``sliced`` (the forced schedule below / the engine's
-        # seen-delta count), not as a separate job
-        sliced, rest = slice_split(fr_state, budget, n_salts=16, eager=False)
-        # engine._rehost/_rerun_id: the trimmed hot loop re-derives the
-        # host + run_id strings on the budget-bounded slice (fetch and
-        # the journal want them) — timed, part of the wave's real work
-        sliced = (
-            sliced.withColumn("host", url_host(F.col("url")))
-            .withColumn("run_str", F.element_at(
-                F.array(F.lit("bench")), F.col("run_id") + 1))
-            .cache()
-        )
-    else:
-        sliced = top_k_per_host(fr_state, budget, n_salts=16).cache()
+    # split, the seen delta and (in the engine) the fetch join.
+    # eager=False mirrors the engine (round 6): the split-point
+    # checkpoint materializes inside the first full-scan action on
+    # ``sliced`` (the forced schedule below / the engine's seen-delta
+    # count), not as a separate job
+    sliced, rest = slice_split(fr_state, budget, n_salts=16, eager=False)
+    # engine._rehost/_rerun_id: the trimmed hot loop re-derives the
+    # host + run_id strings on the budget-bounded slice (fetch and the
+    # journal want them) — timed, part of the wave's real work
+    sliced = (
+        sliced.withColumn("host", url_host(F.col("url")))
+        .withColumn("run_str", F.element_at(
+            F.array(F.lit("bench")), F.col("run_id") + 1))
+        .cache()
+    )
     _force(sliced)
     t_sched = time.time() - t0
 
@@ -254,9 +233,8 @@ def frontier_schedule_dedup(
         # join's clustering and its sort doubles as the join sort: the
         # candidates cross ONE exchange between consolidation and
         # admission instead of two.
-        cand_src = candidates  # lsm: already ord-space (see gen above)
-        cand2 = (
-            cand_src.groupBy("_key", "run_id", "url")
+        cand2 = (  # candidates are already ord-space (see gen above)
+            candidates.groupBy("_key", "run_id", "url")
             .agg(F.min(F.struct("depth", "parent_rank")).alias("m"),
                  F.first("host").alias("host"))
             .select("_key", "run_id", "url", "host",
@@ -268,31 +246,15 @@ def frontier_schedule_dedup(
             .filter(F.col("best_depth").isNull() |
                     (F.col("depth") < F.col("best_depth")))
             .select("_key", "run_id", "url",
-                    # engine fresh_cols: lsm admits carry the hash only
-                    (F.xxhash64("host").alias("host_key")
-                     if mode == "lsm" else F.col("host")),
+                    # engine fresh_cols: admits carry the hash only
+                    F.xxhash64("host").alias("host_key"),
                     "depth",
                     (F.lit(1 << 32) + F.col("parent_rank")).alias("seq"))
         )
-        # MERGE — engine code in both modes (shared so the kernel
-        # can't drift from the engine hot path): lsm forces the lazy
-        # rest∪fresh (exchange-free — the engine consumes it inside
-        # next wave's slice exchange, so even this force over-charges
-        # lsm by one read); merge runs the round-2 union+groupBy over
-        # the anti-joined rest AND the engine's step-7 sorted AQE-off
-        # localCheckpoint — the round-2 kernel omitted that
-        # materialize, under-measuring the merged path's true per-wave
-        # cost by one O(frontier) sort + state copy
-        from moca_spark.crawl.engine import merge_frontier
-
-        if mode == "lsm":
-            _force(rest.unionByName(fresh))
-        else:
-            rest = fr_state.join(sliced.select(*STATE_KEYS),
-                                 STATE_KEYS, "left_anti")
-            merge_frontier(rest, fresh) \
-                .sortWithinPartitions(*STATE_KEYS) \
-                .localCheckpoint(eager=True)
+        # MERGE — force the lazy rest∪fresh (exchange-free — the
+        # engine consumes it inside next wave's slice exchange, so even
+        # this force over-charges the kernel by one read)
+        _force(rest.unionByName(fresh))
         t_dedup = time.time() - t1
 
         # FOLD (timed once, amortized /fold_every): the LSM compaction
@@ -319,7 +281,7 @@ def frontier_schedule_dedup(
     total = t_sched + t_dedup + t_fold / fold_every
     processed = n_frontier + n_candidates
     return {
-        "mode": mode,
+        "mode": "lsm",  # kept: bench.py's kernel record keys are stable
         "n_frontier": n_frontier,
         "n_candidates": n_candidates,
         "n_hosts": n_hosts,
@@ -416,7 +378,7 @@ def engine_scale_run(spark: SparkSession, n_pages: int = 2_000_000,
                      n_hosts: int = 20_000, budget: int = 50,
                      waves: int = 3, materialize_dir: str | None = None,
                      durable="memory", checkpoint_dir: str | None = None,
-                     frontier_lsm: bool | None = None) -> dict:
+                     ) -> dict:
     """Run the REAL engine for a few waves on a large synthetic web;
     report per-wave wall clock + frontier throughput."""
     from moca_spark.criteria.dsl import CriteriaSpec, Work
@@ -434,8 +396,7 @@ def engine_scale_run(spark: SparkSession, n_pages: int = 2_000_000,
                       durable=False if durable == "memory" else durable,
                       checkpoint_dir=checkpoint_dir,
                       n_salts=16, use_bloom="sharded",
-                      bloom_capacity=n_pages, collect_metrics=False,
-                      frontier_lsm=frontier_lsm)
+                      bloom_capacity=n_pages, collect_metrics=False)
     eng.add_works([
         Work(f"w{i}", u, CriteriaSpec(max_depth=10**6))
         for i, u in enumerate(seed_urls)

@@ -20,16 +20,17 @@ for one politeness window") does:
                (depth, parent_rank); optional bloom pre-filter, then
                exact anti-join-style classification vs seen — admit
                unseen or strictly-smaller depth (re-crawl, T8);
-  6. MERGE    frontier = (rest of frontier) ∪ fresh, min (depth, seq)
-               per (run, url) — J2 frontier dedup + depth replacement;
-  7. COMMIT   checkpoint frontier+seen, append results+metrics
-               (store/lakehouse.py) — the Akka journal/snapshot analog.
-               Three layouts: memory (localCheckpoint, tests/bench),
-               full snapshots (durable=True), or the append-only event
-               journal (durable="eventlog"): O(delta) durable writes
-               per wave while the live state chains in memory via
-               localCheckpoint; the journal is re-aggregated only on
-               resume/compaction — the layout for the 10^10 target
+  6. MERGE    frontier = (rest of frontier) ∪ fresh, kept unmerged: the
+               next wave's slice exchange keeps min (depth, seq) per
+               (run, url) — J2 frontier dedup + depth replacement;
+  7. COMMIT   append results+metrics and the wave's events
+               (store/lakehouse.py) — the Akka journal analog. Two
+               layouts: memory (durable=False: localCheckpoint, no
+               resume — tests/bench) or the append-only event journal
+               (durable="eventlog", the default): O(delta) durable
+               writes per wave while the live state chains in memory
+               via localCheckpoint; the journal is re-aggregated only
+               on resume/compaction, and a compaction is the snapshot
                (EventLogStore docstring).
 
 Scale notes (the 100 TB story):
@@ -47,18 +48,18 @@ Scale notes (the 100 TB story):
   exchange and ZERO sort on the base side (tools/plan_audit.py asserts
   this on the physical plan). Folds amortize the O(|seen|) rewrite
   over fold_every waves, and only the deltas shuffle.
-- Per-wave frontier cost: one shuffle for the salted slice and one for
-  the merge groupBy — both O(|frontier|), and the frontier is orders
-  of magnitude smaller than seen at steady state.
+- Per-wave frontier cost: one O(|frontier|) shuffle, the salted slice
+  exchange that also dedups (operators/wave.py slice_split); the
+  frontier is orders of magnitude smaller than seen at steady state.
 - The runs/criteria table and robots rules are broadcast.
-- Lineage is cut per wave (localCheckpoint / snapshot re-read), so
-  plans stay one scan deep regardless of wave count.
+- Lineage is cut per wave (localCheckpoint), so plans stay one scan
+  deep regardless of wave count.
 - Python appears only in Arrow UDFs, and none of them in the wave
   loop: canonicalize and the PSL domain run once per engine over the
   link graph, whose src_domain/dst_domain columns the criteria read
-  off the joined link rows (_link_graph). The exceptions are the
-  optional monolith bloom pre-filter and a canonical links table
-  without domain columns (warned). Everything else is codegen'd JVM.
+  off the joined link rows (_link_graph). The exception is a
+  canonical links table without domain columns (warned). Everything
+  else is codegen'd JVM.
 """
 
 from __future__ import annotations
@@ -71,12 +72,9 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 from moca_spark.criteria.dsl import Work
 from moca_spark.criteria.stages import apply_criteria
-from moca_spark.filters.bloom import BloomFilter, build_bloom_from_df
 from moca_spark.functions.urls import (
     canonicalize_str,
     canonicalize_udf,
@@ -84,8 +82,8 @@ from moca_spark.functions.urls import (
     url_host,
 )
 from moca_spark.operators.fetch import fetch_with_token_bucket
-from moca_spark.operators.wave import slice_split, top_k_per_host
-from moca_spark.store.lakehouse import CheckpointStore
+from moca_spark.operators.wave import slice_split
+from moca_spark.store.lakehouse import EventLogStore, _reconstruct_state
 
 SEQ_WAVE_STRIDE = 1 << 32
 POLITENESS_INTERVAL_S = 5  # reference default, role/Task.scala:12
@@ -97,32 +95,10 @@ POLITENESS_INTERVAL_S = 5  # reference default, role/Task.scala:12
 STATE_KEYS = ["_key", "run_id", "url"]
 
 
-def merge_frontier(rest: DataFrame, fresh: DataFrame) -> DataFrame:
-    """J2/J4 frontier min-merge — keep min (depth, seq) per (run, url)
-    (TaskPublisher.scala's queue dedup semantics, re-expressed as
-    state merge). One exchange of O(rest + fresh) by STATE_KEYS.
-
-    Why union+groupBy and not an outer join against the partitioned
-    ``rest``: a full-outer sort-merge join WOULD shuffle only the
-    small ``fresh`` side (rest is KEYS-partitioned+sorted from the
-    previous checkpoint), but SortMergeJoin(FullOuter) reports
-    UnknownPartitioning — null-extended key attributes invalidate the
-    per-attribute hash claim — so the NEXT wave's slice anti-join
-    would re-exchange the whole frontier instead: the O(frontier)
-    exchange moves one stage later, a wash, plus an extra sort.
-    Splitting into left-join + anti-join hits the same wall at the
-    Union (UnionExec also reports UnknownPartitioning). The
-    union+groupBy keeps the Hash(STATE_KEYS) claim that makes the
-    following wave's anti-join and this merge's own rest side
-    exchange-free. The real per-wave shuffle reduction is deferring
-    the merge into the slice exchange entirely (frontier_lsm mode)."""
-    return fold_frontier(rest.unionByName(fresh))
-
-
 def fold_frontier(frontier: DataFrame) -> DataFrame:
     """Min-merge a frontier that may carry duplicate (run, url) rows
     down to one min-(depth, seq) row each — the compaction step of the
-    LSM frontier (run end, journal compaction, snapshot commits)."""
+    LSM frontier at run end."""
     return (
         frontier
         .groupBy(*STATE_KEYS)
@@ -182,9 +158,8 @@ class CrawlEngine:
         budget: int = 8,
         checkpoint_dir: str | None = None,
         n_salts: int = 16,
-        keep_snapshots: int = 0,
-        durable: bool = True,
-        use_bloom: bool = False,
+        durable: bool | str = "eventlog",
+        use_bloom: bool | str = False,
         bloom_capacity: int = 1_000_000,
         use_token_bucket: bool = False,
         partition_selector=None,
@@ -193,10 +168,8 @@ class CrawlEngine:
         compact_every: int = 0,
         links_canonical: bool = False,
         fold_every: int = 8,
-        bucket_state: int = 0,
         fetch_prune: int = 10_000,
         corpus_buckets: int = 0,
-        frontier_lsm: bool | None = None,
         filter_delta_max_keys: int = 10_000_000,
         runid_trim_max_runs: int = 4096,
         expand_broadcast_max: int = 200_000,
@@ -207,14 +180,19 @@ class CrawlEngine:
         self.robots = robots
         self.budget = budget
         self.n_salts = n_salts
-        self.keep_snapshots = keep_snapshots  # 0 = keep all wave states
-        # durable: True (full state snapshot per wave) | False
-        # (localCheckpoint, no resume — tests/bench) | "eventlog"
-        # (append-only delta journal + reconstruction — the layout that
-        # avoids O(|frontier|) write amplification at 10^10 scale;
-        # store/lakehouse.py EventLogStore)
+        # durable: "eventlog" (append-only delta journal +
+        # reconstruction, O(delta) writes per wave; store/lakehouse.py
+        # EventLogStore) | False (localCheckpoint, no store, no resume
+        # — tests/bench)
+        if durable not in (False, "eventlog"):
+            raise ValueError(
+                f"durable={durable!r}: use 'eventlog' or False (the "
+                "full-state snapshot layout was removed)")
+        if use_bloom not in (False, "sharded", "cuckoo"):
+            raise ValueError(
+                f"use_bloom={use_bloom!r}: use False, 'sharded' or "
+                "'cuckoo' (the broadcast monolith bloom was removed)")
         self.durable = durable
-        self.use_bloom = use_bloom
         self.bloom_capacity = bloom_capacity
         self.use_token_bucket = use_token_bucket
         # fetch_prune=N: push the wave's slice image-ids (bounded by
@@ -237,7 +215,7 @@ class CrawlEngine:
         self.corpus_buckets = corpus_buckets
         self._corpus_bucket_files: dict[int, list[str]] | None = None
         self._warned_unbucketed = False
-        # use_bloom: False | True (broadcast monolith) | "sharded"
+        # use_bloom: False | "sharded"
         # (per-hash-range bitmap table — the 10^10 layout where one
         # broadcast bloom would be ~18 GB; filters/sharded_bloom.py) |
         # "cuckoo" (deletable variant, same sharded-table layout —
@@ -246,9 +224,7 @@ class CrawlEngine:
         # re-crawls; inserts run per-shard on executors, a saturated
         # shard degrades itself to the exact path while healthy shards
         # keep prefiltering)
-        self.bloom_mode = (
-            use_bloom if use_bloom in ("sharded", "cuckoo") else bool(use_bloom)
-        )
+        self.bloom_mode = use_bloom or False
         self.n_bloom_shards = 64
         self._bloom_shards = None  # DataFrame(shard, bits) when sharded
         # input_hint per-row invariant enforced DURING the crawl:
@@ -260,34 +236,21 @@ class CrawlEngine:
         # table is kept as a big folded BASE plus a stack of per-wave
         # consume DELTAS; deltas fold into the base every `fold_every`
         # waves. Per-wave work on the seen side is then O(delta) — the
-        # base is never unioned/re-shuffled per wave (snapshot mode
-        # still folds every wave: it must write full state anyway).
+        # base is never unioned/re-shuffled per wave.
         self.fold_every = max(1, fold_every)
         self._seen_base: DataFrame | None = None
         self._seen_deltas: list[DataFrame] = []
-        # LSM frontier (default outside snapshot mode): the per-wave
-        # frontier is last wave's ``rest`` unioned with its admitted
-        # ``fresh`` — NEVER min-merged per wave. Dedup happens inside
-        # the slice's own (host, salt) exchange (operators/wave.py
-        # slice_split), and rest comes back as a filter over the same
-        # exchanged data, so the former per-wave O(frontier) merge
-        # exchange + hash agg + slice anti-join + sorted claim-
-        # preserving checkpoint all disappear: frontier rows cross the
-        # wire ONCE per wave, not twice. Duplicates are at most one
+        # LSM frontier: the per-wave frontier is last wave's ``rest``
+        # unioned with its admitted ``fresh`` — NEVER min-merged per
+        # wave. Dedup happens inside the slice's own (host, salt)
+        # exchange (operators/wave.py slice_split), and rest comes back
+        # as a filter over the same exchanged data, so frontier rows
+        # cross the wire ONCE per wave. Duplicates are at most one
         # fresh layer deep (rest is dedup output, fresh is unique per
         # (run, url)); a full min-merge fold runs only at run end,
-        # journal compaction, and resume reconstruction. Snapshot mode
-        # (durable=True) keeps the merged shape — it must write folded
-        # full state every wave anyway.
-        if frontier_lsm and durable is True:
-            raise ValueError(
-                "frontier_lsm requires durable=False or 'eventlog' "
-                "(snapshot mode writes folded state every wave)")
-        self._frontier_lsm = (
-            durable is not True if frontier_lsm is None else bool(frontier_lsm)
-        )
+        # journal compaction, and resume reconstruction.
         # run_id dictionary trim (round 5, after the host-string trim):
-        # run_id is tiny-cardinality (one per Work), so the lsm hot
+        # run_id is tiny-cardinality (one per Work), so the hot
         # loop carries a dense int ordinal assigned in SORTED run_id
         # order instead of the string. (run_ord, url) <-> (run_id, url)
         # is a bijection within one run() execution, so exact-identity
@@ -296,9 +259,9 @@ class CrawlEngine:
         # ordering contract's (depth, seq, _key, run_id, url) — no
         # oracle change needed. Strings are re-attached on the
         # budget-bounded slice and at every boundary (journal,
-        # snapshots, CrawlResult), exactly like the host string.
-        # Same-JVM interleaved A/B (tools/runid_ab.py, 8M rows):
-        # trim/carry 1.12 at local[8], 1.25 at local[32]. Above
+        # CrawlResult), exactly like the host string. Same-JVM
+        # interleaved A/B (tools/runid_ab.py of commit 4424178, 8M
+        # rows): trim/carry 1.12 at local[8], 1.25 at local[32]. Above
         # ``runid_trim_max_runs`` the reverse-map array literal would
         # bloat every plan — the trim disables itself (strings carried,
         # still correct).
@@ -336,9 +299,6 @@ class CrawlEngine:
         # The frontier 'host' column IS the partition key; criteria
         # filters keep using the real URL host/domain.
         self.partition_selector = partition_selector or url_host
-        self._bloom: BloomFilter | None = (
-            BloomFilter(bloom_capacity) if self.bloom_mode is True else None
-        )
         # cuckoo mode: DataFrame(shard, bits, ok) like the sharded bloom
         self._cuckoo_shards: DataFrame | None = None
         # LSM maintenance for the sharded/cuckoo filters: the BASE
@@ -360,25 +320,15 @@ class CrawlEngine:
         # broadcast can never exceed ~threshold x 8 bytes.
         self.filter_delta_max_keys = filter_delta_max_keys
         self._filter_delta_keys = 0
-        self._bloom_bc = None  # previous wave's monolith-bloom broadcast
         self._results_acc: list[DataFrame] = []
         self._metrics_acc: list[DataFrame] = []
-        self.checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
-            prefix="moca-chk-"
+        # memory mode keeps its increments in _results_acc/_metrics_acc
+        # and has no store (and no temp dir) at all
+        self.store: EventLogStore | None = (
+            EventLogStore(spark, checkpoint_dir
+                          or tempfile.mkdtemp(prefix="moca-chk-"))
+            if durable else None
         )
-        # bucket_state=N: snapshot-mode state writes become N-bucket
-        # tables, so per-wave disk re-reads come back hash-partitioned
-        # + sorted by STATE_KEYS and the state-side joins stay
-        # exchange-free even in durable=True mode (and resume starts
-        # co-partitioned). See CheckpointStore docstring.
-        if durable == "eventlog":
-            from moca_spark.store.lakehouse import EventLogStore
-
-            self.store: CheckpointStore = EventLogStore(
-                spark, self.checkpoint_dir, bucket_state=bucket_state)
-        else:
-            self.store = CheckpointStore(
-                spark, self.checkpoint_dir, bucket_state=bucket_state)
         # Canonicalize the graph once: both endpoints normalized, invalid
         # dropped (R9 scheme whitelist happens inside canonicalize).
         # The graph is re-joined every wave. Two input shapes:
@@ -453,27 +403,41 @@ class CrawlEngine:
             added += 1
         return added
 
-    def _trim_frontier(self, frontier: DataFrame) -> DataFrame:
-        """LSM hot-loop schema (round 5): demote the host STRING out of
+    def _trim_state(self, frontier: DataFrame,
+                    seen: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """Boundary-loaded (frontier, seen) -> the hot-loop schema:
+        host string -> ``host_key`` on the frontier (below) and run_id
+        string -> dense ordinal on both (_trim_runids).
+
+        LSM hot-loop schema (round 5): demote the host STRING out of
         the per-wave frontier payload, carrying the 64-bit politeness
         key ``host_key = xxhash64(host)`` instead. The string rode the
         (host_key, salt) exchange, both rank-window sorts, the ranked
         checkpoint and the rest∪fresh union purely as payload — ~20% of
         the UnsafeRow bytes — since the partition key is already its
-        hash (operators/wave.py HOST_KEY_MODE) and ``host`` is a
-        deterministic function of url (``partition_selector``), so it
-        is re-derived on the budget-bounded slice (``_rehost``) and at
+        hash (operators/wave.py) and ``host`` is a deterministic
+        function of url (``partition_selector``), so it is re-derived
+        on the budget-bounded slice (``_rehost``) and at
         run-end/journal boundaries only. Same-JVM interleaved A/B
-        (tools/payload_ab.py, 8M rows): +9% at local[8], and at
-        local[32] the schedule stage dropped 11.3→4.8 s — the wider
-        rows were crossing the per-task execution-memory threshold
-        under 32-way concurrency. Stored schemas are unchanged: the
-        journal, snapshots and CrawlResult still carry ``host``."""
+        (tools/payload_ab.py of commit 8fa23d2, 8M rows): +9% at
+        local[8], and at local[32] the schedule stage dropped
+        11.3→4.8 s — the wider rows were crossing the per-task
+        execution-memory threshold under 32-way concurrency. Stored
+        schemas are unchanged: the journal and CrawlResult still carry
+        ``host``."""
         if "host_key" not in frontier.columns:
             frontier = (frontier
                         .withColumn("host_key", F.xxhash64(F.col("host")))
                         .drop("host"))
-        return self._trim_runids(frontier)
+        seen_t = self._trim_runids(seen)
+        if seen_t is not seen:
+            # the trim rewrote the base: materialize ONCE (sorted,
+            # AQE-off) so the mapping join never re-plans inside the
+            # per-wave admission join — it would otherwise re-exchange
+            # + re-sort the base EVERY wave until the first fold
+            # (measured: +2 s/wave on the e2e bench)
+            seen_t = self._materialize(seen_t, sort=True)
+        return self._trim_runids(frontier), seen_t
 
     def _rehost(self, df: DataFrame, drop_key: bool = False) -> DataFrame:
         """Re-derive the host string of a trimmed frame from its url
@@ -574,42 +538,17 @@ class CrawlEngine:
 
     # -- entry point 2: the crawl loop (SELECT) ---------------------------
     def run(self, max_waves: int = 10_000, resume: bool = False) -> CrawlResult:
-        from moca_spark.operators import wave as _wave_mod
-
-        self._run_ords = None  # (re)built below iff lsm mode; a stale
-        # dictionary from a previous run() must never leak into this one
-        self._run_criteria = None
-        if self._frontier_lsm and _wave_mod.SLICE_DEDUP_MODE == "hashagg_packed":
-            # the packed-long dedup is exact only for depth < 2^16 and
-            # seq < 2^47 (seq = wave*2^32 + parent_rank ⇒ wave < 2^15)
-            assert max_waves < (1 << 15), (
-                "SLICE_DEDUP_MODE='hashagg_packed' packs (depth, seq) "
-                "into one long — exact only for wave < 2^15; lower "
-                "max_waves or use a window dedup mode")
+        if resume and not self.durable:
+            raise ValueError(
+                "resume=True needs durable='eventlog': a memory-mode "
+                "engine has no journal to resume from")
         if resume and self.store.latest_wave() is not None:
-            if not self.durable:
-                raise ValueError("resume requires durable=True or 'eventlog'")
             # loaded state of unknown size: disable the small-state
             # broadcast fast path (the sorted-base SMJ shape is always
             # correct; see state_broadcast_max)
             self._state_rows_bound = None
             start = self.store.latest_wave()
-            if self.durable == "eventlog":
-                frontier, seen = self._reconstruct()
-            else:
-                frontier, seen = self.store.load_wave(start)
-                # pre-round-2 snapshots lack the _key column the
-                # STATE_KEYS joins lead with — recompute it on load
-                # (mirrors what _reconstruct does for the eventlog)
-                if "_key" not in frontier.columns:
-                    frontier = frontier.withColumn("_key", self._seen_key())
-                if "_key" not in seen.columns:
-                    seen = seen.withColumn("_key", self._seen_key())
-            if self._bloom is not None:  # rebuild the seen bloom (T5)
-                self._bloom = build_bloom_from_df(
-                    seen.withColumn("k", self._seen_key()), "k",
-                    self.bloom_capacity,
-                )
+            frontier, seen = self._reconstruct()
             if self.bloom_mode == "cuckoo":  # T5 for the deletable
                 # filter: one distributed groupBy-build over the seen
                 # keys (the round-2 shape iterated the WHOLE seen set
@@ -626,8 +565,7 @@ class CrawlEngine:
                 # T5 for the sharded bloom — without this rebuild a
                 # pre-resume seen URL probes as a definitive MISS and
                 # is admitted WITHOUT the exact join, breaking the
-                # depth-qualified re-crawl rule (latent round-3 bug:
-                # only the monolith and cuckoo filters were rebuilt)
+                # depth-qualified re-crawl rule
                 from moca_spark.filters.sharded_bloom import (
                     build_sharded_bloom,
                 )
@@ -640,7 +578,7 @@ class CrawlEngine:
             start = 0
             self._state_rows_bound = 0  # empty seen state
             frontier, seen = self._initial_state()
-            if self.durable == "eventlog":
+            if self.durable:
                 self.store.append_events(
                     0,
                     frontier.select(
@@ -649,34 +587,20 @@ class CrawlEngine:
                     ),
                 )
                 frontier, seen = self._reconstruct()
-            elif self.durable:
-                frontier, seen = self.store.commit_wave(
-                    0, frontier, seen, None, None
-                )
             else:
                 frontier = frontier.localCheckpoint(eager=True)
                 seen = seen.localCheckpoint(eager=True)
-        if self._frontier_lsm:
-            # hot-loop schema: host string -> 64-bit host_key, run_id
-            # string -> dense ordinal (see _trim_frontier/_trim_runids);
-            # boundaries above (journal, snapshots, resume loads) all
-            # carry the string schema
-            rids = sorted({r["run_id"] for r in self.runs})
-            self._run_ords = (
-                rids if len(rids) <= self.runid_trim_max_runs else None
-            )
-            if self._run_ords is not None:
-                self._run_criteria = self._criteria_lookups()
-            frontier = self._trim_frontier(frontier)
-            seen_t = self._trim_runids(seen)
-            if seen_t is not seen:
-                # the trim rewrote the base: materialize ONCE (sorted,
-                # AQE-off) so the mapping join never re-plans inside
-                # the per-wave admission join — it would otherwise
-                # re-exchange + re-sort the base EVERY wave until the
-                # first fold (measured: +2 s/wave on the e2e bench)
-                seen_t = self._materialize(seen_t, sort=True)
-            seen = seen_t
+        # hot-loop schema: host string -> 64-bit host_key, run_id
+        # string -> dense ordinal (see _trim_state/_trim_runids); the
+        # boundaries (journal, resume loads) carry the string schema.
+        # The dictionary is rebuilt per run(): a stale one from a
+        # previous run() must never leak into this one
+        rids = sorted({r["run_id"] for r in self.runs})
+        self._run_ords = rids if len(rids) <= self.runid_trim_max_runs else None
+        self._run_criteria = (
+            self._criteria_lookups() if self._run_ords is not None else None
+        )
+        frontier, seen = self._trim_state(frontier, seen)
         self._seen_base, self._seen_deltas = seen, []
 
         runs_b = F.broadcast(self._runs_df())
@@ -697,33 +621,19 @@ class CrawlEngine:
             wave += 1
             frontier = stepped
             self.wave_times.append(_time.monotonic() - _t0)
-            if self.durable is True and self.keep_snapshots:
-                self.store.expire_snapshots(self.keep_snapshots)
-            if (self.durable == "eventlog" and self.compact_every
+            if (self.durable and self.compact_every
                     and wave % self.compact_every == 0):
                 self.store.compact(wave)
-                frontier, seen = self._reconstruct()
-                if self._frontier_lsm:
-                    # mirror the run-start block: the trims apply only
-                    # in LSM mode — with frontier_lsm=False the non-LSM
-                    # _step path expects the string schema (round-5
-                    # advice: unguarded trims broke eventlog+
-                    # compact_every with the LSM explicitly disabled)
-                    frontier = self._trim_frontier(frontier)
-                    seen_t = self._trim_runids(seen)
-                    if seen_t is not seen:  # see run-start comment
-                        seen_t = self._materialize(seen_t, sort=True)
-                    seen = seen_t
+                frontier, seen = self._trim_state(*self._reconstruct())
                 self._seen_base, self._seen_deltas = seen, []
 
         seen = self._fold_seen()
-        if self._frontier_lsm:
-            # compact the one-fresh-layer-deep LSM view down to the
-            # merged contract shape callers (and the oracle) see —
-            # re-deriving the host + run_id strings the hot loop dropped
-            frontier = fold_frontier(self._rehost(
-                self._rerun_id(frontier).drop("_run_ord"), drop_key=True))
-            seen = self._rerun_id(seen).drop("_run_ord")
+        # compact the one-fresh-layer-deep LSM view down to the merged
+        # contract shape callers (and the oracle) see — re-deriving the
+        # host + run_id strings the hot loop dropped
+        frontier = fold_frontier(self._rehost(
+            self._rerun_id(frontier).drop("_run_ord"), drop_key=True))
+        seen = self._rerun_id(seen).drop("_run_ord")
         if self.durable:
             results, metrics = self.store.all_results(), self.store.all_metrics()
         else:
@@ -949,7 +859,7 @@ class CrawlEngine:
         same-wave metrics derivation), so the per-wave materialization
         job disappears — all increments materialize together in the
         first action that touches them, each branch a narrow read over
-        its wave's already-checkpointed slice. Durable modes stay
+        its wave's already-checkpointed slice. The event log stays
         eager by nature (the write IS the durability)."""
         if self.durable:
             return self.store.write_increment(wave, name, df)
@@ -1022,25 +932,15 @@ class CrawlEngine:
         return links
 
     def _reconstruct(self) -> tuple[DataFrame, DataFrame]:
-        """Eventlog mode: (frontier, seen) from the committed journal.
-        The journal itself stays hash-free; the state key is recomputed
-        here (one projection over the aggregated state)."""
-        from moca_spark.store.lakehouse import _reconstruct_state
-
-        log = self.store.read_log()
-        if log is None:
-            empty_f = self.spark.createDataFrame(
-                [],
-                "run_id string, url string, host string, depth int, seq long",
-            )
-            empty_s = self.spark.createDataFrame(
-                [], "run_id string, url string, best_depth int"
-            )
-        else:
-            empty_f, empty_s = _reconstruct_state(log)
+        """(frontier, seen) from the committed journal — called only
+        after wave 0 committed, so the log exists (read_log raises on a
+        committed wave whose events are gone). The journal itself stays
+        hash-free; the state key is recomputed here (one projection
+        over the aggregated state)."""
+        frontier, seen = _reconstruct_state(self.store.read_log())
         return (
-            empty_f.withColumn("_key", self._seen_key()),
-            empty_s.withColumn("_key", self._seen_key()),
+            frontier.withColumn("_key", self._seen_key()),
+            seen.withColumn("_key", self._seen_key()),
         )
 
     @staticmethod
@@ -1335,29 +1235,20 @@ class CrawlEngine:
         self, wave: int, frontier: DataFrame, runs_b: DataFrame,
         links: DataFrame,
     ) -> DataFrame | None:
-        # 1. SLICE — per-host politeness-bounded queue heads
-        if self._frontier_lsm:
-            # dedup + slice + split in the slice's own exchange; rest
-            # is a filter over the checkpointed ranked split point.
-            # eager=False: the split-point checkpoint materializes
-            # inside the seen-delta count below (a full scan of
-            # sliced), not as its own job (round 6)
-            sliced, rest = slice_split(frontier, self.budget, self.n_salts,
-                                       eager=False)
-            # the hot loop dropped the host + run_id strings
-            # (_trim_frontier); everything downstream of the slice
-            # (fetch politeness groups, results/events schemas,
-            # metrics) wants them — re-derive on the budget-bounded
-            # slice only (the ordinal rides along as _run_ord for the
-            # ord-space seen-delta projection below)
-            sliced = self._rehost(self._rerun_id(sliced)).cache()
-        else:
-            sliced = top_k_per_host(frontier, self.budget, self.n_salts).cache()
-            # frontier is hash-partitioned+sorted by STATE_KEYS from the
-            # previous merge — the anti-join moves only the small slice
-            rest = frontier.join(
-                sliced.select(*STATE_KEYS), STATE_KEYS, "left_anti"
-            )
+        # 1. SLICE — per-host politeness-bounded queue heads: dedup +
+        #    slice + split in the slice's own exchange; rest is a
+        #    filter over the checkpointed ranked split point.
+        #    eager=False: the split-point checkpoint materializes inside
+        #    the seen-delta count below (a full scan of sliced), not as
+        #    its own job (round 6)
+        sliced, rest = slice_split(frontier, self.budget, self.n_salts,
+                                   eager=False)
+        # the hot loop dropped the host + run_id strings (_trim_state);
+        # everything downstream of the slice (fetch politeness groups,
+        # results/events schemas, metrics) wants them — re-derive on
+        # the budget-bounded slice only (the ordinal rides along as
+        # _run_ord for the ord-space seen-delta projection below)
+        sliced = self._rehost(self._rerun_id(sliced)).cache()
 
         # 3a. SEEN delta (materialized FIRST — round 6): the count job
         #    below is the wave's cache-populating action on the slice,
@@ -1400,19 +1291,9 @@ class CrawlEngine:
                 # into the shard base now instead of broadcasting an
                 # oversized exact-membership frame this wave
                 self._fold_filter()
-
-        # incremental bloom maintenance: this wave's fetches ARE the new
-        # seen entries; add their keys via distributed partial bitmaps
-        if self._bloom is not None:
-            self._bloom.merge(
-                build_bloom_from_df(
-                    sliced.select(F.col("_key").alias("k")), "k",
-                    self.bloom_capacity,
-                )
-            )
-        # sharded/cuckoo filter maintenance is LSM-deferred: the wave's
-        # add keys ride the seen delta's checkpoint (3a) onto the
-        # _filter_deltas stack; shards rewrite only at _fold_filter
+        # filter maintenance is LSM-deferred: the wave's add keys ride
+        # the seen delta's checkpoint (3a) onto the _filter_deltas
+        # stack; shards rewrite only at _fold_filter
 
         # 2. FETCH — equi-join against the image+caption corpus, pruned
         #    to the slice's ids (O(slice) corpus reads; _pruned_images —
@@ -1546,47 +1427,23 @@ class CrawlEngine:
         # when the parent side is provably small, and above the hint
         # bound the checkpoint returns so the skew-prone expand join
         # keeps AQE).
-        fuse = (self.bloom_mode is False
+        fuse = (not self.bloom_mode
                 and n_delta <= self.expand_broadcast_max)
         if not fuse:
             cand2 = cand2.localCheckpoint(eager=True)
         fresh_cols = [
             "_key", "run_id", "url",
-            # lsm hot loop carries the politeness hash only; the value
-            # is identical to xxhash64 of the host column the merged
-            # path carries (host ≡ partition_selector(url))
-            (F.xxhash64(self.partition_selector(F.col("url")))
-             .alias("host_key")
-             if self._frontier_lsm
-             else self.partition_selector(F.col("url")).alias("host")),
+            # the hot loop carries the politeness hash only
+            # (host ≡ partition_selector(url))
+            F.xxhash64(self.partition_selector(F.col("url"))).alias("host_key"),
             "depth",
             (F.lit(wave * SEQ_WAVE_STRIDE) + F.col("parent_rank")).alias("seq"),
         ]
-        if self._bloom is not None:
+        if self.bloom_mode == "sharded":
             # Bloom pre-filter (J1 north rule): a MISS is definitive —
             # those rows are admitted without touching the seen table;
             # HITs go to the exact join, which alone decides (false
             # positives cost join work, never correctness).
-            # the previous wave's broadcast is fully consumed once that
-            # wave's state materialized — release it or a long crawl
-            # leaks waves × bloom-size on driver and executors
-            if self._bloom_bc is not None:
-                self._bloom_bc.unpersist()
-            bloom_bytes = self._bloom_bc = \
-                self.spark.sparkContext.broadcast(self._bloom.to_bytes())
-
-            @pandas_udf(BooleanType())
-            def maybe_seen(keys: pd.Series) -> pd.Series:
-                bf = BloomFilter.from_bytes(bloom_bytes.value)
-                return pd.Series(bf.contains_many(keys.to_numpy()))
-
-            tagged = cand2.withColumn("_maybe", maybe_seen(F.col("_key")))
-            definitely_new = tagged.filter(~F.col("_maybe")).select(*fresh_cols)
-            checked = self._admit_unseen(
-                tagged.filter(F.col("_maybe"))
-            ).select(*fresh_cols)
-            fresh = definitely_new.unionByName(checked)
-        elif self.bloom_mode == "sharded":
             tagged = self._probe_filter(cand2)
             definitely_new = tagged.filter(~F.col("_maybe_seen")).select(*fresh_cols)
             checked = self._admit_unseen(
@@ -1629,18 +1486,15 @@ class CrawlEngine:
         # single-compute for its two consumers (merge + events).
         fresh = self._materialize(fresh, aqe_off=not self._small_state())
 
-        # 6. MERGE — frontier keeps min (depth, seq) per (run, url).
-        # LSM mode defers the min-merge into next wave's slice_split:
-        # the union is lazy over two checkpoints (ranked-rest + fresh),
-        # so no per-wave merge exchange, agg, or materialization.
-        if self._frontier_lsm:
-            frontier_new = rest.unionByName(fresh)
-        else:
-            frontier_new = merge_frontier(rest, fresh)
+        # 6. MERGE — frontier keeps min (depth, seq) per (run, url),
+        # deferred into next wave's slice_split: the union is lazy over
+        # two checkpoints (ranked-rest + fresh), so no per-wave merge
+        # exchange, agg, or materialization.
+        frontier_new = rest.unionByName(fresh)
 
         # 7. COMMIT — results first (one materialization), metrics
         #    derived from the checkpointed results (A7 lineage), then
-        #    the state snapshot + marker (the atomic journal commit)
+        #    the wave's events + marker (the atomic journal commit)
         results_c = self._checkpoint_increment(wave, "results", results_w)
         if self.collect_metrics:
             metrics_w = (
@@ -1653,7 +1507,7 @@ class CrawlEngine:
                 .withColumn("partition_id", F.spark_partition_id())
             )
             self._checkpoint_increment(wave, "metrics", metrics_w)
-        if self.durable == "eventlog":
+        if self.durable:
             # O(delta) durable append; the live state is chained in
             # memory (localCheckpoint) — the journal is read back ONLY
             # on resume and after compaction, never per wave (a
@@ -1663,33 +1517,15 @@ class CrawlEngine:
                 F.lit("consume").alias("kind"), F.lit(wave).alias("wave"),
             ).unionByName(
                 # the journal schema keeps the host + run_id strings
-                # (cross-version replay); fresh is trimmed in lsm mode
-                # — re-derive on the O(delta) add rows at append time
-                (self._rehost(self._rerun_id(fresh), drop_key=True)
-                 if self._frontier_lsm else fresh).select(
+                # (cross-version replay); fresh is trimmed — re-derive
+                # on the O(delta) add rows at append time
+                self._rehost(self._rerun_id(fresh), drop_key=True).select(
                     "run_id", "url", "host", "depth", "seq",
                     F.lit("add").alias("kind"), F.lit(wave).alias("wave"),
                 )
             )
             self.store.append_events(wave, events)
-            frontier_out = (
-                frontier_new if self._frontier_lsm
-                else self._materialize(frontier_new, sort=True)
-            )
-        elif self.durable:
-            # snapshot mode writes full state every wave anyway, so the
-            # deltas fold every wave and the committed state is re-read
-            # (lineage = one scan)
-            frontier_out, seen_rd = self.store.commit_wave(
-                wave, frontier_new, self._fold_seen(), None, None
-            )
-            self._seen_base = seen_rd
-        else:
-            frontier_out = (
-                frontier_new if self._frontier_lsm
-                else self._materialize(frontier_new, sort=True)
-            )
         if len(self._seen_deltas) >= self.fold_every:
             self._fold_seen()
         sliced.unpersist()
-        return frontier_out
+        return frontier_new

@@ -32,7 +32,7 @@ set. The shared ordering contract (oracle == engine, row-for-row):
   polite; ~3e-4 chance of any colliding pair at 10^8 hosts) — and
   both sides compute the same hash, so parity holds even then. The
   engine gets numeric exchange hashing and a numeric window sort
-  prefix out of this (operators/wave.py HOST_KEY_MODE);
+  prefix out of this (operators/wave.py _partition_key);
 - wave slice per partition: order by (depth, seq, _key, run_id, url)
   where ``_key = xxhash64(run_id || '\\x00' || url)`` (the frontier's
   state key, functions/xxh64.py driver-side) — ties resolve on one

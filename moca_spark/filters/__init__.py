@@ -1,2 +1,2 @@
-from moca_spark.filters.bloom import BloomFilter, build_bloom_from_df  # noqa: F401
+from moca_spark.filters.bloom import BloomFilter  # noqa: F401
 from moca_spark.filters.cuckoo import CuckooFilter  # noqa: F401

@@ -16,8 +16,10 @@ the discipline SURVEY §2.4 J1 requires.
 
 Everything is numpy-vectorized: k probe positions are derived from the
 64-bit key by splitmix64 double hashing; membership tests run on whole
-Arrow batches inside a pandas UDF. The filter builds distributedly
-(per-partition partial bitmaps OR-reduced) and broadcasts.
+Arrow batches inside a pandas UDF. The engine never broadcasts one
+whole filter: filters/sharded_bloom.py keeps one BloomFilter per
+key-hash shard in a table and builds, OR-merges and probes the shards
+on executors.
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 _SPLITMIX_C1 = np.uint64(0xBF58476D1CE4E5B9)
 _SPLITMIX_C2 = np.uint64(0x94D049BB133111EB)
@@ -96,25 +97,3 @@ class BloomFilter:
         assert self.m == other.m and self.k == other.k
         self.bits |= other.bits
         return self
-
-
-def build_bloom_from_df(
-    df: DataFrame, key_col: str, n_expected: int, fpp: float = 1e-3
-) -> BloomFilter:
-    """Distributed build: per-partition partial bitmaps, OR-reduced to
-    the driver (bitmap size is O(m), independent of row count). The one
-    legitimate RDD use in the engine: per-partition imperative bitmap
-    construction."""
-    m_params = (n_expected, fpp)
-
-    def partial(rows) -> list[bytes]:
-        bf = BloomFilter(*m_params)
-        keys = np.fromiter((r[0] for r in rows), dtype=np.int64)
-        bf.add_many(keys)
-        return [bf.to_bytes()]
-
-    parts = df.select(key_col).rdd.mapPartitions(partial).collect()
-    out = BloomFilter(*m_params)
-    for p in parts:
-        out.merge(BloomFilter.from_bytes(p))
-    return out

@@ -27,7 +27,7 @@ the reduction — the pattern the north rule prescribes for hot-host
 skew.
 
 De-stringed hot path (round-5): the windows partition on the 64-bit
-``xxhash64(host)`` (``HOST_KEY_MODE="hash64"``) and the order breaks
+``xxhash64(host)`` (``_partition_key``) and the order breaks
 remaining (depth, seq) ties on the frontier's 64-bit ``_key`` before
 (run_id, url), so the DRAM-bound rank sorts compare 8-byte longs
 essentially always — the host and url STRINGS are payload. Two
@@ -53,14 +53,6 @@ from pyspark.sql import functions as F
 
 ORDER_COLS = ["depth", "seq", "run_id", "url"]
 
-# Politeness partition key for the slice windows/exchange:
-#   "hash64" — xxhash64(host): numeric exchange hashing + numeric sort
-#       prefix (the host string is payload; see module docstring for
-#       the collision contract). Default.
-#   "string" — round-4 shape, windows on the host STRING. Control for
-#       tools/scaling_bench.py A/Bs.
-HOST_KEY_MODE = "hash64"
-
 
 def _order_cols(frontier: DataFrame) -> list[Column]:
     """(depth, seq) then the tie-break: ``_key``-led when the frontier
@@ -76,47 +68,12 @@ def _order_cols(frontier: DataFrame) -> list[Column]:
 def _partition_key(frontier: DataFrame, host_col: str) -> Column:
     """The politeness-partition expression: the frontier's own 64-bit
     ``host_key`` column when present (the engine carries it instead of
-    the host string), else xxhash64 of the host column, else — in
-    "string" control mode — the host column itself."""
+    the host string), else xxhash64 of the host column. Windows on the
+    host STRING (the round-4 shape) were measured slower and removed
+    (tools/host_key_ab.py of commit 7671410)."""
     if "host_key" in frontier.columns:
         return F.col("host_key")
-    if HOST_KEY_MODE == "hash64":
-        return F.xxhash64(F.col(host_col))
-    return F.col(host_col)
-
-# How slice_split collapses duplicate (run, url) rows to their
-# min-(depth, seq) survivor inside the (host, salt) exchange. All
-# modes are exchange-free past the one (host, salt) repartition
-# (HashPartitioning(host, salt) satisfies any clustering whose key set
-# CONTAINS its expressions — order-insensitive), and all are
-# order-exact: only the within-group (depth, seq) order matters to the
-# dedup, so the relative order of the PARTITION keys in the sort is
-# semantically free.
-#   "window_keyled" — row_number over partitionBy(_key, run, url,
-#       host, salt): the sort LEADS with the uniform 64-bit _key, so
-#       the sorter's 8-byte prefix is radix-friendly and almost every
-#       comparison resolves on one long instead of first scanning the
-#       host/url strings (the "window" shape compares the host STRING
-#       first — every URL shares its "http://" prefix, making the sort
-#       prefix useless). Bytes and comparisons through the
-#       DRAM-bandwidth-bound sort drop; the 4N level gains most.
-#   "window"  — round-3 shape: partitionBy(host, salt, _key, run, url)
-#       — host-string-led sort. Fallback/control.
-#   "sortagg" — groupBy(_key, run, url, host, salt).min(struct(depth,
-#       seq)): plans as partial+final SortAggregate over the same
-#       _key-led sort (min(struct) is not hash-aggregable). MEASURED
-#       AND REJECTED: 12.2s vs window's 10.3s kernel total at
-#       local[32]/8M — the extra aggregate machinery buys nothing over
-#       the window on an already-sorted partition.
-#   "hashagg_packed" — (depth, seq) packed into one long (depth*2^47 +
-#       seq, exact for depth < 2^16, seq < 2^47) so min() gets a
-#       fixed-width buffer and plans as a true exchange-free
-#       HashAggregate — the dedup sort disappears entirely. MEASURED
-#       AND REJECTED: 11.9s vs 10.8s at local[32]/8M — probing a hash
-#       map of ~N mostly-unique string-keyed groups is itself
-#       DRAM-random-access-bound and loses to the radix-prefix sort.
-#       Both kept for tools/slice_dedup_ab.py reproduction.
-SLICE_DEDUP_MODE = "window_keyled"
+    return F.xxhash64(F.col(host_col))
 
 
 def top_k_per_host(
@@ -125,8 +82,7 @@ def top_k_per_host(
     """Top-``k`` rows per politeness partition by (depth, seq,
     [_key,] run_id, url), with exact per-partition ``rank`` (1..k =
     politeness fetch order) — salted two-phase. The partition key and
-    tie-break follow the module-docstring contract (hash-led by
-    default; exact string grouping under HOST_KEY_MODE="string")."""
+    tie-break follow the module-docstring contract (hash-led)."""
     order = _order_cols(frontier)
     pkey = _partition_key(frontier, host_col)
     if n_salts > 1:
@@ -156,8 +112,7 @@ def slice_split(
     ``min_merge(frontier)`` minus the slice — ``min_merge`` keeping the
     min-(depth, seq) row per (run_id, url), the J2 frontier-dedup rule.
 
-    This is the LSM-frontier hot path (engine frontier_lsm mode): the
-    per-wave frontier may carry duplicate (run, url) rows (last wave's
+    This is the engine's LSM-frontier hot path: the per-wave frontier may carry duplicate (run, url) rows (last wave's
     ``rest`` unioned with its admitted ``fresh`` — never merged), and
     this operator folds the dedup INTO the (host, salt) exchange the
     slice must pay anyway. The salt is a deterministic function of the
@@ -175,13 +130,26 @@ def slice_split(
     ``repartition(host, salt)`` exchange satisfies both the dedup and
     the rank step (their keys are supersets of (host, salt), and
     HashPartitioning(host, salt) satisfies any clustering whose key
-    set contains its expressions). With the default
-    ``SLICE_DEDUP_MODE="window_keyled"`` the stage is
+    set contains its expressions). The stage is
     exchange→dedup-window→rank-window over one _key-led sort plus the
     rank re-sort, all inside the one exchange; only the ≤ n_salts·k
     phase-1 survivors per host cross the second (tiny) exchange for
-    the exact rank. (The aggregate modes below were measured and
-    rejected — see SLICE_DEDUP_MODE.)
+    the exact rank.
+
+    The dedup window partitions by (_key, run_id, url, host, salt) and
+    so LEADS its sort with the uniform 64-bit _key: the sorter's
+    8-byte prefix is radix-friendly and almost every comparison
+    resolves on one long instead of first scanning host/url strings
+    that share their "http://" prefix. Only the within-group (depth,
+    seq) order matters to the dedup, so the order of the partition
+    keys is semantically free. Measured and rejected (the A/B is
+    tools/slice_dedup_ab.py of commit 0248288, local[32], 8M rows):
+    a host-led window sort; a groupBy-min SortAggregate (12.2 s vs
+    10.3 s kernel total); and (depth, seq) packed into one long for a
+    HashAggregate (11.9 s vs 10.8 s) — probing a hash table of ~N
+    mostly-unique keys is memory-bound and loses to the radix-prefix
+    sort (Analyzing Vectorized Hash Tables Across CPU Architectures,
+    VLDB 2023).
 
     The ranked split point is localCheckpoint-ed here — it is the
     wave's single O(frontier) materialization (both returned frames
@@ -199,84 +167,28 @@ def slice_split(
     salt = F.pmod(F.xxhash64("url"), F.lit(max(n_salts, 1)))
     rep = frontier.withColumn("_salt", salt)
     # politeness group column for the exchange + windows: the
-    # frontier's own host_key when present; else a derived _hk column
-    # (hash64 mode) so the exchange hashes and the window sorts compare
-    # one long; else the host string (control mode)
-    added_hk = False
+    # frontier's own host_key when present, else a derived _hk column,
+    # so the exchange hashes and the window sorts compare one long.
+    # Dedup keys lead with _key when present (see docstring)
+    dkeys = (["_key"] if "_key" in frontier.columns else []) + ["run_id", "url"]
     if "host_key" in frontier.columns:
         gcol = "host_key"
-    elif HOST_KEY_MODE == "hash64":
+        dkeys += [gcol, "_salt"]
+    else:
         rep = rep.withColumn("_hk", F.xxhash64(F.col(host_col)))
-        gcol, added_hk = "_hk", True
-    else:
-        gcol = host_col
+        gcol = "_hk"
+        # _hk is a function of host: grouping by both = grouping by host
+        dkeys += [gcol, "_salt", host_col]
     rep = rep.repartition(F.col(gcol), F.col("_salt"))
-    # dedup keys lead with _key when present (8-byte radix-friendly
-    # compares before the url string — see SLICE_DEDUP_MODE)
-    mode = SLICE_DEDUP_MODE
-    keyed = ["_key"] if "_key" in frontier.columns else []
-    if mode == "window":  # round-3 control: group-key-led sort
-        dkeys = [gcol, "_salt"] + keyed + ["run_id", "url"]
-    else:
-        dkeys = keyed + ["run_id", "url", gcol, "_salt"]
-        if added_hk:
-            # _hk is a function of host: grouping by both = grouping by
-            # host, and it keeps the host payload column through the
-            # aggregate forms (without this the agg_ok guard would
-            # silently demote the sortagg/hashagg_packed A/B controls
-            # to the window branch in hash64 mode)
-            dkeys.append(host_col)
     w1 = Window.partitionBy(gcol, "_salt").orderBy(*order)
-    # the aggregate forms need every non-key column to be (depth, seq)
-    # — payload columns would be dropped; fall back to the window
-    agg_ok = (set(frontier.columns) | {"_salt"} | ({"_hk"} if added_hk else set())
-              == set(dkeys) | {"depth", "seq"})
-    if mode == "hashagg_packed" and agg_ok:
-        # (depth, seq) packed into ONE long: depth * 2^47 + seq. A
-        # fixed-width long buffer makes min() HASH-aggregable
-        # (min(struct) plans as SortAggregate), so the dedup costs a
-        # hash probe per row instead of a full partition sort — the
-        # rank window's sort becomes the stage's ONLY sort. Exact iff
-        # depth < 2^16 and seq < 2^47, which the engine guarantees
-        # structurally (depth <= wave, seq = wave*2^32 + parent_rank;
-        # engine.run asserts max_waves < 2^15 when this mode is
-        # active); generic callers with unbounded depth/seq should
-        # use a window mode.
-        pack = F.col("depth").cast("long") * F.lit(1 << 47) + F.col("seq")
-        ded = (
-            rep.groupBy(*dkeys)
-            .agg(F.min(pack).alias("_p"))
-            .select(*dkeys,
-                    F.shiftright("_p", 47).cast("int").alias("depth"),
-                    (F.col("_p") % F.lit(1 << 47)).alias("seq"))
-        )
-        ranked = (
-            ded.withColumn("_r1", F.row_number().over(w1))
-            .drop("_salt", "_hk")
-            .localCheckpoint(eager=eager)
-        )
-    elif mode == "sortagg" and agg_ok:
-        ded = (
-            rep.groupBy(*dkeys)
-            .agg(F.min(F.struct("depth", "seq")).alias("_m"))
-            .select(*dkeys,
-                    F.col("_m.depth").alias("depth"),
-                    F.col("_m.seq").alias("seq"))
-        )
-        ranked = (
-            ded.withColumn("_r1", F.row_number().over(w1))
-            .drop("_salt", "_hk")
-            .localCheckpoint(eager=eager)
-        )
-    else:
-        w_d = Window.partitionBy(*dkeys).orderBy("depth", "seq")
-        ranked = (
-            rep.withColumn("_rd", F.row_number().over(w_d))
-            .filter(F.col("_rd") == 1)
-            .withColumn("_r1", F.row_number().over(w1))
-            .drop("_rd", "_salt", "_hk")
-            .localCheckpoint(eager=eager)
-        )
+    w_d = Window.partitionBy(*dkeys).orderBy("depth", "seq")
+    ranked = (
+        rep.withColumn("_rd", F.row_number().over(w_d))
+        .filter(F.col("_rd") == 1)
+        .withColumn("_r1", F.row_number().over(w1))
+        .drop("_rd", "_salt", "_hk")
+        .localCheckpoint(eager=eager)
+    )
     # phase 2 — exact rank over <= n_salts*k survivors per host (the
     # phase-1 cutoff is over DEDUPED rows, so the two-phase proof in
     # the module docstring applies unchanged)

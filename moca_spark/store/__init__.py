@@ -1,1 +1,1 @@
-from moca_spark.store.lakehouse import CheckpointStore  # noqa: F401
+from moca_spark.store.lakehouse import EventLogStore  # noqa: F401

@@ -1,29 +1,31 @@
-"""Wave-checkpoint store: exactly-once resumable crawl state.
+"""Wave journal store: exactly-once resumable crawl state.
 
 The reference gets durability from Akka persistence (event journal +
 snapshots, role/master/Master.scala:47-87,160-181; per-task replay,
 role/worker/Minion.scala:46-66) and PostgreSQL transactions
-(store/control/PgRunControl.scala). The Spark-native equivalent is
-table-format snapshot commits: every wave writes the full frontier +
-seen state and appends results/metrics, then atomically publishes a
-commit marker. Resume = read the latest committed wave; a re-run of a
+(store/control/PgRunControl.scala). The Spark-native equivalent here is
+an append-only event log with periodic compaction — a compaction IS
+the snapshot. Every wave appends only its DELTA of frontier events plus
+its results/metrics increments, then atomically publishes a commit
+marker. Resume = re-aggregate the committed events; a re-run of a
 half-finished wave is invisible (its directory lacks the marker and is
 overwritten).
 
-On a production cluster this is one Iceberg transaction per wave
-(``df.writeTo(...).overwritePartitions()`` + snapshot expiry); this
-module implements the identical protocol on plain Parquet directories
-so it runs hermetically here:
+On a production cluster this is a merge-on-read Iceberg table with
+periodic ``rewriteDataFiles``; this module implements the identical
+protocol on plain Parquet directories so it runs hermetically here:
 
-    <root>/wave=<n>/frontier/...   full state (overwrite semantics)
-    <root>/wave=<n>/seen/...
+    <root>/wave=<n>/events/...     the wave's add/consume events
     <root>/wave=<n>/results/...    per-wave increment (append semantics)
     <root>/wave=<n>/metrics/...
-    <root>/wave=<n>/_COMMIT        atomic rename publishes the wave
+    <root>/wave=<n>/_COMMIT        atomic rename publishes the wave;
+                                   {"wave": n[, "compacted": true]}
 
 The commit marker is written last; readers ignore uncommitted waves, so
 a crash at any point resumes from the previous wave with no duplicate
 or lost state (the reference's exactly-once recovery guarantee, T3-T5).
+A committed wave whose events are missing is an error, never an empty
+delta (read_log).
 """
 
 from __future__ import annotations
@@ -34,162 +36,6 @@ import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-
-# State tables are keyed/bucketed by these (see engine.STATE_KEYS):
-# hash first, string key kept for exactness.
-_BUCKET_COLS = ("_key", "run_id", "url")
-
-
-class CheckpointStore:
-    def __init__(self, spark: SparkSession, root: str, bucket_state: int = 0):
-        """``bucket_state=N`` writes the frontier/seen snapshots as
-        N-bucket tables (bucketBy+sortBy on the state keys, one file
-        per bucket) instead of plain parquet. Re-reads then come back
-        hash-partitioned AND sorted, so snapshot mode's per-wave state
-        joins run exchange-free on the state side exactly like the
-        in-memory modes — and a RESUMED run starts co-partitioned
-        instead of paying a one-time full-state shuffle. This is the
-        plain-parquet stand-in for an Iceberg table with a bucket
-        partition transform (README divergence #6)."""
-        self.spark = spark
-        self.root = root
-        self.bucket_state = bucket_state
-        os.makedirs(root, exist_ok=True)
-
-    def _table_name(self, wave: int, name: str) -> str:
-        slug = re.sub(r"[^0-9a-zA-Z]+", "_", self.root).strip("_").lower()
-        return f"moca_chk_{slug}_w{wave}_{name}"
-
-    def _write_state(self, wave: int, name: str, df: DataFrame) -> None:
-        d = os.path.join(self._wave_dir(wave), name)
-        if not self.bucket_state:
-            df.write.mode("overwrite").parquet(d)
-            return
-        n = self.bucket_state
-        tbl = self._table_name(wave, name)
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        # repartition by the same keys Spark's bucketing hashes -> one
-        # file per bucket, which keeps the sortBy order usable by SMJ
-        (
-            df.repartition(n, *_BUCKET_COLS)
-            .write.mode("overwrite").format("parquet")
-            .bucketBy(n, *_BUCKET_COLS).sortBy(*_BUCKET_COLS)
-            .option("path", d)
-            .saveAsTable(tbl)
-        )
-
-    def _read_state(self, wave: int, name: str) -> DataFrame:
-        d = os.path.join(self._wave_dir(wave), name)
-        if not self.bucket_state:
-            return self.spark.read.parquet(d)
-        tbl = self._table_name(wave, name)
-        if not self.spark.catalog.tableExists(tbl):
-            # fresh session (resume): re-register the bucketed table
-            # over the existing files — the in-memory catalog does not
-            # survive restarts, the bucketed layout on disk does
-            schema = self.spark.read.parquet(d).schema
-            ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-            )
-            self.spark.sql(
-                f"CREATE TABLE {tbl} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY ({', '.join(_BUCKET_COLS)}) "
-                f"SORTED BY ({', '.join(_BUCKET_COLS)}) "
-                f"INTO {self.bucket_state} BUCKETS LOCATION '{d}'"
-            )
-        return self.spark.table(tbl)
-
-    def _wave_dir(self, wave: int) -> str:
-        return os.path.join(self.root, f"wave={wave}")
-
-    def committed_waves(self) -> list[int]:
-        out = []
-        if not os.path.isdir(self.root):
-            return out
-        for name in os.listdir(self.root):
-            if name.startswith("wave="):
-                w = int(name.split("=", 1)[1])
-                if os.path.exists(os.path.join(self.root, name, "_COMMIT")):
-                    out.append(w)
-        return sorted(out)
-
-    def latest_wave(self) -> int | None:
-        waves = self.committed_waves()
-        return waves[-1] if waves else None
-
-    def commit_wave(
-        self,
-        wave: int,
-        frontier: DataFrame,
-        seen: DataFrame,
-        results: DataFrame | None,
-        metrics: DataFrame | None,
-        extra: dict | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
-        """Write one wave transactionally; returns re-read (checkpointed)
-        frontier/seen so the caller's lineage is truncated to a scan.
-        Increments (results/metrics) may have been pre-written via
-        ``write_increment``; uncommitted leftovers from a crash are
-        simply overwritten subdir-by-subdir (every wave writes the same
-        four subdirs, and readers ignore marker-less waves)."""
-        d = self._wave_dir(wave)
-        self._write_state(wave, "frontier", frontier)
-        self._write_state(wave, "seen", seen)
-        if results is not None:
-            results.write.mode("overwrite").parquet(os.path.join(d, "results"))
-        if metrics is not None:
-            metrics.write.mode("overwrite").parquet(os.path.join(d, "metrics"))
-        tmp = os.path.join(d, "_COMMIT.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"wave": wave, **(extra or {})}, f)
-        os.rename(tmp, os.path.join(d, "_COMMIT"))  # atomic publish
-        return (
-            self._read_state(wave, "frontier"),
-            self._read_state(wave, "seen"),
-        )
-
-    def write_increment(self, wave: int, name: str, df: DataFrame) -> DataFrame:
-        """Write a per-wave append table (results/metrics) ahead of the
-        commit marker; returns the re-read frame (lineage truncation)."""
-        d = os.path.join(self._wave_dir(wave), name)
-        df.write.mode("overwrite").parquet(d)
-        return self.spark.read.parquet(d)
-
-    def load_wave(self, wave: int) -> tuple[DataFrame, DataFrame]:
-        return (
-            self._read_state(wave, "frontier"),
-            self._read_state(wave, "seen"),
-        )
-
-    def all_results(self) -> DataFrame | None:
-        paths = [
-            os.path.join(self._wave_dir(w), "results")
-            for w in self.committed_waves()
-            if os.path.isdir(os.path.join(self._wave_dir(w), "results"))
-        ]
-        return self.spark.read.parquet(*paths) if paths else None
-
-    def all_metrics(self) -> DataFrame | None:
-        paths = [
-            os.path.join(self._wave_dir(w), "metrics")
-            for w in self.committed_waves()
-            if os.path.isdir(os.path.join(self._wave_dir(w), "metrics"))
-        ]
-        return self.spark.read.parquet(*paths) if paths else None
-
-    def expire_snapshots(self, keep_last: int = 2) -> None:
-        """Iceberg expire_snapshots analog (T4): drop old wave state dirs
-        (results/metrics increments are kept — they are the output)."""
-        waves = self.committed_waves()
-        for w in waves[:-keep_last] if keep_last else waves:
-            for sub in ("frontier", "seen"):
-                p = os.path.join(self._wave_dir(w), sub)
-                if os.path.isdir(p):
-                    shutil.rmtree(p)
-                if self.bucket_state:
-                    self.spark.sql(
-                        f"DROP TABLE IF EXISTS {self._table_name(w, sub)}"
-                    )
 
 
 def _corpus_table_name(path: str) -> str:
@@ -255,14 +101,14 @@ def read_corpus_bucketed(spark: SparkSession, path: str) -> DataFrame:
     return spark.table(tbl)
 
 
-class EventLogStore(CheckpointStore):
+class EventLogStore:
     """Append-only event-log layout — the write path that survives a
     10^10-row frontier.
 
-    The base CheckpointStore rewrites the FULL frontier + seen tables
-    every wave: O(|frontier|) write amplification per wave, untenable
-    at the north-star scale. This layout appends only the wave's DELTA
-    as events and reconstructs state by aggregation:
+    Rewriting the FULL frontier + seen tables every wave (the removed
+    snapshot layout) costs O(|frontier|) write amplification per wave,
+    untenable at the north-star scale. This layout appends only the
+    wave's DELTA as events and reconstructs state by aggregation:
 
         event: (run_id, url, host, depth, seq, kind, wave)
           kind 'add'     — URL admitted to the frontier at (depth, seq)
@@ -282,6 +128,54 @@ class EventLogStore(CheckpointStore):
     IS the journal (T3): the commit marker publishes the wave's events
     atomically; replay = re-aggregate committed events. This mirrors a
     merge-on-read Iceberg/Hudi table with periodic compaction."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root
+        os.makedirs(root, exist_ok=True)
+
+    def _wave_dir(self, wave: int) -> str:
+        return os.path.join(self.root, f"wave={wave}")
+
+    def _marker(self, wave: int) -> dict:
+        with open(os.path.join(self._wave_dir(wave), "_COMMIT")) as f:
+            return json.load(f)
+
+    def committed_waves(self) -> list[int]:
+        out = []
+        if not os.path.isdir(self.root):
+            return out
+        for name in os.listdir(self.root):
+            if name.startswith("wave="):
+                w = int(name.split("=", 1)[1])
+                if os.path.exists(os.path.join(self.root, name, "_COMMIT")):
+                    out.append(w)
+        return sorted(out)
+
+    def latest_wave(self) -> int | None:
+        waves = self.committed_waves()
+        return waves[-1] if waves else None
+
+    def write_increment(self, wave: int, name: str, df: DataFrame) -> DataFrame:
+        """Write a per-wave append table (results/metrics) ahead of the
+        commit marker; returns the re-read frame (lineage truncation)."""
+        d = os.path.join(self._wave_dir(wave), name)
+        df.write.mode("overwrite").parquet(d)
+        return self.spark.read.parquet(d)
+
+    def all_results(self) -> DataFrame | None:
+        return self._read_increments("results")
+
+    def all_metrics(self) -> DataFrame | None:
+        return self._read_increments("metrics")
+
+    def _read_increments(self, name: str) -> DataFrame | None:
+        paths = [
+            os.path.join(self._wave_dir(w), name)
+            for w in self.committed_waves()
+            if os.path.isdir(os.path.join(self._wave_dir(w), name))
+        ]
+        return self.spark.read.parquet(*paths) if paths else None
 
     def append_events(self, wave: int, events: DataFrame,
                       extra: dict | None = None) -> None:
@@ -316,7 +210,23 @@ class EventLogStore(CheckpointStore):
         return None
 
     def read_log(self) -> DataFrame | None:
-        paths = [p for p in map(self._events_dir, self.committed_waves()) if p]
+        """The committed events (None before wave 0 commits). Raises if
+        a committed wave at or after the latest compacted marker (wave
+        0 if none) has lost its events: replaying the rest would drop
+        that wave's URLs without a word."""
+        waves = self.committed_waves()
+        base = max((w for w in waves if self._marker(w).get("compacted")),
+                   default=0)
+        missing = [w for w in waves if w >= base and not self._events_dir(w)]
+        if missing:
+            raise RuntimeError(
+                f"event log under {self.root} is incomplete: committed "
+                f"wave(s) {missing} have no events (neither events nor "
+                "events.old), so replay would silently drop URLs. "
+                "Snapshot-layout checkpoints (per-wave frontier/seen "
+                "dirs) are no longer readable; start a fresh checkpoint "
+                "dir instead")
+        paths = [p for p in map(self._events_dir, waves) if p]
         return self.spark.read.parquet(*paths) if paths else None
 
     def compact(self, wave: int) -> None:

@@ -328,16 +328,6 @@ def test_salting_does_not_change_results(spark, tmp_path, n_salts):
     assert_match(got, want)
 
 
-def test_bloom_prefilter_parity(spark, tmp_path):
-    """use_bloom must not change ANY result (misses admitted directly,
-    hits resolved by the exact join — J1 discipline)."""
-    edges = zipf_graph(n_hosts=5, pages_per_host=5)
-    works = [W("w1", "http://host0.test/p0", max_depth=3)]
-    got, want = run_both(spark, tmp_path, works, edges, budget=2,
-                         use_bloom=True, bloom_capacity=10_000)
-    assert_match(got, want)
-
-
 def test_cuckoo_prefilter_parity(spark, tmp_path):
     """use_bloom='cuckoo' (the deletable fallback the north rule names)
     must not change ANY result — same PASS-only discipline as bloom."""
@@ -397,18 +387,18 @@ def test_token_bucket_politeness(spark, tmp_path):
 
 def test_resume_from_checkpoint(spark, tmp_path):
     """T3/T5 exactly-once resume: kill after wave 2, resume from the
-    committed snapshot, end state identical to an uninterrupted run."""
+    committed journal, end state identical to an uninterrupted run."""
     edges = chain_graph(n=6)
     works = [W("w1", "http://site0.test/0", max_depth=10)]
 
     eng1, urls = make_engine(spark, tmp_path / "a", works, edges, budget=1,
-                             durable=True)
+                             durable="eventlog")
     partial = eng1.run(max_waves=2)  # "crash" after wave 2
     assert partial.waves == 2
     assert not partial.frontier.isEmpty()
 
     eng2, _ = make_engine(spark, tmp_path / "a", works, edges, budget=1,
-                          durable=True)
+                          durable="eventlog")
     resumed = eng2.run(resume=True)
 
     want = oracle_crawl(works, edges, budget=1, corpus_urls=urls)
@@ -416,68 +406,64 @@ def test_resume_from_checkpoint(spark, tmp_path):
 
 
 def test_resume_ignores_uncommitted_wave(spark, tmp_path):
-    """A wave directory without _COMMIT (mid-write crash) is invisible."""
+    """A wave directory without _COMMIT (mid-write crash) is invisible,
+    even though its events (and increments) are on disk."""
     import shutil
 
     edges = chain_graph(n=4)
     works = [W("w1", "http://site0.test/0", max_depth=10)]
     eng1, urls = make_engine(spark, tmp_path / "b", works, edges, budget=1,
-                             durable=True)
+                             durable="eventlog")
     eng1.run(max_waves=3)
     chk = tmp_path / "b" / "chk"
     # simulate a torn wave-4 write: copy wave-3 dir, remove the marker
     shutil.copytree(chk / "wave=3", chk / "wave=4")
     (chk / "wave=4" / "_COMMIT").unlink()
+    assert (chk / "wave=4" / "events").is_dir()
 
     eng2, _ = make_engine(spark, tmp_path / "b", works, edges, budget=1,
-                          durable=True)
+                          durable="eventlog")
     assert eng2.store.latest_wave() == 3
     resumed = eng2.run(resume=True)
     want = oracle_crawl(works, edges, budget=1, corpus_urls=urls)
     assert_match(resumed, want)
 
 
-def test_bucketed_state_parity_and_resume(spark, tmp_path):
-    """bucket_state=N: snapshot-mode state is written as bucketed
-    tables. Results identical to the oracle, resume works across
-    engine instances AND a fresh catalog (tables re-registered from
-    disk), and the re-read state scan is hash-partitioned — a state
-    join plans with no Exchange on the state side."""
+def test_resume_over_journal_gap_raises(spark, tmp_path):
+    """A committed wave whose events are gone must fail the resume
+    loudly: replaying the rest of the journal would drop that wave's
+    discovered URLs without a word (and a checkpoint dir in the removed
+    snapshot layout, which has no events at all, must be refused)."""
+    import shutil
+
     edges = chain_graph(n=6)
     works = [W("w1", "http://site0.test/0", max_depth=10)]
-    eng1, urls = make_engine(spark, tmp_path / "bk", works, edges, budget=1,
-                             durable=True, bucket_state=4)
-    partial = eng1.run(max_waves=2)
-    assert partial.waves == 2
+    eng, _ = make_engine(spark, tmp_path / "gap", works, edges, budget=1,
+                         durable="eventlog")
+    assert eng.run(max_waves=3).waves == 3
+    chk = tmp_path / "gap" / "chk"
+    one, every = tmp_path / "one" / "chk", tmp_path / "every" / "chk"
+    shutil.copytree(chk, one)
+    shutil.copytree(chk, every)
+    shutil.rmtree(one / "wave=2" / "events")
+    for d in every.glob("wave=*/events"):
+        shutil.rmtree(d)
 
-    # drop the catalog entries to simulate a fresh session: _read_state
-    # must re-register the bucketed tables from the files
-    for t in list(spark.catalog.listTables()):
-        if t.name.startswith("moca_chk_"):
-            spark.sql(f"DROP TABLE {t.name}")
+    for root, waves in ((tmp_path / "one", r"\[2\]"),
+                        (tmp_path / "every", r"\[0, 1, 2, 3\]")):
+        eng2, _ = make_engine(spark, root, works, edges, budget=1,
+                              durable="eventlog")
+        with pytest.raises(RuntimeError, match=waves) as err:
+            eng2.run(resume=True)
+        assert "snapshot-layout" in str(err.value).lower()
 
-    eng2, _ = make_engine(spark, tmp_path / "bk", works, edges, budget=1,
-                          durable=True, bucket_state=4)
-    resumed = eng2.run(resume=True)
-    want = oracle_crawl(works, edges, budget=1, corpus_urls=urls)
-    assert_match(resumed, want)
 
-    # plan shape: bucketed scan joins on STATE_KEYS with zero Exchange
-    # on the state side (only the probe side shuffles)
-    from moca_spark.crawl.engine import STATE_KEYS
-
-    frontier, seen = eng2.store.load_wave(eng2.store.latest_wave())
-    probe = seen.limit(1).localCheckpoint(eager=True)
-    bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    plan = (
-        seen.join(probe.select(*STATE_KEYS), STATE_KEYS, "left_semi")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+@pytest.mark.parametrize("removed", [{"durable": True}, {"use_bloom": True}])
+def test_removed_modes_raise(spark, tmp_path, removed):
+    """The full-state snapshot layout and the broadcast monolith bloom
+    were removed; asking for either fails instead of falling back."""
+    with pytest.raises(ValueError, match="removed"):
+        make_engine(spark, tmp_path, [], chain_graph(n=3), **removed)
 
 
 def test_partition_selector_by_domain(spark, tmp_path):
@@ -1216,33 +1202,6 @@ def test_links_prune_semi_join_fallback_parity(spark, tmp_path):
     assert_match(got, want)
 
 
-def test_resume_from_pre_round2_snapshot_without_key(spark, tmp_path):
-    """Backward compat: snapshots written before the _key state column
-    existed must still resume (the column is recomputed on load)."""
-    import shutil
-
-    edges = chain_graph(n=6)
-    works = [W("w1", "http://site0.test/0", max_depth=10)]
-    eng1, urls = make_engine(spark, tmp_path / "old", works, edges, budget=1,
-                             durable=True)
-    eng1.run(max_waves=2)
-    chk = tmp_path / "old" / "chk"
-    wave = max(int(p.name.split("=")[1]) for p in chk.glob("wave=*"))
-    # rewrite the latest committed state WITHOUT _key (old layout)
-    for sub in ("frontier", "seen"):
-        d = str(chk / f"wave={wave}" / sub)
-        old = spark.read.parquet(d).drop("_key").collect()
-        schema = spark.read.parquet(d).drop("_key").schema
-        shutil.rmtree(d)
-        spark.createDataFrame(old, schema).write.parquet(d)
-
-    eng2, _ = make_engine(spark, tmp_path / "old", works, edges, budget=1,
-                          durable=True)
-    resumed = eng2.run(resume=True)
-    want = oracle_crawl(works, edges, budget=1, corpus_urls=urls)
-    assert_match(resumed, want)
-
-
 def test_runid_trim_unsorted_work_ids(spark, tmp_path):
     """The run_id dictionary trim assigns ordinals in SORTED run_id
     order so ORDER BY (..., run_ord, url) equals the contract's
@@ -1341,3 +1300,7 @@ def test_round6_empty_slice_stops_without_isempty(spark, tmp_path):
     res = eng.run(max_waves=5)
     assert res.waves == 0
     assert res.frontier.count() == 0
+    # memory mode builds no store: nothing on disk, nothing to resume
+    assert eng.store is None and not (tmp_path / "chk").exists()
+    with pytest.raises(ValueError, match="memory-mode"):
+        eng.run(resume=True)

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from moca_spark.filters.bloom import BloomFilter, build_bloom_from_df
+from moca_spark.filters.bloom import BloomFilter
 from moca_spark.filters.cuckoo import CuckooFilter
 
 
@@ -28,13 +28,6 @@ def test_bloom_serialize_merge():
     b.add_many(kb)
     merged = BloomFilter.from_bytes(a.to_bytes()).merge(b)
     assert merged.contains_many(np.arange(0, 1000, dtype=np.int64)).all()
-
-
-def test_bloom_distributed_build(spark):
-    df = spark.range(0, 5000, 1, 4).selectExpr("xxhash64(id) as url_hash")
-    bf = build_bloom_from_df(df, "url_hash", n_expected=5000)
-    keys = np.array([r.url_hash for r in df.collect()], dtype=np.int64)
-    assert bf.contains_many(keys).all()
 
 
 def test_cuckoo_add_contains_delete():

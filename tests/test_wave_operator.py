@@ -135,37 +135,6 @@ def test_slice_split_single_exchange_for_frontier(spark):
     assert p_sl.count("Exchange hashpartitioning") == 1, p_sl
 
 
-def test_slice_split_dedup_modes_agree(spark):
-    """Every SLICE_DEDUP_MODE (the default plus the measured-and-kept
-    A/B controls, tools/slice_dedup_ab.py) must produce the identical
-    (sliced, rest) — on the engine-shaped frontier (_key column, host
-    payload) and under the default HOST_KEY_MODE, where the derived
-    _hk group column must not demote the aggregate forms (they group
-    by host AND _hk — same groups, host kept as payload)."""
-    from moca_spark.operators import wave
-
-    fr = dup_frontier(spark, 300, 11, 5).withColumn(
-        "_key", F.xxhash64(F.concat_ws("\x00", "run_id", "url")))
-
-    def run(mode):
-        old = wave.SLICE_DEDUP_MODE
-        wave.SLICE_DEDUP_MODE = mode
-        try:
-            sliced, rest = slice_split(fr, 4, n_salts=8)
-            cols = ["host", "url", "depth", "seq", "run_id", "_key"]
-            return (
-                sorted(tuple(r) for r in
-                       sliced.select("rank", *cols).collect()),
-                sorted(tuple(r) for r in rest.select(*cols).collect()),
-            )
-        finally:
-            wave.SLICE_DEDUP_MODE = old
-
-    want = run("window_keyled")
-    for mode in ("window", "sortagg", "hashagg_packed"):
-        assert run(mode) == want, mode
-
-
 def test_topk_duplicate_order_keys(spark):
     """Ties on (depth, seq) resolve deterministically by (run_id, url)
     — idempotent-add semantics of the scheduler (J6)."""

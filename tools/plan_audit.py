@@ -86,7 +86,7 @@ def main() -> int:
     check("wave slice: two window stages (salted + exact)", p.count("RunningWindowFunction") >= 2 or p.count("Window") >= 2)
     check("wave slice: no BatchEvalPython", "BatchEvalPython" not in p)
 
-    # 3b. LSM frontier slice_split (engine frontier_lsm hot path): the
+    # 3b. LSM frontier slice_split (the engine hot path): the
     #     O(frontier) side must cross exactly ONE exchange — the
     #     (host, salt) repartition feeds both the dedup window and the
     #     phase-1 rank window (their partition keys are supersets), and

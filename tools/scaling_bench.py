@@ -6,7 +6,8 @@ in fresh JVMs, and report throughput at both plus scaling efficiency
     eff = (thr_4N / thr_N) / 4        (>= 0.8 required)
 
 Writes BENCH_RUN.md (raw last-run artifact; BENCH.md is the curated
-analysis that pools sessions). Usage: python tools/scaling_bench.py [n_frontier]
+analysis that pools sessions).
+Usage: python tools/scaling_bench.py [n_frontier] [pairs] [N] [4N]
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ sys.path.insert(0, {repo!r})
 from moca_spark.session import get_spark
 from moca_spark.bench_core import frontier_schedule_dedup
 cores = int(sys.argv[1]); n = int(sys.argv[2]); reps = int(sys.argv[3])
-mode = sys.argv[4] if len(sys.argv) > 4 else "lsm"
 # partition count is a property of the JOB (fixed), parallelism of the
 # "cluster" (varies) — matching how a real N->4N executor comparison
 # holds the dataset layout constant. Inputs are materialized to parquet
@@ -38,7 +38,7 @@ runs = []
 for i in range(reps + 1):
     runs.append(frontier_schedule_dedup(spark, n_frontier=n, n_candidates=n,
                                         n_hosts=20000, partitions=64,
-                                        materialize_dir=tmp, mode=mode))
+                                        materialize_dir=tmp))
     # release the previous rep's checkpoint blocks before the next one
     # (the heap otherwise accumulates reps x state and 8-thread runs
     # degrade rep over rep)
@@ -74,7 +74,7 @@ def default_heap_gb(cores: int) -> int:
     return max(min(want, int(total_gb * 0.75)), 2)
 
 
-def run(cores: int, n: int, reps: int = 3, mode: str = "lsm") -> dict:
+def run(cores: int, n: int, reps: int = 3) -> dict:
     env = dict(os.environ, MOCA_DRIVER_MEM=os.environ.get(
         "MOCA_DRIVER_MEM", f"{default_heap_gb(cores)}g"))
     # co-tenant exposure per leg: the 1-min load average before and
@@ -86,7 +86,7 @@ def run(cores: int, n: int, reps: int = 3, mode: str = "lsm") -> dict:
     load_pre = os.getloadavg()[0]
     out = subprocess.run(
         [sys.executable, "-c", CHILD.format(repo=REPO), str(cores), str(n),
-         str(reps), mode],
+         str(reps)],
         capture_output=True, text=True, timeout=2400, env=env,
     )
     load_post = os.getloadavg()[0]
@@ -116,31 +116,22 @@ def _ceiling() -> dict:
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
     pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    with_control = len(sys.argv) > 3 and sys.argv[3] == "control"
     # optional N/4N core pair (default 8->32). A second pair BELOW the
     # box's bandwidth saturation point (4->16) separates "the algorithm
     # stops scaling" from "the box does": the Spark-free CPU ceiling
     # itself is 0.65-0.76 at 8->32 on this VM, so an at-or-above-
     # ceiling 4->16 result is evidence the shortfall is machine-bound.
-    lo = int(sys.argv[4]) if len(sys.argv) > 4 else 8
-    hi = int(sys.argv[5]) if len(sys.argv) > 5 else 4 * lo
+    lo = int(sys.argv[3]) if len(sys.argv) > 3 else 8
+    hi = int(sys.argv[4]) if len(sys.argv) > 4 else 4 * lo
     ceil_pre = _ceiling()
     # Interleaved A/B pairs (the canonical protocol, see BENCH.md run
     # history): isolated sessions swing 0.45-1.01 on identical code
     # from page-cache/clock drift; alternating 8/32 in one session and
     # taking medians cancels it.
     runs8, runs32 = [], []
-    ctl8, ctl32 = [], []
     for _ in range(pairs):
         runs8.append(run(lo, n, reps=3))
         runs32.append(run(hi, n, reps=3))
-        if with_control:
-            # merge-mode (round-2 frontier shape) control pair in the
-            # SAME session: if lsm and merge efficiencies track each
-            # other and the session ceiling, the residual gap is the
-            # box, not the code
-            ctl8.append(run(lo, n, reps=3, mode="merge"))
-            ctl32.append(run(hi, n, reps=3, mode="merge"))
     ceil_post = _ceiling()
     med = lambda rs: sorted(rs, key=lambda r: r["urls_per_sec"])[len(rs) // 2]  # noqa: E731
     r8, r32 = med(runs8), med(runs32)
@@ -152,10 +143,6 @@ def main() -> None:
     ratio = hi / lo
     eff = (thr32 / thr8) / ratio
     ceil = [c.get("ceiling_efficiency") for c in (ceil_pre, ceil_post)]
-    ctl_eff = None
-    if ctl8:
-        c8, c32 = med(ctl8), med(ctl32)
-        ctl_eff = round(c32["urls_per_sec"] / c8["urls_per_sec"] / ratio, 3)
     heap_lo, heap_hi = default_heap_gb(lo), default_heap_gb(hi)
     md = f"""# BENCH — north-star kernel scaling evidence
 
@@ -164,7 +151,7 @@ executors. Sandbox form (driver instruction): same job, same input, at
 `local[{lo}]` (N) and `local[{hi}]` (4N), fresh JVM each.
 
 Job: frontier schedule+dedup kernel (`moca_spark/bench_core.py`),
-mirroring the engine's current hot path (frontier_lsm) — LSM-frontier
+mirroring the engine's hot path — LSM-frontier
 slice_split (dedup + salted top-K politeness slice + rest split in the
 ONE (host, salt) exchange), candidate consolidation, admission join
 against the hash-key-partitioned+sorted seen BASE (exchange-free/
@@ -196,8 +183,7 @@ subject is N->4N EXECUTORS and executors bring their heaps with them
 
 Session VM ceiling (Spark-free pure-CPU control, tools/cpu_control.py,
 measured before/after the pairs): {ceil} — normalized efficiency
-= {eff:.3f} / ceiling. Merge-mode control pairs (same session):
-{('eff = ' + str(ctl_eff)) if ctl_eff is not None else 'not run'}.
+= {eff:.3f} / ceiling.
 
 Per-leg 1-min load averages [pre, post] (our leg contributes <= its
 core count; load >> cores = co-tenant burst DURING that leg):
@@ -223,10 +209,6 @@ Notes
            "ceiling_pre": ceil[0], "ceiling_post": ceil[1],
            "all8": r8["all_thr"], "all32": r32["all_thr"],
            "loads": loads}
-    if ctl_eff is not None:
-        out["merge_control_eff"] = ctl_eff
-        out["merge_all8"] = [r["urls_per_sec"] for r in ctl8]
-        out["merge_all32"] = [r["urls_per_sec"] for r in ctl32]
     print(json.dumps(out))
 
 
