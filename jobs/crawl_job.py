@@ -93,12 +93,25 @@ def main() -> None:
         # demo runs on the PRODUCTION corpus layout: bucketed+sorted on
         # image_id (write_corpus_bucketed), so the fetch join is
         # bucket-prunable at any slice size out of the box
-        from moca_spark.store.lakehouse import write_corpus_bucketed
+        from moca_spark.store.lakehouse import (
+            read_corpus_bucketed,
+            write_corpus_bucketed,
+        )
 
         args.corpus_buckets = args.corpus_buckets or 16
-        images = write_corpus_bucketed(
-            spark, images_distributed(spark, urls),
-            f"{args.checkpoint}/demo-corpus", n_buckets=args.corpus_buckets)
+        corpus = f"{args.checkpoint}/demo-corpus"
+        # a corpus an earlier run wrote with this bucket count is
+        # reused (its meta file is written last, after the data): a
+        # resumed demo fetches from the corpus its journal was written
+        # against, and does not pay the write again
+        try:
+            with open(f"{corpus}/_corpus_meta.json") as f:
+                reuse = json.load(f).get("n_buckets") == args.corpus_buckets
+        except (OSError, ValueError):
+            reuse = False
+        images = (read_corpus_bucketed(spark, corpus) if reuse else
+                  write_corpus_bucketed(spark, images_distributed(spark, urls),
+                                        corpus, n_buckets=args.corpus_buckets))
         works = [Work("demo", "http://host0.test/p0", CriteriaSpec(max_depth=3))]
     else:
         links = spark.read.parquet(args.links)

@@ -2,12 +2,15 @@
 
 The north-star metric (BASELINE.json) is *frontier URLs
 scheduled+deduped per second* on a synthetic Zipf-skewed frontier. The
-kernel below is exactly the per-wave hot path of the crawl engine:
+kernel below calls the crawl engine's own wave phases
+(crawl/engine.py), so it times the engine's hot path, not a copy:
 
-  schedule: dedup + salted two-phase top-K per host + split
-            (operators/wave.py slice_split)
-  dedup:    candidate consolidation + anti-join vs seen (J1/J2)
-  merge:    the lazy rest ∪ fresh frontier union (engine step 6)
+  schedule: slice_phase (dedup + salted two-phase top-K per host +
+            split, operators/wave.py slice_split) + seen_delta
+  dedup:    consolidate_admit (candidate consolidation + admission vs
+            the seen state, J1/J2) + merge (the lazy rest ∪ fresh
+            frontier union)
+  fold:     SeenState.fold, amortized over fold_every waves
 
 Inputs are generated lazily with ``spark.range`` (sources/synth.py
 scale_frontier) — zero driver memory, any scale. Work is forced with a
@@ -21,8 +24,17 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from moca_spark.crawl.engine import (
+    CrawlEngine,
+    SeenState,
+    _aqe_off,
+    consolidate_admit,
+    fold_frontier,
+    merge,
+    seen_delta,
+    slice_phase,
+)
 from moca_spark.functions.urls import url_host
-from moca_spark.operators.wave import slice_split
 from moca_spark.sources.synth import scale_frontier
 
 
@@ -49,15 +61,6 @@ def _free_rdds_since(spark: SparkSession, before: set[int]) -> None:
             pass
 
 
-STATE_KEYS = ["_key", "run_id", "url"]
-
-
-def _with_key(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "_key", F.xxhash64(F.concat_ws("\x00", F.col("run_id"), F.col("url")))
-    )
-
-
 def frontier_schedule_dedup(
     spark: SparkSession,
     n_frontier: int = 2_000_000,
@@ -67,70 +70,68 @@ def frontier_schedule_dedup(
     partitions: int = 64,
     materialize_dir: str | None = None,
     fold_every: int = 8,
-    dedup_aqe: bool = False,
 ) -> dict:
     """One full scheduling+dedup wave at scale; returns throughput.
 
-    Mirrors the engine's current hot path exactly (crawl/engine.py):
-    hash-key-led state keys (STATE_KEYS), the seen BASE pre-partitioned
-    and pre-sorted by those keys (as _fold_seen leaves it) so the
-    admission join runs exchange-free/sort-free on the base side, the
-    periodic seen-LSM fold timed separately and amortized over
-    ``fold_every`` waves, and the LSM frontier: it arrives as last
-    wave's deduped rest PLUS an unmerged fresh layer (n_frontier//8
-    rows — steady-state admit ratio); slice_split dedupes+slices+splits
-    it in ONE exchange, and the "merge" is a lazy union of rest and
-    fresh (forced, but exchange-free).
+    The timed region calls the crawl engine's own phases
+    (crawl/engine.py) on synthetic state, on the big-state exact path:
+    slice_phase and seen_delta (schedule), consolidate_admit and merge
+    (dedup+merge), and SeenState.fold (timed once, amortized over
+    ``fold_every`` waves). The state is what previous waves leave
+    behind: the seen base folded (hash-partitioned and sorted by the
+    state keys, so the admission join runs exchange-free/sort-free on
+    the base side) and the LSM frontier as last wave's deduped rest
+    PLUS an unmerged fresh layer (n_frontier//8 rows — steady-state
+    admit ratio). The candidates stand in for the expand output, and
+    consolidate_admit fuses their consolidation into the admission
+    (the engine checkpoints them first only on bloom waves and on
+    slices above ``expand_broadcast_max``, where the expand join keeps
+    AQE).
 
     With ``materialize_dir`` the synthetic inputs are written to parquet
     first (untimed) and state tables are prepared from table scans —
     the cluster-faithful shape. State prep (the fold result carried
-    from previous waves) is untimed; its per-wave amortized cost is
-    measured by timing one real fold and dividing by fold_every."""
-    # engine hot-loop schema (round 5, engine._trim_state/
-    # _trim_runids): rows carry the 64-bit politeness key
-    # instead of the host string AND the dense run ordinal instead of
-    # the run_id string (the _key is still computed from the STRING —
-    # the engine computes it at creation sites where the string
-    # exists); both strings are re-derived on the budget-bounded slice
+    from previous waves) is untimed."""
+    # engine hot-loop schema (engine._trim_state): rows carry the
+    # 64-bit politeness key instead of the host string AND the dense
+    # run ordinal instead of the run_id string (the _key is computed
+    # from the STRING, as at the engine's creation sites); slice_phase
+    # re-derives both strings on the budget-bounded slice
     _rdds_at_entry = _persistent_rdd_ids(spark)
 
-    def _trim(df):
-        if "host" in df.columns:
-            df = df.withColumn("host_key", F.xxhash64("host")).drop("host")
-        return df.withColumn("run_id", F.lit(0))
+    def _state(df):
+        return (df.withColumn("run_id", F.lit("bench"))
+                .withColumn("_key", CrawlEngine._seen_key())
+                .withColumn("run_id", F.lit(0)))
 
-    frontier = _trim(_with_key(
-        scale_frontier(spark, n_frontier, n_hosts, partitions, seed=1)
-        .withColumn("run_id", F.lit("bench"))
-    ))
+    def _trim_host(df):
+        return df.withColumn("host_key", F.xxhash64("host")).drop("host")
+
+    frontier = _state(
+        scale_frontier(spark, n_frontier, n_hosts, partitions, seed=1))
     # seen = half the candidate id space -> ~50% dedup hit rate
-    seen = _trim(_with_key(
+    seen = _state(
         scale_frontier(spark, n_candidates // 2, n_hosts, partitions, seed=2)
-        .select("url", F.col("depth").alias("best_depth"))
-        .withColumn("run_id", F.lit("bench"))
-    ))
-    candidates = _with_key(
+        .select("url", F.col("depth").alias("best_depth")))
+    # the expand output's shape (engine._expand): the run_id string
+    # plus the ordinal as a real column — trimming after the parquet
+    # round-trip instead would leave a foldable literal whose
+    # constant-folded consolidation partitioning (_key, 0, url) can
+    # never satisfy the admission join's clustering, forcing a second
+    # O(candidates) exchange the engine does not pay (round 6)
+    candidates = (
         scale_frontier(spark, n_candidates, n_hosts, partitions, seed=2)
-        .select("url", "host", "depth",
+        .select(F.lit("bench").alias("run_id"), F.lit(0).alias("_run_ord"),
+                F.col("url").alias("dst_url"),
+                F.col("host").alias("dst_host"), "depth",
                 (F.col("seq") % 100 + 1).alias("parent_rank"))
-        .withColumn("run_id", F.lit("bench"))
-    ).withColumn("run_id", F.lit(0))
-    # candidates enter the timed region ALREADY in ord space (the
-    # engine's _run_ord is a real column carried from the slice) —
-    # trimming after the parquet round-trip instead would leave a
-    # foldable literal whose constant-folded consolidation partitioning
-    # (_key, 0, url) can never satisfy the admission join's clustering,
-    # forcing a second O(candidates) exchange the engine does not pay
-    # (round 6)
+    )
     # steady-state fresh layer riding unmerged on the LSM frontier
     # (~admit ratio of a mid-crawl wave); not counted in `processed`
     # (conservative: the kernel does MORE rows per reported URL)
-    fresh_prev = _trim(_with_key(
+    fresh_prev = _state(
         scale_frontier(spark, max(n_frontier // 8, 1), n_hosts, partitions,
-                       seed=3)
-        .withColumn("run_id", F.lit("bench"))
-    ))
+                       seed=3))
     if materialize_dir:
         # The synthetic inputs are deterministic (fixed seeds/sizes),
         # so when the SAME dir is passed for several reps (bench.py
@@ -171,107 +172,40 @@ def frontier_schedule_dedup(
         fresh_prev = spark.read.parquet(f"{materialize_dir}/fresh_prev")
 
     # ---- state prep (untimed): the shape previous waves left behind —
-    # the seen base KEYS-partitioned, KEYS-sorted, checkpointed with
-    # AQE off so partitioning/ordering survive into this wave's plans;
-    # the frontier a deduped claim-free checkpoint (last slice_split's
-    # ranked rest) plus the unmerged fresh layer
-    aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    base = (
-        seen.groupBy(*STATE_KEYS)
-        .agg(F.min("best_depth").alias("best_depth"))
-        .sortWithinPartitions(*STATE_KEYS)
-        .localCheckpoint(eager=True)
-    )
-    fr_dedup = (
-        frontier.groupBy(*STATE_KEYS)
-        .agg(F.min(F.struct("depth", "seq")).alias("m"),
-             F.first("host_key").alias("host_key"))
-        .select("_key", "run_id", "url", "host_key",
-                F.col("m.depth").alias("depth"), F.col("m.seq").alias("seq"))
-    )
-    fr_state = fr_dedup.localCheckpoint(eager=True).unionByName(
-        fresh_prev.select(
-            "_key", "run_id", "url", "host_key", "depth", "seq")
-        .localCheckpoint(eager=True)
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    # the seen base folded (SeenState.fold: KEYS-partitioned,
+    # KEYS-sorted, AQE-off checkpoint); the frontier a deduped
+    # claim-free checkpoint (last slice_split's ranked rest) plus the
+    # unmerged fresh layer
+    seen_state = SeenState(seen.filter(F.lit(False)), [seen])
+    seen_state.fold()
+    with _aqe_off(spark):
+        fr_state = (
+            _trim_host(fold_frontier(frontier)).localCheckpoint(eager=True)
+            .unionByName(_trim_host(fresh_prev).localCheckpoint(eager=True))
+        )
 
+    # SCHEDULE: politeness-bounded per-host queue heads (AQE on);
+    # seen_delta's count is the action that materializes the slice
     t0 = time.time()
-    # SCHEDULE: politeness-bounded per-host priority-queue heads (AQE
-    # on); cached like the engine does — the slice is consumed by the
-    # split, the seen delta and (in the engine) the fetch join.
-    # eager=False mirrors the engine (round 6): the split-point
-    # checkpoint materializes inside the first full-scan action on
-    # ``sliced`` (the forced schedule below / the engine's seen-delta
-    # count), not as a separate job
-    sliced, rest = slice_split(fr_state, budget, n_salts=16, eager=False)
-    # engine._rehost/_rerun_id: the trimmed hot loop re-derives the
-    # host + run_id strings on the budget-bounded slice (fetch and the
-    # journal want them) — timed, part of the wave's real work
-    sliced = (
-        sliced.withColumn("host", url_host(F.col("url")))
-        .withColumn("run_str", F.element_at(
-            F.array(F.lit("bench")), F.col("run_id") + 1))
-        .cache()
-    )
-    _force(sliced)
-    t_sched = time.time() - t0
-
-    t1 = time.time()
-    # DEDUP+MERGE (AQE off, as in engine._materialize): consolidate per
-    # url, classify vs the untouched base, min-merge the frontier
-    spark.conf.set("spark.sql.adaptive.enabled",
-                   "true" if dedup_aqe else "false")
+    sliced, rest = slice_phase(fr_state, budget, 16, url_host, ["bench"])
     try:
-        # engine cand2 (trim mode): _key was computed from the STRING at
-        # creation; the consolidation groups by the ordinal — the run_id
-        # string never enters the exchange. Round 6 (lockstep with
-        # engine._step): the groupBy keys are EXACTLY the state keys —
-        # host is a pure function of url and rides as first() — so the
-        # aggregate's output partitioning satisfies the admission
-        # join's clustering and its sort doubles as the join sort: the
-        # candidates cross ONE exchange between consolidation and
-        # admission instead of two.
-        cand2 = (  # candidates are already ord-space (see gen above)
-            candidates.groupBy("_key", "run_id", "url")
-            .agg(F.min(F.struct("depth", "parent_rank")).alias("m"),
-                 F.first("host").alias("host"))
-            .select("_key", "run_id", "url", "host",
-                    F.col("m.depth").alias("depth"),
-                    F.col("m.parent_rank").alias("parent_rank"))
-        )
-        fresh = (
-            cand2.join(base, STATE_KEYS, "left")
-            .filter(F.col("best_depth").isNull() |
-                    (F.col("depth") < F.col("best_depth")))
-            .select("_key", "run_id", "url",
-                    # engine fresh_cols: admits carry the hash only
-                    F.xxhash64("host").alias("host_key"),
-                    "depth",
-                    (F.lit(1 << 32) + F.col("parent_rank")).alias("seq"))
-        )
-        # MERGE — force the lazy rest∪fresh (exchange-free — the
-        # engine consumes it inside next wave's slice exchange, so even
-        # this force over-charges the kernel by one read)
-        _force(rest.unionByName(fresh))
+        seen_delta(sliced, seen_state)
+        t_sched = time.time() - t0
+
+        # DEDUP+MERGE: consolidate, admit vs base + this wave's delta,
+        # then force the lazy rest ∪ fresh (the engine consumes it
+        # inside next wave's slice exchange, so this force over-charges
+        # the kernel by one read)
+        t1 = time.time()
+        fresh = consolidate_admit(candidates, seen_state, 1, url_host)
+        _force(merge(rest, fresh))
         t_dedup = time.time() - t1
 
-        # FOLD (timed once, amortized /fold_every): the LSM compaction
-        # of the seen base with this wave's consume delta
+        # FOLD (timed once, amortized /fold_every)
         t2 = time.time()
-        delta = sliced.select("_key", "run_id", "url",
-                              F.col("depth").alias("best_depth"))
-        folded = (
-            base.unionByName(delta)
-            .groupBy(*STATE_KEYS)
-            .agg(F.min("best_depth").alias("best_depth"))
-            .sortWithinPartitions(*STATE_KEYS)
-        )
-        _force(folded)
+        seen_state.fold()
         t_fold = time.time() - t2
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
         sliced.unpersist()
         # free this rep's checkpointed state (untimed; see
         # _free_rdds_since) so later reps and bench phases don't run

@@ -2,36 +2,38 @@
 frontier, all DataFrame ops.
 
 One wave (= the reference's "every host's current task makes progress
-for one politeness window") does:
+for one politeness window") is ``CrawlEngine._step``, which runs these
+phases in order, each with explicit inputs and outputs:
 
-  1. SLICE    top-budget rows per host in (depth, seq) order — the
-               per-host exclusive politeness-bounded queue head
-               (PartitionScheduler + Minion FIFO; operators/wave.py);
-  2. FETCH    left equi-join slice -> images corpus on image_id
-               (sha1 of the canonical URL) — the sandbox stand-in for
-               HTTP GET (Minion.scala:110-117); missing row = fetch
-               failure (NotFetched path — URL is consumed, no links);
-  3. SEEN     min-depth merge of fetched URLs into the seen table
-               (url_depth + downloaded sets, PgRunControl.scala:344-364);
-  4. EXPAND   parents with depth < max_depth join the links graph —
-               AHref extraction (AHrefCriteria.scala:16-21), then the
-               compiled criteria filter chain (criteria/stages.py);
-  5. DEDUP    consolidate candidates per (run, url) keeping min
-               (depth, parent_rank); optional bloom pre-filter, then
-               exact anti-join-style classification vs seen — admit
-               unseen or strictly-smaller depth (re-crawl, T8);
-  6. MERGE    frontier = (rest of frontier) ∪ fresh, kept unmerged: the
-               next wave's slice exchange keeps min (depth, seq) per
-               (run, url) — J2 frontier dedup + depth replacement;
-  7. COMMIT   append results+metrics and the wave's events
-               (store/lakehouse.py) — the Akka journal analog. Two
-               layouts: memory (durable=False: localCheckpoint, no
-               resume — tests/bench) or the append-only event journal
-               (durable="eventlog", the default): O(delta) durable
-               writes per wave while the live state chains in memory
-               via localCheckpoint; the journal is re-aggregated only
-               on resume/compaction, and a compaction is the snapshot
-               (EventLogStore docstring).
+  slice_phase   top-budget rows per host in (depth, seq) order — the
+                per-host politeness-bounded queue head (PartitionScheduler
+                + Minion FIFO; operators/wave.py) — and the rest;
+  seen_delta    the slice's min-depth rows pushed onto the seen state
+                (SeenState; PgRunControl.scala:344-364);
+  _fetch        left equi-join slice -> images corpus on image_id, the
+                stand-in for HTTP GET (Minion.scala:110-117); missing
+                row = fetch failure (URL consumed, no links);
+  _expand       parents with depth < max_depth join the links graph
+                (AHrefCriteria.scala:16-21), then the compiled criteria
+                chain (criteria/stages.py);
+  consolidate_admit  min (depth, parent_rank) per (run, url); optional
+                bloom pre-filter, then exact classification vs seen —
+                admit unseen or strictly-smaller depth (re-crawl, T8);
+  merge         frontier = rest ∪ fresh, unmerged: the next slice's
+                exchange keeps min (depth, seq) per (run, url) (J2);
+  _commit       append results+metrics and the wave's events
+                (store/lakehouse.py, the Akka journal analog), fold the
+                seen deltas every ``fold_every`` waves. Memory mode
+                (durable=False: localCheckpoint, no resume — tests/
+                bench) or the append-only event journal (durable=
+                "eventlog", the default): O(delta) writes per wave while
+                the live state chains in memory via localCheckpoint,
+                re-aggregated only on resume/compaction, and a
+                compaction is the snapshot (EventLogStore docstring).
+
+bench_core.frontier_schedule_dedup (the north-star kernel) runs
+slice_phase, seen_delta, consolidate_admit, merge and SeenState.fold on
+synthetic state.
 
 Scale notes (the 100 TB story):
 - No unbounded per-host window anywhere: slicing is salted two-phase
@@ -42,7 +44,7 @@ Scale notes (the 100 TB story):
   expand path; the links-graph join broadcasts the (small) parent side
   at runtime.
 - The SEEN table (the 10^10 monster) is an LSM: folded base + per-wave
-  deltas (_fold_seen/_admit_unseen). The base is hash-partitioned and
+  deltas (SeenState). The base is hash-partitioned and
   sorted by STATE_KEYS, preserved through AQE-off localCheckpoints
   (_materialize), so the per-wave admission join runs with ZERO
   exchange and ZERO sort on the base side (tools/plan_audit.py asserts
@@ -64,10 +66,9 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-import tempfile
 import zlib
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -110,6 +111,281 @@ def fold_frontier(frontier: DataFrame) -> DataFrame:
                 F.col("m.depth").alias("depth"),
                 F.col("m.seq").alias("seq"))
     )
+
+
+@contextmanager
+def _aqe_off(spark: SparkSession):
+    """Plan with AQE off inside the block, restoring the conf on exit
+    and on error (session-global; see _materialize). Also what makes a
+    ``localCheckpoint(eager=False)`` actually lazy: under AQE, planning
+    the checkpoint materializes every intermediate query stage eagerly
+    (getFinalPhysicalPlan)."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def _materialize(df: DataFrame, sort: bool = False,
+                 aqe_off: bool = True) -> DataFrame:
+    """localCheckpoint planned with AQE OFF: under AQE the
+    checkpointed LogicalRDD reports UnknownPartitioning (the
+    AdaptiveSparkPlan hides the final plan's partitioning), so every
+    later state join would re-shuffle the big side. Planned without
+    AQE, the checkpoint keeps outputPartitioning AND outputOrdering
+    — downstream same-key joins/aggregations skip the exchange (and
+    with ``sort=True`` the sort-merge sort) on this side entirely.
+    State-merge plans are uniform hash-keyed shapes; they don't need
+    AQE's skew handling (the expand/slice stages keep AQE).
+
+    NOTE: this briefly mutates the session-global AQE conf — the
+    engine assumes a single-threaded driver (one crawl loop per
+    SparkSession, the deployment shape of jobs/crawl_job.py). A
+    concurrent query planned on the same session during the window
+    would plan without AQE; run concurrent workloads on their own
+    SparkSession (``spark.newSession()``) if needed.
+
+    ``aqe_off=False`` (round 6) keeps AQE for checkpoints whose
+    partitioning claim nothing downstream needs — e.g. the admit
+    output while the seen state is small enough that its joins
+    broadcast (SeenState.small): AQE then coalesces the tiny stages
+    instead of running full-width exchanges."""
+    if sort:
+        df = df.sortWithinPartitions(*STATE_KEYS)
+    if not aqe_off:
+        return df.localCheckpoint(eager=True)
+    with _aqe_off(df.sparkSession):
+        return df.localCheckpoint(eager=True)
+
+
+@dataclass
+class SeenState:
+    """The seen-state LSM: the (monotonically growing, 10^10-target)
+    seen table kept as a big folded ``base`` plus a stack of per-wave
+    consume ``deltas``; the deltas fold into the base every
+    ``fold_every`` waves. Per-wave work on the seen side is then
+    O(delta) — the base is never unioned or re-shuffled per wave.
+
+    ``rows_bound`` (round 6) is an exact upper bound on the state's row
+    count — Σ of the per-wave slice counts the engine already measures;
+    None when the size is unknown (a resumed state). While it stays
+    under ``broadcast_max`` the admission joins BROADCAST the base and
+    delta stack (guide §3.1: hint what you can prove small) and the
+    admit materialization keeps AQE — coalesced tiny stages instead of
+    full-width AQE-off exchanges. Once it crosses (the 10^10
+    trajectory, immediately on any real crawl) the exchange-free
+    sorted-base sort-merge path is used unchanged. Row bound, not
+    bytes: ~100 B/row ⇒ 500k rows ~ 50 MB broadcast."""
+
+    base: DataFrame
+    deltas: list[DataFrame] = field(default_factory=list)
+    rows_bound: int | None = None
+    broadcast_max: int = 0
+
+    def small(self) -> bool:
+        """True while the state is PROVABLY tiny: the admission joins
+        may broadcast and the admit materialization may keep AQE."""
+        return self.rows_bound is not None and self.rows_bound <= self.broadcast_max
+
+    def push(self, delta: DataFrame, n_rows: int) -> None:
+        """Stack one wave's consume delta of ``n_rows`` rows."""
+        self.deltas.append(delta)
+        if self.rows_bound is not None:
+            self.rows_bound += n_rows
+
+    def admit_unseen(self, df: DataFrame, keep_flag: bool = False) -> DataFrame:
+        """The J1/T8 admission rule over the base+delta seen state:
+        keep rows never seen, or seen only at a strictly larger depth
+        (re-crawl). One left join against the (big) base — which is
+        hash-partitioned AND sorted by STATE_KEYS from the fold, so it
+        joins with no exchange and no sort — and one against the
+        (small) delta stack. While the whole state is provably small
+        both sides take an explicit broadcast hint instead — same rows
+        out, zero exchange and zero sort on the candidate side."""
+        small = self.small()
+        base = self.base.withColumnRenamed("best_depth", "_bd_base")
+        out = df.join(F.broadcast(base) if small else base,
+                      STATE_KEYS, "left")
+        if self.deltas:
+            d = self.deltas[0]
+            for extra in self.deltas[1:]:
+                d = d.unionByName(extra)
+            d_min = d.groupBy(*STATE_KEYS).agg(
+                F.min("best_depth").alias("_bd_delta")
+            )
+            out = out.join(F.broadcast(d_min) if small else d_min,
+                           STATE_KEYS, "left")
+        else:
+            out = out.withColumn("_bd_delta", F.lit(None).cast("int"))
+        bd = F.least("_bd_base", "_bd_delta")
+        out = out.filter(bd.isNull() | (F.col("depth") < bd))
+        if keep_flag:  # re-crawl marker (cuckoo eviction needs it)
+            out = out.withColumn("_was_seen", bd.isNotNull())
+        return out.drop("_bd_base", "_bd_delta")
+
+    def fold(self) -> DataFrame:
+        """Fold the pending deltas into the base (min best_depth per
+        (run, url)) — the LSM compaction. The base is already
+        hash-partitioned by STATE_KEYS from the previous fold, so only
+        the deltas shuffle; the rewrite cost is O(|seen|) local work,
+        amortized over ``fold_every`` waves. Returns the new base."""
+        if not self.deltas:
+            return self.base
+        merged = self.base
+        for d in self.deltas:
+            merged = merged.unionByName(d)
+        self.base = _materialize(
+            merged.groupBy(*STATE_KEYS)
+            .agg(F.min("best_depth").alias("best_depth")),
+            sort=True,
+        )
+        self.deltas = []
+        return self.base
+
+
+def _rehost(df: DataFrame, partition_selector,
+            drop_key: bool = False) -> DataFrame:
+    """Re-derive the host string of a trimmed frame from its url
+    (host ≡ partition_selector(url) for every frontier row — both
+    creation sites compute exactly that)."""
+    out = df.withColumn("host", partition_selector(F.col("url")))
+    return out.drop("host_key") if drop_key else out
+
+
+def _rerun_id(df: DataFrame, run_ords: list[str] | None) -> DataFrame:
+    """Reverse of CrawlEngine._trim_runids: re-attach the run_id STRING
+    from the carried ordinal (O(1) array index per row). The ordinal is
+    KEPT as ``_run_ord`` so ord-space projections (seen delta,
+    candidate consolidation) stay string-free; explicit-column
+    boundary selects never pick it up."""
+    if run_ords is None or dict(df.dtypes).get("run_id") == "string":
+        return df
+    arr = F.array(*[F.lit(r) for r in run_ords])
+    return (
+        df.withColumnRenamed("run_id", "_run_ord")
+        .withColumn("run_id", F.element_at(arr, F.col("_run_ord") + 1))
+    )
+
+
+# -- the wave's phases shared with the north-star kernel ------------------
+
+def slice_phase(frontier: DataFrame, budget: int, n_salts: int,
+                partition_selector, run_ords: list[str] | None,
+                ) -> tuple[DataFrame, DataFrame]:
+    """(sliced, rest): the per-host politeness-bounded queue heads and
+    the rest of the frontier — dedup + slice + split in the slice's own
+    exchange; rest is a filter over the checkpointed ranked split
+    point. eager=False: the split-point checkpoint materializes inside
+    seen_delta's count (a full scan of sliced), not as its own job
+    (round 6).
+
+    The hot loop dropped the host + run_id strings (_trim_state);
+    everything downstream of the slice (fetch politeness groups,
+    results/events schemas, metrics) wants them — re-derived on the
+    budget-bounded slice only (the ordinal rides along as _run_ord for
+    the ord-space seen delta). ``sliced`` is cached: the caller
+    unpersists it at the end of the wave."""
+    sliced, rest = slice_split(frontier, budget, n_salts, eager=False)
+    sliced = _rehost(_rerun_id(sliced, run_ords), partition_selector).cache()
+    return sliced, rest
+
+
+def seen_delta(sliced: DataFrame, seen: SeenState) -> tuple[DataFrame, int]:
+    """(delta, n_rows): the slice's consume delta, pushed onto ``seen``
+    unless empty. Its count job is the wave's cache-populating action
+    on the slice, and the count doubles as the loop's emptiness signal
+    (an empty slice ⟺ an empty frontier, so run() needs no per-wave
+    isEmpty action) and bounds the fetch-prune id collect (a <= n_rows
+    plain collect instead of a distinct+limit exchange; _pruned_images).
+    Lazy checkpoint + count(): the count job IS the materialization
+    (eager=True would run the same job internally), so the row count
+    comes for free."""
+    delta = sliced.select(
+        "_key",
+        # ord space when trimming: the delta folds into the ord-space
+        # seen base and feeds the STATE_KEYS admit join
+        (F.col("_run_ord").alias("run_id")
+         if "_run_ord" in sliced.columns else F.col("run_id")),
+        "url", F.col("depth").alias("best_depth")
+    ).localCheckpoint(eager=False)
+    n_rows = delta.count()
+    if n_rows:
+        seen.push(delta, n_rows)
+    return delta, n_rows
+
+
+def consolidate_admit(cand: DataFrame, seen: SeenState, wave: int,
+                      partition_selector, checkpoint: bool = False,
+                      filtered_admit=None) -> DataFrame:
+    """The wave's admitted ``fresh`` frontier rows, materialized:
+    expand candidates (``run_id``, ``dst_url``, ``dst_host``,
+    ``depth``, ``parent_rank``, and ``_run_ord`` in trim mode)
+    consolidated per (run, url) to min (depth, parent_rank), then
+    classified against ``seen`` (re-crawl on strictly smaller depth).
+
+    Consolidation groups by EXACTLY the state keys (round 6): dst_host
+    is a pure function of dst_url (url_host), so it rides as first()
+    instead of a group key — the aggregate's output partitioning (_key,
+    run, url) then matches the admit join's clustering, and its
+    SortAggregate ordering doubles as the join's sort: in the fused
+    plan the candidates cross ONE exchange between expansion and
+    admission, with zero extra sort. The state key is computed BEFORE
+    consolidation (it needs the run_id STRING, still on cand rows); in
+    trim mode the groupBy runs in ord space — the run_id string never
+    enters the consolidation exchange. Grouping by (_run_ord, dst_url)
+    is the same partition of rows as (run_id, dst_url): the ordinal <->
+    run_id map is a bijection.
+
+    ``checkpoint`` materializes the consolidated candidates on their
+    own (AQE on) before admission; otherwise expand → criteria →
+    consolidate → admit → project fuse into the one ``fresh``
+    materialization. ``filtered_admit(cand2, cols)`` replaces the exact
+    admission with an approximate-filter one (CrawlEngine's bloom
+    modes). The materialization plans the admit joins: with a big state
+    the AQE-off planning keeps the base side exchange-free/sort-free
+    (see _materialize); with a provably small state the joins broadcast
+    instead and AQE stays on to coalesce the tiny stages. It also makes
+    ``fresh`` single-compute for its two consumers (merge + events)."""
+    rcol = "_run_ord" if "_run_ord" in cand.columns else "run_id"
+    cand2 = (
+        cand.withColumn("_key", CrawlEngine._seen_key(url_col="dst_url"))
+        .groupBy("_key", rcol, "dst_url")
+        .agg(F.min(F.struct("depth", "parent_rank")).alias("m"),
+             F.first("dst_host").alias("dst_host"))
+        .select(
+            F.col(rcol).alias("run_id"),
+            F.col("dst_url").alias("url"),
+            F.col("dst_host").alias("host"),
+            F.col("m.depth").alias("depth"),
+            F.col("m.parent_rank").alias("parent_rank"),
+            "_key",
+        )
+    )
+    if checkpoint:
+        cand2 = cand2.localCheckpoint(eager=True)
+    fresh_cols = [
+        "_key", "run_id", "url",
+        # the hot loop carries the politeness hash only
+        # (host ≡ partition_selector(url))
+        F.xxhash64(partition_selector(F.col("url"))).alias("host_key"),
+        "depth",
+        (F.lit(wave * SEQ_WAVE_STRIDE) + F.col("parent_rank")).alias("seq"),
+    ]
+    if filtered_admit is None:
+        fresh = seen.admit_unseen(cand2).select(*fresh_cols)
+    else:
+        fresh = filtered_admit(cand2, fresh_cols)
+    return _materialize(fresh, aqe_off=not seen.small())
+
+
+def merge(rest: DataFrame, fresh: DataFrame) -> DataFrame:
+    """The next wave's frontier. It keeps min (depth, seq) per (run,
+    url), deferred into the next wave's slice_split: the union is lazy
+    over two checkpoints (ranked rest + fresh), so no per-wave merge
+    exchange, aggregate or materialization."""
+    return rest.unionByName(fresh)
 
 
 @dataclass
@@ -232,14 +508,10 @@ class CrawlEngine:
         self.verify_fetch = verify_fetch
         self.collect_metrics = collect_metrics
         self.compact_every = compact_every  # eventlog: fold journal every N waves
-        # Seen-state LSM: the (monotonically growing, 10^10-target) seen
-        # table is kept as a big folded BASE plus a stack of per-wave
-        # consume DELTAS; deltas fold into the base every `fold_every`
-        # waves. Per-wave work on the seen side is then O(delta) — the
-        # base is never unioned/re-shuffled per wave.
+        # seen-state LSM (SeenState), built per run(); its deltas fold
+        # into the base every `fold_every` waves
         self.fold_every = max(1, fold_every)
-        self._seen_base: DataFrame | None = None
-        self._seen_deltas: list[DataFrame] = []
+        self._seen: SeenState | None = None
         # LSM frontier: the per-wave frontier is last wave's ``rest``
         # unioned with its admitted ``fresh`` — NEVER min-merged per
         # wave. Dedup happens inside the slice's own (host, salt)
@@ -278,20 +550,10 @@ class CrawlEngine:
         # Bigger waves keep the AQE-planned checkpointed shape (runtime
         # broadcast + skew-join handling).
         self.expand_broadcast_max = expand_broadcast_max
-        # state_broadcast_max (round 6): the engine tracks an exact
-        # upper bound on the seen-state row count (Σ of the per-wave
-        # slice counts it already measures; None after a resume, where
-        # the loaded state's size is unknown). While the bound stays
-        # under this threshold the admission join BROADCASTS the seen
-        # base and delta stack (guide §3.1: hint what you can prove
-        # small) and the admit/fresh materialization keeps AQE —
-        # coalesced tiny stages instead of full-width AQE-off
-        # exchanges. Once the bound crosses (the 10^10 trajectory,
-        # immediately on any real crawl) the exchange-free sorted-base
-        # sort-merge path below is used unchanged. Row bound, not
-        # bytes: ~100 B/row ⇒ 500k rows ~ 50 MB broadcast.
+        # state_broadcast_max (round 6): the seen state's admission
+        # joins broadcast while its exact row bound stays under this
+        # threshold (SeenState.small; None after a resume)
         self.state_broadcast_max = state_broadcast_max
-        self._state_rows_bound: int | None = 0
         self._run_ords: list[str] | None = None
         self._run_criteria: dict[str, F.Column] | None = None
         # U3 partition selector (partition/PartitionSelector.scala:6-16;
@@ -323,11 +585,16 @@ class CrawlEngine:
         self._results_acc: list[DataFrame] = []
         self._metrics_acc: list[DataFrame] = []
         # memory mode keeps its increments in _results_acc/_metrics_acc
-        # and has no store (and no temp dir) at all
+        # and has no store at all; the journal needs a dir the caller
+        # owns (a temp dir nothing deletes would leak a journal per
+        # engine)
+        if durable and not checkpoint_dir:
+            raise ValueError(
+                "durable='eventlog' journals into checkpoint_dir: pass "
+                "checkpoint_dir, or use durable=False for an in-memory "
+                "crawl without a journal")
         self.store: EventLogStore | None = (
-            EventLogStore(spark, checkpoint_dir
-                          or tempfile.mkdtemp(prefix="moca-chk-"))
-            if durable else None
+            EventLogStore(spark, checkpoint_dir) if durable else None
         )
         # Canonicalize the graph once: both endpoints normalized, invalid
         # dropped (R9 scheme whitelist happens inside canonicalize).
@@ -436,15 +703,8 @@ class CrawlEngine:
             # per-wave admission join — it would otherwise re-exchange
             # + re-sort the base EVERY wave until the first fold
             # (measured: +2 s/wave on the e2e bench)
-            seen_t = self._materialize(seen_t, sort=True)
+            seen_t = _materialize(seen_t, sort=True)
         return self._trim_runids(frontier), seen_t
-
-    def _rehost(self, df: DataFrame, drop_key: bool = False) -> DataFrame:
-        """Re-derive the host string of a trimmed frame from its url
-        (host ≡ partition_selector(url) for every frontier row — both
-        creation sites compute exactly that)."""
-        out = df.withColumn("host", self.partition_selector(F.col("url")))
-        return out.drop("host_key") if drop_key else out
 
     def _trim_runids(self, df: DataFrame) -> DataFrame:
         """run_id string -> dense int ordinal (sorted-run_id order; see
@@ -477,20 +737,6 @@ class CrawlEngine:
             )
             .drop("run_id")
             .withColumnRenamed("_ord", "run_id")
-        )
-
-    def _rerun_id(self, df: DataFrame) -> DataFrame:
-        """Reverse of _trim_runids: re-attach the run_id STRING from
-        the carried ordinal (O(1) array index per row). The ordinal is
-        KEPT as ``_run_ord`` so ord-space projections (seen delta,
-        candidate consolidation) stay string-free; explicit-column
-        boundary selects never pick it up."""
-        if self._run_ords is None or dict(df.dtypes).get("run_id") == "string":
-            return df
-        arr = F.array(*[F.lit(r) for r in self._run_ords])
-        return (
-            df.withColumnRenamed("run_id", "_run_ord")
-            .withColumn("run_id", F.element_at(arr, F.col("_run_ord") + 1))
         )
 
     def _criteria_lookups(self) -> dict[str, F.Column]:
@@ -545,8 +791,8 @@ class CrawlEngine:
         if resume and self.store.latest_wave() is not None:
             # loaded state of unknown size: disable the small-state
             # broadcast fast path (the sorted-base SMJ shape is always
-            # correct; see state_broadcast_max)
-            self._state_rows_bound = None
+            # correct; see SeenState)
+            rows_bound = None
             start = self.store.latest_wave()
             frontier, seen = self._reconstruct()
             if self.bloom_mode == "cuckoo":  # T5 for the deletable
@@ -576,7 +822,7 @@ class CrawlEngine:
                 ).localCheckpoint(eager=True)
         else:
             start = 0
-            self._state_rows_bound = 0  # empty seen state
+            rows_bound = 0  # empty seen state
             frontier, seen = self._initial_state()
             if self.durable:
                 self.store.append_events(
@@ -601,7 +847,8 @@ class CrawlEngine:
             self._criteria_lookups() if self._run_ords is not None else None
         )
         frontier, seen = self._trim_state(frontier, seen)
-        self._seen_base, self._seen_deltas = seen, []
+        self._seen = SeenState(seen, rows_bound=rows_bound,
+                               broadcast_max=self.state_broadcast_max)
 
         runs_b = F.broadcast(self._runs_df())
         links = self._link_graph()
@@ -625,15 +872,18 @@ class CrawlEngine:
                     and wave % self.compact_every == 0):
                 self.store.compact(wave)
                 frontier, seen = self._trim_state(*self._reconstruct())
-                self._seen_base, self._seen_deltas = seen, []
+                self._seen = SeenState(seen, rows_bound=self._seen.rows_bound,
+                                       broadcast_max=self.state_broadcast_max)
 
-        seen = self._fold_seen()
+        self._fold_filter()
+        seen = self._seen.fold()
         # compact the one-fresh-layer-deep LSM view down to the merged
         # contract shape callers (and the oracle) see — re-deriving the
         # host + run_id strings the hot loop dropped
-        frontier = fold_frontier(self._rehost(
-            self._rerun_id(frontier).drop("_run_ord"), drop_key=True))
-        seen = self._rerun_id(seen).drop("_run_ord")
+        frontier = fold_frontier(_rehost(
+            _rerun_id(frontier, self._run_ords).drop("_run_ord"),
+            self.partition_selector, drop_key=True))
+        seen = _rerun_id(seen, self._run_ords).drop("_run_ord")
         if self.durable:
             results, metrics = self.store.all_results(), self.store.all_metrics()
         else:
@@ -648,51 +898,6 @@ class CrawlEngine:
         for df in acc[1:]:
             out = out.unionByName(df)
         return out
-
-    def _materialize(self, df: DataFrame, sort: bool = False,
-                     aqe_off: bool = True) -> DataFrame:
-        """localCheckpoint planned with AQE OFF: under AQE the
-        checkpointed LogicalRDD reports UnknownPartitioning (the
-        AdaptiveSparkPlan hides the final plan's partitioning), so every
-        later state join would re-shuffle the big side. Planned without
-        AQE, the checkpoint keeps outputPartitioning AND outputOrdering
-        — downstream same-key joins/aggregations skip the exchange (and
-        with ``sort=True`` the sort-merge sort) on this side entirely.
-        State-merge plans are uniform hash-keyed shapes; they don't need
-        AQE's skew handling (the expand/slice stages keep AQE).
-
-        NOTE: this briefly mutates the session-global AQE conf — the
-        engine assumes a single-threaded driver (one crawl loop per
-        SparkSession, the deployment shape of jobs/crawl_job.py). A
-        concurrent query planned on the same session during the window
-        would plan without AQE; run concurrent workloads on their own
-        SparkSession (``spark.newSession()``) if needed.
-
-        ``aqe_off=False`` (round 6) keeps AQE for checkpoints whose
-        partitioning claim nothing downstream needs — e.g. the admit
-        output while the seen state is small enough that its joins
-        broadcast (_small_state): AQE then coalesces the tiny stages
-        instead of running full-width exchanges."""
-        if sort:
-            df = df.sortWithinPartitions(*STATE_KEYS)
-        if not aqe_off:
-            return df.localCheckpoint(eager=True)
-        with self._aqe_off():
-            return df.localCheckpoint(eager=True)
-
-    @contextmanager
-    def _aqe_off(self):
-        """Plan with AQE off inside the block, restoring the conf on
-        exit and on error (session-global; see _materialize). Also
-        what makes a ``localCheckpoint(eager=False)`` actually lazy:
-        under AQE, planning the checkpoint materializes every
-        intermediate query stage eagerly (getFinalPhysicalPlan)."""
-        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
     def _probe_filter(self, cand2: DataFrame) -> DataFrame:
         """Tag candidates with ``_maybe_seen`` against the LSM filter:
@@ -743,7 +948,7 @@ class CrawlEngine:
     def _fold_filter(self) -> None:
         """Fold the pending add/del key deltas into the base filter
         shard table — the filter-side LSM compaction, run alongside
-        _fold_seen so the whole-table rewrite amortizes over
+        SeenState.fold so the whole-table rewrite amortizes over
         ``fold_every`` waves (round-3 rewrote every wave). Only shards
         the deltas actually touch pass through the pandas
         re-serialization; untouched base rows union through unchanged
@@ -792,65 +997,6 @@ class CrawlEngine:
         self._filter_deltas = []
         self._filter_delta_keys = 0
 
-    def _fold_seen(self) -> DataFrame:
-        """Fold the pending consume deltas into the seen base (min
-        best_depth per (run, url)) — the LSM compaction of the seen
-        state. The base is already hash-partitioned by STATE_KEYS from
-        the previous fold, so only the deltas shuffle; the rewrite cost
-        is O(|seen|) local work, amortized over `fold_every` waves."""
-        self._fold_filter()
-        if not self._seen_deltas:
-            return self._seen_base
-        merged = self._seen_base
-        for d in self._seen_deltas:
-            merged = merged.unionByName(d)
-        folded = self._materialize(
-            merged.groupBy(*STATE_KEYS)
-            .agg(F.min("best_depth").alias("best_depth")),
-            sort=True,
-        )
-        self._seen_base, self._seen_deltas = folded, []
-        return folded
-
-    def _small_state(self) -> bool:
-        """True while the seen state is PROVABLY tiny (see
-        state_broadcast_max): the admission joins may broadcast and the
-        admit materialization may keep AQE."""
-        return (self._state_rows_bound is not None
-                and self._state_rows_bound <= self.state_broadcast_max)
-
-    def _admit_unseen(self, df: DataFrame, keep_flag: bool = False) -> DataFrame:
-        """The J1/T8 admission rule over the base+delta seen state:
-        keep rows never seen, or seen only at a strictly larger depth
-        (re-crawl). One left join against the (big) base — which is
-        hash-partitioned AND sorted by STATE_KEYS from the fold, so it
-        joins with no exchange and no sort — and one against the
-        (small) delta stack. The base is never unioned or re-shuffled
-        per wave. While the whole state is provably small
-        (_small_state) both sides take an explicit broadcast hint
-        instead — same rows out, zero exchange and zero sort on the
-        candidate side."""
-        small = self._small_state()
-        base = self._seen_base.withColumnRenamed("best_depth", "_bd_base")
-        out = df.join(F.broadcast(base) if small else base,
-                      STATE_KEYS, "left")
-        if self._seen_deltas:
-            d = self._seen_deltas[0]
-            for extra in self._seen_deltas[1:]:
-                d = d.unionByName(extra)
-            d_min = d.groupBy(*STATE_KEYS).agg(
-                F.min("best_depth").alias("_bd_delta")
-            )
-            out = out.join(F.broadcast(d_min) if small else d_min,
-                           STATE_KEYS, "left")
-        else:
-            out = out.withColumn("_bd_delta", F.lit(None).cast("int"))
-        bd = F.least("_bd_base", "_bd_delta")
-        out = out.filter(bd.isNull() | (F.col("depth") < bd))
-        if keep_flag:  # re-crawl marker (cuckoo eviction needs it)
-            out = out.withColumn("_was_seen", bd.isNotNull())
-        return out.drop("_bd_base", "_bd_delta")
-
     def _checkpoint_increment(self, wave: int, name: str, df: DataFrame) -> DataFrame:
         """Checkpoint a per-wave append table once; downstream reads
         (metrics derivation, final union) reuse the checkpoint instead
@@ -868,7 +1014,7 @@ class CrawlEngine:
         # _aqe_off). The increment plans are projections over the
         # wave's cached slice and a broadcast fetch join — nothing AQE
         # helps with.
-        with self._aqe_off():
+        with _aqe_off(self.spark):
             c = df.localCheckpoint(eager=False)
         (self._results_acc if name == "results" else self._metrics_acc).append(c)
         return c
@@ -921,7 +1067,7 @@ class CrawlEngine:
             })
             self._links_checkpointed = False
         if not (self.links_canonical or self._links_checkpointed):
-            with self._aqe_off():  # AQE would run the distinct's
+            with _aqe_off(self.spark):  # AQE would run the distinct's
                 # shuffle stage at planning time (see _aqe_off)
                 links = links.localCheckpoint(eager=False)
             self._links_checkpointed = True
@@ -1235,69 +1381,59 @@ class CrawlEngine:
         self, wave: int, frontier: DataFrame, runs_b: DataFrame,
         links: DataFrame,
     ) -> DataFrame | None:
-        # 1. SLICE — per-host politeness-bounded queue heads: dedup +
-        #    slice + split in the slice's own exchange; rest is a
-        #    filter over the checkpointed ranked split point.
-        #    eager=False: the split-point checkpoint materializes inside
-        #    the seen-delta count below (a full scan of sliced), not as
-        #    its own job (round 6)
-        sliced, rest = slice_split(frontier, self.budget, self.n_salts,
-                                   eager=False)
-        # the hot loop dropped the host + run_id strings (_trim_state);
-        # everything downstream of the slice (fetch politeness groups,
-        # results/events schemas, metrics) wants them — re-derive on
-        # the budget-bounded slice only (the ordinal rides along as
-        # _run_ord for the ord-space seen-delta projection below)
-        sliced = self._rehost(self._rerun_id(sliced)).cache()
-
-        # 3a. SEEN delta (materialized FIRST — round 6): the count job
-        #    below is the wave's cache-populating action on the slice,
-        #    its row count doubles as the loop's emptiness signal (an
-        #    empty slice ⟺ an empty frontier, so run() needs no
-        #    per-wave isEmpty action) and it bounds the fetch-prune id
-        #    collect (a <= n_delta plain collect instead of a
-        #    distinct+limit exchange; _pruned_images).
-        #    Lazy checkpoint + count(): the count job IS the
-        #    materialization (eager=True would run the same job
-        #    internally), so the delta's row count comes for free —
-        #    it feeds the filter-delta broadcast bound below.
-        seen_delta = sliced.select(
-            "_key",
-            # ord space when trimming: the delta folds into the
-            # ord-space seen base and feeds the STATE_KEYS admit join
-            (F.col("_run_ord").alias("run_id")
-             if "_run_ord" in sliced.columns else F.col("run_id")),
-            "url", F.col("depth").alias("best_depth")
-        ).localCheckpoint(eager=False)
-        n_delta = seen_delta.count()
+        """One wave: the phases of the module docstring, in order.
+        Returns the next frontier, or None on an exhausted frontier
+        (the slice of a deduped frontier is empty iff the frontier is),
+        before committing anything for this wave."""
+        sliced, rest = slice_phase(frontier, self.budget, self.n_salts,
+                                   self.partition_selector, self._run_ords)
+        delta, n_delta = seen_delta(sliced, self._seen)
         if n_delta == 0:
-            # frontier exhausted: the slice of a (deduped) frontier is
-            # empty iff the frontier is — signal run() to stop without
-            # committing anything for this wave
             sliced.unpersist()
             return None
-        self._seen_deltas.append(seen_delta)
-        if self._state_rows_bound is not None:
-            self._state_rows_bound += n_delta
-        if self.bloom_mode in ("sharded", "cuckoo"):
-            # the wave's filter add-delta is the SAME key set — a
-            # projection of the checkpoint above, no extra
-            # materialization; O(delta) per-wave filter maintenance
-            self._filter_deltas.append(
-                ("add", seen_delta.select(F.col("_key").alias("k"))))
-            self._filter_delta_keys += n_delta
-            if self._filter_delta_keys > self.filter_delta_max_keys:
-                # enforce the probe-broadcast bound: fold the stack
-                # into the shard base now instead of broadcasting an
-                # oversized exact-membership frame this wave
-                self._fold_filter()
-        # filter maintenance is LSM-deferred: the wave's add keys ride
-        # the seen delta's checkpoint (3a) onto the _filter_deltas
-        # stack; shards rewrite only at _fold_filter
+        if self.bloom_mode:
+            self._push_filter_adds(delta, n_delta)
+        fetched = self._fetch(wave, sliced, n_delta)
+        cand = self._expand(fetched, runs_b, links, n_delta)
+        # Checkpoint the candidates only when something consumes them
+        # twice (the approximate-filter paths probe them AND route both
+        # halves onward). On the plain exact path they have exactly ONE
+        # consumer — the admission join — so the wave FUSES expand →
+        # criteria → consolidate → admit → project into the single
+        # `fresh` materialization (one job instead of two per wave; the
+        # broadcast hint in _expand keeps the expand join sane without
+        # AQE when the parent side is provably small, and above the
+        # hint bound the checkpoint returns so the skew-prone expand
+        # join keeps AQE).
+        fresh = consolidate_admit(
+            cand, self._seen, wave, self.partition_selector,
+            checkpoint=bool(self.bloom_mode)
+            or n_delta > self.expand_broadcast_max,
+            filtered_admit=self._filtered_admit if self.bloom_mode else None)
+        frontier_new = merge(rest, fresh)
+        self._commit(wave, fetched, sliced, fresh)
+        sliced.unpersist()
+        return frontier_new
 
-        # 2. FETCH — equi-join against the image+caption corpus, pruned
-        #    to the slice's ids (O(slice) corpus reads; _pruned_images —
-        #    n_delta bounds the id collect)
+    def _push_filter_adds(self, delta: DataFrame, n_rows: int) -> None:
+        """Stack the wave's filter add-delta: the SAME key set as the
+        seen delta — a projection of its checkpoint, no extra
+        materialization; O(delta) per-wave filter maintenance, shards
+        rewrite only at _fold_filter."""
+        self._filter_deltas.append(
+            ("add", delta.select(F.col("_key").alias("k"))))
+        self._filter_delta_keys += n_rows
+        if self._filter_delta_keys > self.filter_delta_max_keys:
+            # enforce the probe-broadcast bound: fold the stack into
+            # the shard base now instead of broadcasting an oversized
+            # exact-membership frame this wave
+            self._fold_filter()
+
+    def _fetch(self, wave: int, sliced: DataFrame, n_delta: int) -> DataFrame:
+        """The slice left-joined to the image+caption corpus on
+        image_id, pruned to the slice's ids (O(slice) corpus reads;
+        _pruned_images — ``n_delta`` bounds the id collect). A null
+        ``bytes`` is a fetch failure."""
         fetched = sliced.withColumn("image_id", F.sha1(F.encode("url", "UTF-8"))) \
             .join(self._pruned_images(sliced, n_delta), "image_id", "left")
         if self.use_token_bucket:
@@ -1313,11 +1449,94 @@ class CrawlEngine:
                 fetched.filter(F.col("bytes").isNotNull())
                 .select("image_id", "bytes", "w", "h", "fmt", "phash")
             ).select("image_id", "psnr", "psnr_ok")
-            fetched = fetched.join(v, "image_id", "left")
+            return fetched.join(v, "image_id", "left")
+        return fetched.withColumn("psnr_ok", F.lit(None).cast("boolean"))
+
+    def _expand(self, fetched: DataFrame, runs_b: DataFrame,
+                links: DataFrame, n_delta: int) -> DataFrame:
+        """The fetched parents' out-links that pass the criteria: one
+        candidate row per (parent, link). Max-depth gates the PARENT
+        (MaxDepthCriteria)."""
+        parents_src = fetched.filter(F.col("bytes").isNotNull())
+        if self._run_criteria is not None:
+            # trim mode: literal-array lookups on the carried ordinal,
+            # built once per run (_criteria_lookups)
+            parents_src = parents_src.withColumns(self._run_criteria)
         else:
-            fetched = fetched.withColumn(
-                "psnr_ok", F.lit(None).cast("boolean")
+            parents_src = parents_src.join(
+                runs_b.drop("seed_url", "seed_seq"), "run_id")
+        parents = (
+            parents_src
+            .filter((F.col("max_depth") < 0) | (F.col("depth") < F.col("max_depth")))
+            .select(
+                "run_id", "criteria_name", "same_host", "same_domain",
+                "robots_txt",
+                F.col("url").alias("src_url"),
+                # the REAL host (criteria R3 compares hosts) — the
+                # frontier 'host' column is the partition key, which
+                # differs under a non-default partition_selector (U3)
+                url_host(F.col("url")).alias("src_host"),
+                (F.col("depth") + 1).alias("depth"),
+                F.col("rank").alias("parent_rank"),
+                # ord passthrough (trim mode): candidates inherit the
+                # parent's run ordinal so the consolidation needs no
+                # string keys and no extra mapping join
+                *([F.col("_run_ord")]
+                  if "_run_ord" in fetched.columns else []),
             )
+        )
+        links = self._pruned_links(parents, links)
+        # deliberate join strategy (round 6): the parent side is
+        # bounded by the slice (n_delta rows, known exactly) — when it
+        # is provably small, hint the broadcast instead of leaving the
+        # strategy to AQE's runtime size estimate. Above the bound the
+        # AQE path (runtime broadcast + skew join) stands.
+        if n_delta <= self.expand_broadcast_max:
+            parents = F.broadcast(parents)
+        # src_domain/dst_domain come with the link rows (_link_graph)
+        cand = (
+            parents.join(links, ["src_url", "src_host"])
+            .withColumn("dst_host", url_host(F.col("dst_url")))
+        )
+        return apply_criteria(cand, self.robots, self.custom_by_name)
+
+    def _filtered_admit(self, cand2: DataFrame, fresh_cols: list) -> DataFrame:
+        """consolidate_admit's admission under an approximate seen
+        filter (bloom pre-filter, J1 north rule): a MISS is definitive
+        — those rows are admitted without touching the seen table; HITs
+        go to the exact join, which alone decides (false positives cost
+        join work, never correctness)."""
+        seen = self._seen
+        tagged = self._probe_filter(cand2)
+        definitely_new = tagged.filter(~F.col("_maybe_seen")).select(*fresh_cols)
+        cuckoo = self.bloom_mode == "cuckoo"  # the deletable variant
+        checked = seen.admit_unseen(tagged.filter(F.col("_maybe_seen")),
+                                    keep_flag=cuckoo)
+        if cuckoo:
+            # small: filter-hit admissions; with a big state AQE-off
+            # keeps the base side of the admit join exchange-free
+            checked = _materialize(checked, aqe_off=not seen.small())
+            # T8 + deletability: evict fingerprints of re-admitted URLs
+            # so the hit set stays tight under re-crawls. PASS-only
+            # discipline holds: a deleted entry re-routes future
+            # candidates into the frontier min-merge (harmless dup),
+            # never drops one — and the URL is re-inserted when its
+            # re-crawl is sliced. The eviction is a stacked del-delta
+            # applied at fold time (per-shard, on executors).
+            # stacked UNCONDITIONALLY: deciding emptiness here would
+            # cost a per-wave driver action (a job over checked),
+            # and an empty del frame is free at fold time — its shard
+            # set is empty, so it touches nothing
+            self._filter_deltas.append(("del", checked.filter(
+                F.col("_was_seen")).select(F.col("_key").alias("k"))))
+        return definitely_new.unionByName(checked.select(*fresh_cols))
+
+    def _commit(self, wave: int, fetched: DataFrame, sliced: DataFrame,
+                fresh: DataFrame) -> None:
+        """Results first (one materialization), metrics derived from
+        the checkpointed results (A7 lineage), then the wave's events +
+        marker (the atomic journal commit); every ``fold_every`` waves
+        the seen and filter deltas fold."""
         results_w = fetched.select(
             "run_id",
             F.lit(wave).alias("wave"),
@@ -1342,159 +1561,6 @@ class CrawlEngine:
                 ).cast("double")
             ).alias("fetch_offset_s"),
         )
-
-        # 4. EXPAND — max-depth gates the PARENT (MaxDepthCriteria)
-        parents_src = fetched.filter(F.col("bytes").isNotNull())
-        if self._run_criteria is not None:
-            # trim mode: literal-array lookups on the carried ordinal,
-            # built once per run (_criteria_lookups)
-            parents_src = parents_src.withColumns(self._run_criteria)
-        else:
-            parents_src = parents_src.join(
-                runs_b.drop("seed_url", "seed_seq"), "run_id")
-        parents = (
-            parents_src
-            .filter((F.col("max_depth") < 0) | (F.col("depth") < F.col("max_depth")))
-            .select(
-                "run_id", "criteria_name", "same_host", "same_domain",
-                "robots_txt",
-                F.col("url").alias("src_url"),
-                # the REAL host (criteria R3 compares hosts) — the
-                # frontier 'host' column is the partition key, which
-                # differs under a non-default partition_selector (U3)
-                url_host(F.col("url")).alias("src_host"),
-                (F.col("depth") + 1).alias("depth"),
-                F.col("rank").alias("parent_rank"),
-                # ord passthrough (trim mode): candidates inherit the
-                # parent's run ordinal so the consolidation below needs
-                # no string keys and no extra mapping join
-                *([F.col("_run_ord")]
-                  if "_run_ord" in fetched.columns else []),
-            )
-        )
-        links = self._pruned_links(parents, links)
-        # deliberate join strategy (round 6): the parent side is
-        # bounded by the slice (n_delta rows, known exactly) — when it
-        # is provably small, hint the broadcast instead of leaving the
-        # strategy to AQE's runtime size estimate. Above the bound the
-        # AQE path (runtime broadcast + skew join) stands.
-        if n_delta <= self.expand_broadcast_max:
-            parents = F.broadcast(parents)
-        # src_domain/dst_domain come with the link rows (_link_graph)
-        cand = (
-            parents.join(links, ["src_url", "src_host"])
-            .withColumn("dst_host", url_host(F.col("dst_url")))
-        )
-        cand = apply_criteria(cand, self.robots, self.custom_by_name)
-
-        # 5. DEDUP — consolidate, then classify vs seen (re-crawl on
-        #    strictly smaller depth)
-        # Consolidation groups by EXACTLY the state keys (round 6):
-        # dst_host is a pure function of dst_url (url_host), so it
-        # rides as first() instead of a group key — the aggregate's
-        # output partitioning (_key, run, url) then matches the admit
-        # join's clustering, and its SortAggregate ordering doubles as
-        # the join's sort: in the fused plan below the candidates cross
-        # ONE exchange between expansion and admission, with zero extra
-        # sort. The state key is computed BEFORE consolidation (it
-        # needs the run_id STRING, still on cand rows); in trim mode
-        # the groupBy runs in ord space — the run_id string never
-        # enters the consolidation exchange. Grouping by (_run_ord,
-        # dst_url) is the same partition of rows as (run_id, dst_url):
-        # the ordinal <-> run_id map is a bijection.
-        rcol = "_run_ord" if "_run_ord" in cand.columns else "run_id"
-        cand2 = (
-            cand.withColumn("_key", self._seen_key(url_col="dst_url"))
-            .groupBy("_key", rcol, "dst_url")
-            .agg(F.min(F.struct("depth", "parent_rank")).alias("m"),
-                 F.first("dst_host").alias("dst_host"))
-            .select(
-                F.col(rcol).alias("run_id"),
-                F.col("dst_url").alias("url"),
-                F.col("dst_host").alias("host"),
-                F.col("m.depth").alias("depth"),
-                F.col("m.parent_rank").alias("parent_rank"),
-                "_key",
-            )
-        )
-        # Checkpoint cand2 only when something consumes it twice (the
-        # approximate-filter paths probe it AND route both halves
-        # onward). On the plain exact path it has exactly ONE consumer
-        # — the admission join — so the wave FUSES expand → criteria →
-        # consolidate → admit → project into the single `fresh`
-        # materialization below (one job instead of two per wave; the
-        # broadcast hint above keeps the expand join sane without AQE
-        # when the parent side is provably small, and above the hint
-        # bound the checkpoint returns so the skew-prone expand join
-        # keeps AQE).
-        fuse = (not self.bloom_mode
-                and n_delta <= self.expand_broadcast_max)
-        if not fuse:
-            cand2 = cand2.localCheckpoint(eager=True)
-        fresh_cols = [
-            "_key", "run_id", "url",
-            # the hot loop carries the politeness hash only
-            # (host ≡ partition_selector(url))
-            F.xxhash64(self.partition_selector(F.col("url"))).alias("host_key"),
-            "depth",
-            (F.lit(wave * SEQ_WAVE_STRIDE) + F.col("parent_rank")).alias("seq"),
-        ]
-        if self.bloom_mode == "sharded":
-            # Bloom pre-filter (J1 north rule): a MISS is definitive —
-            # those rows are admitted without touching the seen table;
-            # HITs go to the exact join, which alone decides (false
-            # positives cost join work, never correctness).
-            tagged = self._probe_filter(cand2)
-            definitely_new = tagged.filter(~F.col("_maybe_seen")).select(*fresh_cols)
-            checked = self._admit_unseen(
-                tagged.filter(F.col("_maybe_seen"))
-            ).select(*fresh_cols)
-            fresh = definitely_new.unionByName(checked)
-        elif self.bloom_mode == "cuckoo":
-            # deletable-filter variant of the sharded-bloom path
-            tagged = self._probe_filter(cand2)
-            definitely_new = tagged.filter(~F.col("_maybe_seen")) \
-                .select(*fresh_cols)
-            checked_full = self._materialize(self._admit_unseen(
-                tagged.filter(F.col("_maybe_seen")), keep_flag=True
-            ), aqe_off=not self._small_state())
-            # small: filter-hit admissions; with a big state AQE-off
-            # keeps the base side of the admit join exchange-free
-            fresh = definitely_new.unionByName(
-                checked_full.select(*fresh_cols))
-            # T8 + deletability: evict fingerprints of re-admitted URLs
-            # so the hit set stays tight under re-crawls. PASS-only
-            # discipline holds: a deleted entry re-routes future
-            # candidates into the frontier min-merge (harmless dup),
-            # never drops one — and the URL is re-inserted when its
-            # re-crawl is sliced. The eviction is a stacked del-delta
-            # applied at fold time (per-shard, on executors).
-            # stacked UNCONDITIONALLY: deciding emptiness here would
-            # cost a per-wave driver action (a job over checked_full),
-            # and an empty del frame is free at fold time — its shard
-            # set is empty, so it touches nothing
-            dels = checked_full.filter(F.col("_was_seen")) \
-                .select(F.col("_key").alias("k"))
-            self._filter_deltas.append(("del", dels))
-        else:
-            fresh = self._admit_unseen(cand2).select(*fresh_cols)
-        # Materialization: the admit joins against the seen base plan
-        # here, so with a big state the AQE-off planning keeps the base
-        # side exchange-free/sort-free (see _materialize); with a
-        # provably small state the joins broadcast instead and AQE
-        # stays on to coalesce the tiny stages. Also makes `fresh`
-        # single-compute for its two consumers (merge + events).
-        fresh = self._materialize(fresh, aqe_off=not self._small_state())
-
-        # 6. MERGE — frontier keeps min (depth, seq) per (run, url),
-        # deferred into next wave's slice_split: the union is lazy over
-        # two checkpoints (ranked-rest + fresh), so no per-wave merge
-        # exchange, agg, or materialization.
-        frontier_new = rest.unionByName(fresh)
-
-        # 7. COMMIT — results first (one materialization), metrics
-        #    derived from the checkpointed results (A7 lineage), then
-        #    the wave's events + marker (the atomic journal commit)
         results_c = self._checkpoint_increment(wave, "results", results_w)
         if self.collect_metrics:
             metrics_w = (
@@ -1519,13 +1585,13 @@ class CrawlEngine:
                 # the journal schema keeps the host + run_id strings
                 # (cross-version replay); fresh is trimmed — re-derive
                 # on the O(delta) add rows at append time
-                self._rehost(self._rerun_id(fresh), drop_key=True).select(
+                _rehost(_rerun_id(fresh, self._run_ords),
+                        self.partition_selector, drop_key=True).select(
                     "run_id", "url", "host", "depth", "seq",
                     F.lit("add").alias("kind"), F.lit(wave).alias("wave"),
                 )
             )
             self.store.append_events(wave, events)
-        if len(self._seen_deltas) >= self.fold_every:
-            self._fold_seen()
-        sliced.unpersist()
-        return frontier_new
+        if len(self._seen.deltas) >= self.fold_every:
+            self._fold_filter()
+            self._seen.fold()

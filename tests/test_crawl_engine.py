@@ -692,6 +692,39 @@ def test_eventlog_mode_parity(spark, tmp_path):
     assert_match(got, want)
 
 
+@pytest.mark.parametrize("durable", [False, "eventlog"])
+def test_metrics_match_results(spark, tmp_path, durable):
+    """A7/S4: the per-wave ``metrics`` table is the wave's results
+    grouped by (wave, host) — ``scheduled`` rows and ``fetched``
+    successes (a corpus missing some URLs makes them differ) — in both
+    the in-memory and the event-log layout."""
+    from pyspark.sql import functions as F
+
+    edges = zipf_graph(n_hosts=4, pages_per_host=6)
+    works = [W("w1", "http://host0.test/p0", max_depth=4)]
+    urls = sorted(oracle_corpus_urls(edges, works))
+    eng, _ = make_engine(spark, tmp_path, works, edges, budget=2,
+                         corpus_urls=set(urls) - set(urls[1::3]),
+                         durable=durable)
+    res = eng.run()
+    got = sorted(tuple(r) for r in res.metrics.select(
+        "wave", "host", "scheduled", "fetched").collect())
+    want = sorted(tuple(r) for r in res.results.groupBy("wave", "host").agg(
+        F.count("*"), F.sum(F.col("fetched").cast("long"))).collect())
+    assert got == want
+    assert res.waves > 1 and any(s != f for _w, _h, s, f in got)
+
+
+def test_eventlog_without_checkpoint_dir_raises(spark):
+    """The event journal needs a dir its caller owns: a default
+    (durable="eventlog") engine without ``checkpoint_dir`` raises
+    instead of journaling into a temp dir that nothing deletes."""
+    edges = chain_graph(n=3)
+    images = images_for_urls(spark, sorted({u for e in edges for u in e}))
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        CrawlEngine(spark, links_df(spark, edges), images)
+
+
 def test_eventlog_resume_and_compaction(spark, tmp_path):
     """Eventlog journal: crash after wave 3, resume cold; with
     compaction folding the log mid-run. End state == oracle."""

@@ -1,7 +1,7 @@
 """Fetch-join pruning microbench: per-wave fetch cost must be
 independent of corpus size.
 
-The engine's step-2 fetch join (crawl/engine.py:_step) probes the
+The engine's fetch phase (crawl/engine.py CrawlEngine._fetch) probes the
 image corpus with the wave's bounded slice. Unpruned, every wave scans
 the WHOLE corpus table — cost grows linearly with corpus size and
 dominates everything at a 100 TB corpus. With slice-id pruning

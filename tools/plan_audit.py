@@ -211,28 +211,20 @@ def main() -> int:
 
     # 8. seen-state LSM: the folded base must join exchange-free AND
     #    sort-free (hash-partitioned + sorted by STATE_KEYS, preserved
-    #    through the AQE-off localCheckpoint). Build the state exactly
-    #    the way the engine does and audit the admit plan.
-    from moca_spark.crawl.engine import CrawlEngine
+    #    through the AQE-off localCheckpoint). Build the state through
+    #    the engine's own holder (SeenState: one delta folded into an
+    #    empty base) and audit the admit plan.
+    from moca_spark.crawl.engine import CrawlEngine, SeenState
 
-    links0 = spark.createDataFrame(
-        [("http://h.test/a", "http://h.test/b")], ["src_url", "dst_url"])
-    from moca_spark.sources.synth import images_for_urls
-
-    eng = CrawlEngine(spark, links0, images_for_urls(spark, ["http://h.test/a"]),
-                      durable=False)
     state_src = (
         scale_frontier(spark, 100_000, 500, 8)
         .withColumn("run_id", F.lit("r"))
         .withColumn("_key", CrawlEngine._seen_key())
+        .select("_key", "run_id", "url", F.col("depth").alias("best_depth"))
     )
-    eng._seen_base = state_src.select(
-        "_key", "run_id", "url", F.col("depth").alias("best_depth")
-    ).filter(F.lit(False)).localCheckpoint(eager=True)
-    eng._seen_deltas = [state_src.select(
-        "_key", "run_id", "url", F.col("depth").alias("best_depth")
-    ).localCheckpoint(eager=True)]
-    base = eng._fold_seen()
+    seen = SeenState(state_src.filter(F.lit(False)).localCheckpoint(eager=True),
+                     [state_src.localCheckpoint(eager=True)])
+    seen.fold()
     cand = (
         scale_frontier(spark, 5_000, 500, 8, seed=2)
         .withColumn("run_id", F.lit("r"))
@@ -240,15 +232,13 @@ def main() -> int:
         .localCheckpoint(eager=True)
     )
     # a 100k-row audit base fits under the broadcast threshold (which
-    # would be the RIGHT plan at this size); force the big-state SMJ
-    # shape the 10^10 base would take — including the engine's own
-    # small-state broadcast fast path (round 6): a bound of None is
-    # the "unknown/big state" setting every real crawl reaches
-    eng._state_rows_bound = None
+    # would be the RIGHT plan at this size); the holder's default row
+    # bound (None: unknown/big, the setting every real crawl reaches)
+    # takes the big-state SMJ shape the 10^10 base would take
     bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    p = plan_of(eng._admit_unseen(cand))
+    p = plan_of(seen.admit_unseen(cand))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
     check("seen base: SortMergeJoin on (_key, run_id, url)",
@@ -267,7 +257,7 @@ def main() -> int:
     #    the domain UDF runs, once per engine) is not part of the wave.
     from moca_spark.criteria.dsl import CriteriaSpec, Work
     from moca_spark.functions.urls import domain_udf
-    from moca_spark.sources.synth import links_df
+    from moca_spark.sources.synth import images_for_urls, links_df
 
     dom_edges = [("http://a.shop.test/x", "http://a.shop.test/y"),
                  ("http://a.shop.test/x", "http://b.shop.test/z"),
@@ -279,8 +269,10 @@ def main() -> int:
                         durable=False)
     eng_d.add_works([Work("wd", "http://a.shop.test/x",
                           CriteriaSpec(max_depth=3, same_domain=True))])
+    import moca_spark.crawl.engine as crawl_engine
+
     fresh_plans = []
-    materialize = eng_d._materialize
+    materialize = crawl_engine._materialize
 
     def record(df, sort=False, aqe_off=True):
         out = materialize(df, sort=sort, aqe_off=aqe_off)
@@ -289,8 +281,9 @@ def main() -> int:
                 df._jdf.queryExecution().executedPlan()))
         return out
 
-    eng_d._materialize = record
+    crawl_engine._materialize = record
     waves = eng_d.run(max_waves=3).waves
+    crawl_engine._materialize = materialize
     check("domains: every same-domain wave recorded its fresh plan",
           waves >= 2 and len(fresh_plans) == waves,
           f"{waves} waves, {len(fresh_plans)} fresh plans")
