@@ -21,6 +21,7 @@ import argparse
 import json
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def main() -> None:
@@ -78,8 +79,6 @@ def main() -> None:
     ship_package(spark)
 
     if args.demo:
-        from pyspark.sql import functions as F
-
         from moca_spark.criteria.dsl import CriteriaSpec, Work
         from moca_spark.sources.synth import (
             images_distributed,
@@ -131,9 +130,14 @@ def main() -> None:
     )
     eng.add_works(works)
     res = eng.run(max_waves=args.max_waves, resume=args.resume)
+    # both counts off the per-host metrics view, in one action:
+    # results hold every scheduled row, failed fetches included
+    scheduled, fetched = (0, 0) if res.metrics is None else (
+        res.metrics.agg(F.sum("scheduled"), F.sum("fetched")).first())
     summary = {
         "waves": res.waves,
-        "fetched": res.results.count() if res.results is not None else 0,
+        "scheduled": scheduled,
+        "fetched": fetched,
         "seen": res.seen.count(),
         "pending": res.frontier.count(),
         "checkpoint": args.checkpoint,

@@ -260,8 +260,7 @@ def crawl_end_to_end(spark: SparkSession, n_hosts: int = 12,
         schema=IMAGES_SCHEMA,
     ).cache()
     images.count()
-    eng = CrawlEngine(spark, links, images, budget=20, durable=False, n_salts=4,
-                      collect_metrics=False)
+    eng = CrawlEngine(spark, links, images, budget=20, durable=False, n_salts=4)
     eng.add_works([Work(f"w{i}", f"http://host{i}.test/p0", CriteriaSpec(max_depth=4))
                    for i in range(6)])
     t0 = time.time()
@@ -330,7 +329,7 @@ def engine_scale_run(spark: SparkSession, n_pages: int = 2_000_000,
                       durable=False if durable == "memory" else durable,
                       checkpoint_dir=checkpoint_dir,
                       n_salts=16, use_bloom="sharded",
-                      bloom_capacity=n_pages, collect_metrics=False)
+                      bloom_capacity=n_pages)
     eng.add_works([
         Work(f"w{i}", u, CriteriaSpec(max_depth=10**6))
         for i, u in enumerate(seed_urls)

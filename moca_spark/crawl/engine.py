@@ -21,7 +21,7 @@ phases in order, each with explicit inputs and outputs:
                 admit unseen or strictly-smaller depth (re-crawl, T8);
   merge         frontier = rest ∪ fresh, unmerged: the next slice's
                 exchange keeps min (depth, seq) per (run, url) (J2);
-  _commit       append results+metrics and the wave's events
+  _commit       append the wave's results and events
                 (store/lakehouse.py, the Akka journal analog), fold the
                 seen deltas every ``fold_every`` waves. Memory mode
                 (durable=False: localCheckpoint, no resume — tests/
@@ -283,7 +283,7 @@ def slice_phase(frontier: DataFrame, budget: int, n_salts: int,
 
     The hot loop dropped the host + run_id strings (_trim_state);
     everything downstream of the slice (fetch politeness groups,
-    results/events schemas, metrics) wants them — re-derived on the
+    results/events schemas) wants them — re-derived on the
     budget-bounded slice only (the ordinal rides along as _run_ord for
     the ord-space seen delta). ``sliced`` is cached: the caller
     unpersists it at the end of the wave."""
@@ -392,9 +392,21 @@ def merge(rest: DataFrame, fresh: DataFrame) -> DataFrame:
 class CrawlResult:
     frontier: DataFrame
     seen: DataFrame
-    results: DataFrame
-    metrics: DataFrame
+    results: DataFrame | None
     waves: int
+
+    @property
+    def metrics(self) -> DataFrame | None:
+        """Per-wave, per-partition counts (A7/S4): ``results`` grouped
+        by (wave, host) — ``host`` is the moca partition
+        (``partition_selector``) — with ``scheduled`` rows and
+        ``fetched`` successes. A view: nothing stores it."""
+        if self.results is None:
+            return None
+        return self.results.groupBy("wave", "host").agg(
+            F.count("*").alias("scheduled"),
+            F.sum(F.col("fetched").cast("long")).alias("fetched"),
+        )
 
     def crawl_order(self) -> DataFrame:
         """Per-host fetch order (host, pos, url, depth) — golden shape
@@ -440,7 +452,6 @@ class CrawlEngine:
         use_token_bucket: bool = False,
         partition_selector=None,
         verify_fetch: bool = False,
-        collect_metrics: bool = True,
         compact_every: int = 0,
         links_canonical: bool = False,
         fold_every: int = 8,
@@ -506,7 +517,6 @@ class CrawlEngine:
         # input_hint per-row invariant enforced DURING the crawl:
         # decode each fetched image, PSNR >= 40 dB vs source pixels
         self.verify_fetch = verify_fetch
-        self.collect_metrics = collect_metrics
         self.compact_every = compact_every  # eventlog: fold journal every N waves
         # seen-state LSM (SeenState), built per run(); its deltas fold
         # into the base every `fold_every` waves
@@ -583,8 +593,7 @@ class CrawlEngine:
         self.filter_delta_max_keys = filter_delta_max_keys
         self._filter_delta_keys = 0
         self._results_acc: list[DataFrame] = []
-        self._metrics_acc: list[DataFrame] = []
-        # memory mode keeps its increments in _results_acc/_metrics_acc
+        # memory mode keeps its results increments in _results_acc
         # and has no store at all; the journal needs a dir the caller
         # owns (a temp dir nothing deletes would leak a journal per
         # engine)
@@ -884,12 +893,9 @@ class CrawlEngine:
             _rerun_id(frontier, self._run_ords).drop("_run_ord"),
             self.partition_selector, drop_key=True))
         seen = _rerun_id(seen, self._run_ords).drop("_run_ord")
-        if self.durable:
-            results, metrics = self.store.all_results(), self.store.all_metrics()
-        else:
-            results = self._union_acc(self._results_acc)
-            metrics = self._union_acc(self._metrics_acc)
-        return CrawlResult(frontier, seen, results, metrics, wave)
+        results = (self.store.all_results() if self.durable
+                   else self._union_acc(self._results_acc))
+        return CrawlResult(frontier, seen, results, wave)
 
     def _union_acc(self, acc: list[DataFrame]) -> DataFrame | None:
         if not acc:
@@ -996,28 +1002,6 @@ class CrawlEngine:
             ).localCheckpoint(eager=True)
         self._filter_deltas = []
         self._filter_delta_keys = 0
-
-    def _checkpoint_increment(self, wave: int, name: str, df: DataFrame) -> DataFrame:
-        """Checkpoint a per-wave append table once; downstream reads
-        (metrics derivation, final union) reuse the checkpoint instead
-        of recomputing the fetch join. Memory mode checkpoints LAZILY
-        (round 6): nothing reads the increments until run end (or the
-        same-wave metrics derivation), so the per-wave materialization
-        job disappears — all increments materialize together in the
-        first action that touches them, each branch a narrow read over
-        its wave's already-checkpointed slice. The event log stays
-        eager by nature (the write IS the durability)."""
-        if self.durable:
-            return self.store.write_increment(wave, name, df)
-        # AQE-off planning makes the checkpoint ACTUALLY lazy (else
-        # the increment's broadcast/shuffle stages would run per wave;
-        # _aqe_off). The increment plans are projections over the
-        # wave's cached slice and a broadcast fetch join — nothing AQE
-        # helps with.
-        with _aqe_off(self.spark):
-            c = df.localCheckpoint(eager=False)
-        (self._results_acc if name == "results" else self._metrics_acc).append(c)
-        return c
 
     def _needs_domains(self) -> bool:
         """True iff some run's criteria (same-domain) or any registered
@@ -1533,10 +1517,10 @@ class CrawlEngine:
 
     def _commit(self, wave: int, fetched: DataFrame, sliced: DataFrame,
                 fresh: DataFrame) -> None:
-        """Results first (one materialization), metrics derived from
-        the checkpointed results (A7 lineage), then the wave's events +
-        marker (the atomic journal commit); every ``fold_every`` waves
-        the seen and filter deltas fold."""
+        """The wave's results increment, then its events + marker (the
+        atomic journal commit); every ``fold_every`` waves the seen and
+        filter deltas fold. Per-host metrics are a view over the
+        results (CrawlResult.metrics), so a wave writes nothing else."""
         results_w = fetched.select(
             "run_id",
             F.lit(wave).alias("wave"),
@@ -1561,19 +1545,8 @@ class CrawlEngine:
                 ).cast("double")
             ).alias("fetch_offset_s"),
         )
-        results_c = self._checkpoint_increment(wave, "results", results_w)
-        if self.collect_metrics:
-            metrics_w = (
-                results_c.groupBy("host")
-                .agg(
-                    F.count("*").alias("scheduled"),
-                    F.sum(F.col("fetched").cast("long")).alias("fetched"),
-                )
-                .withColumn("wave", F.lit(wave))
-                .withColumn("partition_id", F.spark_partition_id())
-            )
-            self._checkpoint_increment(wave, "metrics", metrics_w)
         if self.durable:
+            self.store.write_increment(wave, results_w)
             # O(delta) durable append; the live state is chained in
             # memory (localCheckpoint) — the journal is read back ONLY
             # on resume and after compaction, never per wave (a
@@ -1592,6 +1565,18 @@ class CrawlEngine:
                 )
             )
             self.store.append_events(wave, events)
+        else:
+            # memory mode checkpoints LAZILY (round 6): nothing reads
+            # the results until run end, so all waves' increments
+            # materialize together in the first action that touches
+            # them, each branch a narrow read over its wave's
+            # already-checkpointed slice — no per-wave job. AQE-off
+            # planning makes the checkpoint ACTUALLY lazy (else its
+            # broadcast/shuffle stages would run per wave; _aqe_off);
+            # the plan is a projection over the cached slice and a
+            # broadcast fetch join — nothing AQE helps with.
+            with _aqe_off(self.spark):
+                self._results_acc.append(results_w.localCheckpoint(eager=False))
         if len(self._seen.deltas) >= self.fold_every:
             self._fold_filter()
             self._seen.fold()

@@ -15,11 +15,15 @@ written for a 1000-executor cluster reading 100 TB:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+_package_zip: str | None = None
 
 
 def ship_package(spark: SparkSession) -> str:
@@ -27,25 +31,34 @@ def ship_package(spark: SparkSession) -> str:
     zip the package and ``addPyFile`` it — the programmatic equivalent
     of ``spark-submit --py-files moca_spark.zip`` (the north rule's
     deployment mode). Python workers unpickling pandas UDFs import
-    from this archive."""
+    from this archive.
+
+    One zip per process, whatever the number of sessions: Spark's file
+    server serves the original path while a context lives, so the zip
+    stays until interpreter exit, which removes its dir."""
+    global _package_zip
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     if not os.path.isdir(pkg_dir):
         # already running from a --py-files zip: executors got it from
         # spark-submit, nothing to ship
         return pkg_dir
-    root = os.path.dirname(pkg_dir)
-    z = os.path.join(tempfile.mkdtemp(prefix="moca-pyfiles-"), "moca_spark.zip")
-    with zipfile.ZipFile(z, "w") as f:
-        for dirpath, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                # .dat: the full public-suffix list (functions/psl.py
-                # reads it via importlib.resources, which resolves
-                # inside the zip on executors)
-                if fn.endswith((".py", ".dat")):
-                    p = os.path.join(dirpath, fn)
-                    f.write(p, os.path.relpath(p, root))
-    spark.sparkContext.addPyFile(z)
-    return z
+    if _package_zip is None:
+        d = tempfile.mkdtemp(prefix="moca-pyfiles-")
+        atexit.register(shutil.rmtree, d, True)
+        root = os.path.dirname(pkg_dir)
+        z = os.path.join(d, "moca_spark.zip")
+        with zipfile.ZipFile(z, "w") as f:
+            for dirpath, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    # .dat: the full public-suffix list (functions/psl.py
+                    # reads it via importlib.resources, which resolves
+                    # inside the zip on executors)
+                    if fn.endswith((".py", ".dat")):
+                        p = os.path.join(dirpath, fn)
+                        f.write(p, os.path.relpath(p, root))
+        _package_zip = z
+    spark.sparkContext.addPyFile(_package_zip)
+    return _package_zip
 
 
 def get_spark(

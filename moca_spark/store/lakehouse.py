@@ -6,8 +6,8 @@ role/worker/Minion.scala:46-66) and PostgreSQL transactions
 (store/control/PgRunControl.scala). The Spark-native equivalent here is
 an append-only event log with periodic compaction — a compaction IS
 the snapshot. Every wave appends only its DELTA of frontier events plus
-its results/metrics increments, then atomically publishes a commit
-marker. Resume = re-aggregate the committed events; a re-run of a
+its results increment, then atomically publishes a commit marker.
+Resume = re-aggregate the committed events; a re-run of a
 half-finished wave is invisible (its directory lacks the marker and is
 overwritten).
 
@@ -17,7 +17,6 @@ protocol on plain Parquet directories so it runs hermetically here:
 
     <root>/wave=<n>/events/...     the wave's add/consume events
     <root>/wave=<n>/results/...    per-wave increment (append semantics)
-    <root>/wave=<n>/metrics/...
     <root>/wave=<n>/_COMMIT        atomic rename publishes the wave;
                                    {"wave": n[, "compacted": true]}
 
@@ -25,7 +24,8 @@ The commit marker is written last; readers ignore uncommitted waves, so
 a crash at any point resumes from the previous wave with no duplicate
 or lost state (the reference's exactly-once recovery guarantee, T3-T5).
 A committed wave whose events are missing is an error, never an empty
-delta (read_log).
+delta (read_log). Any other dir in a wave (the ``metrics/`` journals
+written before per-host metrics became a view over results) is ignored.
 """
 
 from __future__ import annotations
@@ -156,24 +156,17 @@ class EventLogStore:
         waves = self.committed_waves()
         return waves[-1] if waves else None
 
-    def write_increment(self, wave: int, name: str, df: DataFrame) -> DataFrame:
-        """Write a per-wave append table (results/metrics) ahead of the
-        commit marker; returns the re-read frame (lineage truncation)."""
-        d = os.path.join(self._wave_dir(wave), name)
-        df.write.mode("overwrite").parquet(d)
-        return self.spark.read.parquet(d)
+    def write_increment(self, wave: int, results: DataFrame) -> None:
+        """Write wave ``wave``'s results ahead of its commit marker."""
+        results.write.mode("overwrite").parquet(
+            os.path.join(self._wave_dir(wave), "results"))
 
     def all_results(self) -> DataFrame | None:
-        return self._read_increments("results")
-
-    def all_metrics(self) -> DataFrame | None:
-        return self._read_increments("metrics")
-
-    def _read_increments(self, name: str) -> DataFrame | None:
+        """Every committed wave's results (None before any)."""
         paths = [
-            os.path.join(self._wave_dir(w), name)
+            os.path.join(self._wave_dir(w), "results")
             for w in self.committed_waves()
-            if os.path.isdir(os.path.join(self._wave_dir(w), name))
+            if os.path.isdir(os.path.join(self._wave_dir(w), "results"))
         ]
         return self.spark.read.parquet(*paths) if paths else None
 
@@ -263,7 +256,7 @@ class EventLogStore:
         old = self.committed_waves()
         self.append_events(wave, compacted, extra={"compacted": True})
         # drop only the EVENT deltas of older waves — their markers and
-        # results/metrics increments remain (they are the crawl output)
+        # results increments remain (they are the crawl output)
         for w in old:
             if w != wave:
                 for name in ("events", "events.old"):

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from moca_spark.criteria.dsl import CriteriaSpec, Work
-from moca_spark.crawl.engine import CrawlEngine
+from moca_spark.crawl.engine import CrawlEngine, CrawlResult
 from moca_spark.crawl.oracle import (
     oracle_corpus_urls,
     oracle_crawl,
@@ -694,25 +694,56 @@ def test_eventlog_mode_parity(spark, tmp_path):
 
 @pytest.mark.parametrize("durable", [False, "eventlog"])
 def test_metrics_match_results(spark, tmp_path, durable):
-    """A7/S4: the per-wave ``metrics`` table is the wave's results
-    grouped by (wave, host) — ``scheduled`` rows and ``fetched``
-    successes (a corpus missing some URLs makes them differ) — in both
-    the in-memory and the event-log layout."""
+    """A7/S4: ``CrawlResult.metrics`` is the results grouped by (wave,
+    host) — ``scheduled`` rows and ``fetched`` successes (a corpus
+    missing some URLs makes them differ) — in both the in-memory and
+    the event-log layout. It is a view: the journal holds no
+    ``metrics/`` dir, a resume derives the same view, a stale
+    ``metrics/`` dir (journals written before the view) is ignored,
+    and the engine has no ``collect_metrics`` option."""
+    import os
+    import shutil
+
     from pyspark.sql import functions as F
 
     edges = zipf_graph(n_hosts=4, pages_per_host=6)
     works = [W("w1", "http://host0.test/p0", max_depth=4)]
     urls = sorted(oracle_corpus_urls(edges, works))
+    corpus = set(urls) - set(urls[1::3])
     eng, _ = make_engine(spark, tmp_path, works, edges, budget=2,
-                         corpus_urls=set(urls) - set(urls[1::3]),
-                         durable=durable)
+                         corpus_urls=corpus, durable=durable)
     res = eng.run()
-    got = sorted(tuple(r) for r in res.metrics.select(
-        "wave", "host", "scheduled", "fetched").collect())
+
+    def view(r):
+        return sorted(tuple(x) for x in r.metrics.select(
+            "wave", "host", "scheduled", "fetched").collect())
+
+    got = view(res)
     want = sorted(tuple(r) for r in res.results.groupBy("wave", "host").agg(
         F.count("*"), F.sum(F.col("fetched").cast("long"))).collect())
     assert got == want
     assert res.waves > 1 and any(s != f for _w, _h, s, f in got)
+    assert CrawlResult(res.frontier, res.seen, None, 0).metrics is None
+    if not durable:
+        return
+    chk = tmp_path / "chk"
+    assert not list(chk.glob("wave=*/metrics"))
+    with pytest.raises(TypeError, match="collect_metrics"):
+        CrawlEngine(spark, None, None, collect_metrics=False)
+    # the journal as it stood one wave before the end, with the stale
+    # metrics dir an older engine wrote into wave 1
+    cut = tmp_path / "cut"
+    shutil.copytree(chk, cut / "chk")
+    shutil.rmtree(cut / "chk" / f"wave={res.waves}")
+    res.metrics.filter(F.col("wave") == 1).withColumn(
+        "partition_id", F.spark_partition_id()).write.parquet(
+        os.fspath(cut / "chk" / "wave=1" / "metrics"))
+    eng2, _ = make_engine(spark, cut, works, edges, budget=2,
+                          corpus_urls=corpus, durable=durable)
+    resumed = eng2.run(resume=True)
+    assert resumed.waves == res.waves and view(resumed) == got
+    for a, b in ((resumed.frontier, res.frontier), (resumed.seen, res.seen)):
+        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_eventlog_without_checkpoint_dir_raises(spark):

@@ -56,3 +56,32 @@ def test_demo_resume_reuses_corpus(spark, tmp_path, monkeypatch, capsys):
                  "--demo", "--checkpoint", str(tmp_path / "whole"))
     assert resumed == whole
     assert whole["pending"] == 0 and whole["fetched"] > 0
+
+
+def test_summary_counts_failed_fetches(spark, tmp_path, monkeypatch, capsys):
+    """On tables given by ``--links/--images/--seeds``, ``scheduled``
+    counts every URL a wave consumed and ``fetched`` only those the
+    corpus served: with a corpus that lacks some URLs the two differ,
+    and both equal the oracle's (``fetched`` used to count every
+    results row, failed fetches included)."""
+    from moca_spark.crawl.oracle import oracle_corpus_urls, oracle_crawl
+    from moca_spark.criteria.dsl import CriteriaSpec, Work
+    from moca_spark.sources.synth import images_for_urls, links_df, zipf_graph
+
+    monkeypatch.setattr("moca_spark.session.ship_package", lambda spark: "")
+    edges = zipf_graph(n_hosts=3, pages_per_host=5)
+    works = [Work("w1", "http://host0.test/p0", CriteriaSpec())]
+    urls = sorted(oracle_corpus_urls(edges, works))
+    corpus = set(urls) - set(urls[1::3])
+    links_df(spark, edges).write.parquet(str(tmp_path / "links"))
+    images_for_urls(spark, sorted(corpus)).write.parquet(str(tmp_path / "images"))
+    (tmp_path / "seeds.txt").write_text("http://host0.test/p0|w1\n")
+    got = _run(_load_job(), monkeypatch, capsys,
+               "--seeds", str(tmp_path / "seeds.txt"),
+               "--links", str(tmp_path / "links"),
+               "--images", str(tmp_path / "images"),
+               "--checkpoint", str(tmp_path / "chk"), "--budget", "2")
+    want = oracle_crawl(works, edges, budget=2, corpus_urls=corpus)
+    assert got["scheduled"] == len(want.results)
+    assert got["fetched"] == sum(r["fetched"] for r in want.results)
+    assert 0 < got["fetched"] < got["scheduled"]

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -56,6 +57,13 @@ def exec_node_names(plan) -> list[str]:
 
 
 def main() -> int:
+    # one scratch dir for every table the audit writes, removed however
+    # the audit ends
+    with tempfile.TemporaryDirectory(prefix="audit-") as tmp:
+        return audit(tmp)
+
+
+def audit(tmp: str) -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -157,14 +165,12 @@ def main() -> int:
     #     fetch join must read O(slice) of the corpus, not all of it —
     #     plain parquet: the slice-id In filter is pushed to the scan;
     #     bucketed corpus (write_corpus_bucketed): buckets are pruned.
-    import tempfile
-
     from moca_spark.crawl.engine import CrawlEngine
     from moca_spark.store.lakehouse import write_corpus_bucketed
 
     links0 = spark.createDataFrame(
         [("http://h.test/a", "http://h.test/b")], ["src_url", "dst_url"])
-    corp_dir = tempfile.mkdtemp(prefix="audit-corpus-")
+    corp_dir = f"{tmp}/corpus"
     _images.write.mode("overwrite").parquet(f"{corp_dir}/plain")
     plain = spark.read.parquet(f"{corp_dir}/plain")
     slice_fixture = seeds.limit(20).select("url")
@@ -184,7 +190,7 @@ def main() -> int:
     #     join-based fallback must insert a dynamic partition pruning
     #     expression into the partitioned links scan (round-2 shape
     #     silently dropped ALL pruning past 10k hosts)
-    dpp_dir = tempfile.mkdtemp(prefix="audit-dpp-")
+    dpp_dir = f"{tmp}/dpp"
     big_links = spark.createDataFrame(
         [(f"http://h{i}.test/a", f"http://h{i}.test/b", f"h{i}.test")
          for i in range(30)],

@@ -48,7 +48,7 @@ def main() -> None:
         spark, links_df(spark, edges), images_for_urls(spark, urls),
         budget=1, durable="eventlog",
         checkpoint_dir=tempfile.mkdtemp(prefix="wavecost-"),
-        collect_metrics=False, n_salts=2,
+        n_salts=2,
         use_bloom=use_bloom, bloom_capacity=1_000_000,
     )
     eng.add_works([Work("w1", urls[0], CriteriaSpec(max_depth=10_000))])
