@@ -297,8 +297,7 @@ def seen_delta(sliced: DataFrame, seen: SeenState) -> tuple[DataFrame, int]:
     unless empty. Its count job is the wave's cache-populating action
     on the slice, and the count doubles as the loop's emptiness signal
     (an empty slice ⟺ an empty frontier, so run() needs no per-wave
-    isEmpty action) and bounds the fetch-prune id collect (a <= n_rows
-    plain collect instead of a distinct+limit exchange; _pruned_images).
+    isEmpty action) and picks the fetch-prune shape (_pruned_images).
     Lazy checkpoint + count(): the count job IS the materialization
     (eager=True would run the same job internally), so the row count
     comes for free."""
@@ -455,7 +454,7 @@ class CrawlEngine:
         compact_every: int = 0,
         links_canonical: bool = False,
         fold_every: int = 8,
-        fetch_prune: int = 10_000,
+        fetch_prune: int = 200,
         corpus_buckets: int = 0,
         filter_delta_max_keys: int = 10_000_000,
         runid_trim_max_runs: int = 4096,
@@ -482,23 +481,20 @@ class CrawlEngine:
         self.durable = durable
         self.bloom_capacity = bloom_capacity
         self.use_token_bucket = use_token_bucket
-        # fetch_prune=N: push the wave's slice image-ids (bounded by
-        # budget x active hosts) as a literal In filter into the corpus
-        # scan, so the per-wave fetch join reads O(slice) instead of
-        # scanning the whole corpus table every wave — THE 100 TB fetch
-        # story. On a bucketed+sorted corpus (store/lakehouse.py
-        # write_corpus_bucketed) the filter also prunes buckets
-        # (SelectedBucketsCount) and row groups (min/max stats on the
-        # sorted image_id). 0 disables; slices above N fall back to the
-        # full join (AQE still broadcasts the slice side).
+        # fetch_prune=N: a wave of <= N slice rows pushes its image-ids
+        # as one literal In filter into the corpus scan, so the fetch
+        # join reads O(slice) instead of the whole corpus table — THE
+        # 100 TB fetch story. N stays under the session's
+        # parquet.pushdown.inFilterThreshold (256), above which parquet
+        # degrades the In to a min/max range. Larger waves read only
+        # their buckets' files on a bucketed corpus, else the full
+        # table; 0 disables (_pruned_images).
         self.fetch_prune_threshold = fetch_prune
         # corpus_buckets=B: the images table was written by
-        # write_corpus_bucketed(n_buckets=B). Slice ids are then
-        # grouped by their bucket (pmod(hash(id), B) — F.hash IS
-        # Spark's bucketing hash, Murmur3 seed 42) before chunking, so
-        # each pushed-In branch prunes to the few bucket files its ids
-        # actually live in instead of every branch touching every
-        # bucket (task count drops from branches x buckets to ~buckets)
+        # write_corpus_bucketed(n_buckets=B), so a wave above
+        # fetch_prune reads only the files of the buckets its ids hash
+        # to (pmod(hash(id), B) — F.hash IS Spark's bucketing hash,
+        # Murmur3 seed 42)
         self.corpus_buckets = corpus_buckets
         self._corpus_bucket_files: dict[int, list[str]] | None = None
         self._warned_unbucketed = False
@@ -1078,14 +1074,6 @@ class CrawlEngine:
         """64-bit bloom key over (run, url) — xxhash64, JVM-side."""
         return F.xxhash64(F.concat_ws("\x00", F.col(run_col), F.col(url_col)))
 
-    # parquet evaluates a pushed In as a values-deep Or recursion and
-    # stack-overflows near ~2000 values; Spark's
-    # parquet.pushdown.inFilterThreshold (session.py: 256) degrades
-    # larger Ins to a min/max range, which skips nothing over uniform
-    # sha1 ids. Chunking the SORTED id list keeps every chunk under the
-    # threshold, so each branch scan gets an exact pushed In.
-    FETCH_PRUNE_CHUNK = 200
-
     def _pruned_links(self, parents: DataFrame, links: DataFrame) -> DataFrame:
         """The links-graph side (``links``, the run's _link_graph) of
         the expand join, pruned to the wave's scheduled hosts. Joining
@@ -1120,126 +1108,55 @@ class CrawlEngine:
             )
         return links
 
-    def _pruned_images(self, sliced: DataFrame,
-                       n_rows: int | None = None) -> DataFrame:
+    def _pruned_images(self, sliced: DataFrame, n_rows: int) -> DataFrame:
         """The corpus side of the fetch join, pruned to this wave's
-        slice — per-wave fetch reads O(slice), independent of corpus
-        size (the round-2 scale-killer: the old shape scanned the whole
-        corpus table every wave).
+        slice of ``n_rows`` rows — per-wave fetch reads O(slice),
+        independent of corpus size (the round-2 scale-killer: the old
+        shape scanned the whole corpus table every wave). Three shapes:
 
-        The slice is bounded (budget × active hosts), so its image-ids
-        are collected, sorted, and pushed into the corpus scan as
-        literal In filters, chunked to <= FETCH_PRUNE_CHUNK ids per
-        scan branch so parquet applies them exactly. What each pushed
-        branch skips, by corpus layout (write_corpus_bucketed):
+        - ``n_rows`` <= fetch_prune_threshold: the slice's ids (at most
+          ``n_rows``, so a plain narrow collect of the cached slice)
+          are pushed into the corpus scan as ONE literal In filter,
+          under the session's parquet.pushdown.inFilterThreshold, so
+          parquet applies it exactly: a bucketed corpus reads only the
+          bucket files the ids hash to, and sorted image_id row-group
+          stats and bloom filters skip inside them;
+        - a larger slice on a bucketed corpus (corpus_buckets): only the
+          touched buckets' files (_bucket_pruned_images), bounded at any
+          slice size;
+        - anything else, or fetch_prune_threshold=0: the full join (an
+          unbucketed corpus warns once).
 
-        - bucket pruning: a branch reads only the bucket FILES its ids
-          hash to (chunks are bucket-aligned when corpus_buckets is
-          set, so branches cover disjoint bucket ranges);
-        - row-group skipping: sorted image_id gives tight min/max
-          stats; row-group bloom filters skip on exact membership.
-          Skipping bites when ids-per-bucket < row-groups-per-bucket —
-          rows read are O(min(corpus, slice × rowgroup_rows)), vs the
-          round-2 shape's O(corpus) always.
-
-        Policy: a single pushed branch for slices <= FETCH_PRUNE_CHUNK
-        (helps on prunable layouts, harmless otherwise — still one
-        scan); multi-branch chunking ONLY on a bucketed corpus (on an
-        unprunable layout every branch would rescan the whole table —
-        measured 10x worse, tools/fetch_bench.py); above
-        fetch_prune_threshold — where collecting an unbounded id list
-        would trade a scan problem for a driver problem — a bucketed
-        corpus degrades to BUCKET-level pruning (_bucket_pruned_images:
-        collect the <= corpus_buckets distinct bucket ids, bounded at
-        ANY slice size, and read only those buckets' files), and an
-        unbucketed one to the full join; at that regime the corpus
-        belongs in a point-lookup store (Iceberg + file blooms / KV;
-        README divergence #6). tools/plan_audit.py asserts the plan
-        shapes; tools/fetch_bench.py measures rows-read flatness under
-        8x corpus growth."""
+        Every shape feeds the left fetch join a superset of the slice's
+        corpus rows, so the choice moves cost, never rows.
+        tools/plan_audit.py asserts the plan shapes; tools/fetch_bench.py
+        measures rows read under 8x corpus growth."""
         if not self.fetch_prune_threshold:
             return self.images
-        id_col = F.sha1(F.encode("url", "UTF-8")).alias("image_id")
-        if n_rows is not None and n_rows <= self.fetch_prune_threshold:
-            # round-6: the caller already knows the slice's exact row
-            # count (the seen-delta count the wave pays anyway), and it
-            # bounds the distinct-id count — so the id collect needs NO
-            # distinct exchange and NO limit machinery: one narrow scan
-            # of the cached slice, dedup on the driver (<= n_rows
-            # values). The distinct+limit path below remains for
-            # callers without a count (row count above the threshold
-            # can still mean few DISTINCT ids on multi-run slices).
-            if self.corpus_buckets:
-                rows = sliced.select(
-                    id_col,
-                    F.pmod(F.hash("image_id"), F.lit(self.corpus_buckets))
-                    .alias("_b"),
-                ).collect()
-                ids = [i for _, i in sorted({(r._b, r.image_id) for r in rows})]
-            else:
-                ids = sorted({r.image_id for r in sliced.select(id_col).collect()})
-            return self._images_for_ids(ids)
-        if self.corpus_buckets:
-            # bucket-aligned chunk order: consecutive chunks cover
-            # consecutive buckets, so each branch's bucket pruning
-            # selects only the ~chunk/ids-per-bucket files it needs
-            # distinct BEFORE limit: a multi-run slice carries the same
-            # image_id (sha1(url) is run-independent) on several rows —
-            # limiting raw rows could under-collect distinct ids past
-            # the threshold and silently prune real fetches into misses
-            rows = sliced.select(id_col).select(
-                "image_id",
-                F.pmod(F.hash("image_id"), F.lit(self.corpus_buckets))
-                .alias("_b"),
-            ).distinct().limit(self.fetch_prune_threshold + 1).collect()
-            ids = [i for _, i in sorted({(r._b, r.image_id) for r in rows})]
-        else:
+        if n_rows <= self.fetch_prune_threshold:
             ids = sorted({
-                r.image_id
-                for r in sliced.select(id_col).distinct()
-                .limit(self.fetch_prune_threshold + 1).collect()
+                r.image_id for r in sliced.select(
+                    F.sha1(F.encode("url", "UTF-8")).alias("image_id")
+                ).collect()
             })
-        if len(ids) > self.fetch_prune_threshold:
-            if self.corpus_buckets:
-                return self._bucket_pruned_images(sliced)
-            if not self._warned_unbucketed:
-                import warnings
+            return self.images.filter(F.col("image_id").isin(ids))
+        if self.corpus_buckets:
+            return self._bucket_pruned_images(sliced)
+        if not self._warned_unbucketed:
+            import warnings
 
-                self._warned_unbucketed = True
-                warnings.warn(
-                    "a wave scheduled more than fetch_prune="
-                    f"{self.fetch_prune_threshold} URLs against an "
-                    "UNBUCKETED corpus: every such wave rescans the "
-                    "whole corpus table. Write the corpus with "
-                    "store.lakehouse.write_corpus_bucketed and pass "
-                    "corpus_buckets= so big waves prune to the touched "
-                    "buckets' files instead",
-                    stacklevel=2,
-                )
-            return self.images
-        return self._images_for_ids(ids)
-
-    def _images_for_ids(self, ids: list[str]) -> DataFrame:
-        """The corpus pruned to a bounded, sorted id list (<=
-        fetch_prune_threshold ids; bucket-aligned order when
-        corpus_buckets is set) — the chunked pushed-In scan shape the
-        class docstring describes."""
-        if not ids:
-            return self.images
-        chunk = self.FETCH_PRUNE_CHUNK
-        if len(ids) > chunk and not self.corpus_buckets:
-            # multi-branch chunking multiplies SCANS; without bucket
-            # pruning to pay for them (each branch would rescan the
-            # whole table) the full join is strictly cheaper
-            return self.images
-        branches = [
-            self.images.filter(F.col("image_id").isin(ids[i:i + chunk]))
-            for i in range(0, len(ids), chunk)
-        ]
-        out = branches[0]
-        for b in branches[1:]:
-            out = out.unionByName(b)
-        return out
+            self._warned_unbucketed = True
+            warnings.warn(
+                "a wave scheduled more than fetch_prune="
+                f"{self.fetch_prune_threshold} URLs against an "
+                "UNBUCKETED corpus: every such wave rescans the "
+                "whole corpus table. Write the corpus with "
+                "store.lakehouse.write_corpus_bucketed and pass "
+                "corpus_buckets= so big waves prune to the touched "
+                "buckets' files instead",
+                stacklevel=2,
+            )
+        return self.images
 
     def _bucket_files(self) -> dict[int, list[str]]:
         """bucket id -> parquet files of the bucketed corpus, parsed
@@ -1330,9 +1247,9 @@ class CrawlEngine:
 
     def _bucket_pruned_images(self, sliced: DataFrame) -> DataFrame:
         """Bucket-level corpus pruning for slices ABOVE
-        fetch_prune_threshold (round-3 gap: a production wave at the
-        10^10 target schedules ~10^5-10^6 URLs — exactly the regime
-        where the id-list fallback rescanned the whole corpus).
+        fetch_prune_threshold (a production wave at the 10^10 target
+        schedules ~10^5-10^6 URLs, far past what one pushed In can
+        carry).
         Collecting the slice's distinct BUCKET ids is bounded at
         <= corpus_buckets values for ANY slice size, so the driver
         cost stays O(buckets); reading only those buckets' files makes
@@ -1416,7 +1333,7 @@ class CrawlEngine:
     def _fetch(self, wave: int, sliced: DataFrame, n_delta: int) -> DataFrame:
         """The slice left-joined to the image+caption corpus on
         image_id, pruned to the slice's ids (O(slice) corpus reads;
-        _pruned_images — ``n_delta`` bounds the id collect). A null
+        _pruned_images — ``n_delta`` picks the shape). A null
         ``bytes`` is a fetch failure."""
         fetched = sliced.withColumn("image_id", F.sha1(F.encode("url", "UTF-8"))) \
             .join(self._pruned_images(sliced, n_delta), "image_id", "left")

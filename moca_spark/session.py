@@ -81,15 +81,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # fetch-prune point lookups (engine._pruned_images) push the
-        # slice image-ids as a parquet In filter for row-group
-        # skipping; past this threshold Spark degrades In to a min/max
-        # range (useless over uniform sha1 ids) — but parquet evaluates
-        # In as a values-deep Or recursion, which stack-overflows near
-        # ~2000 values (measured), so 256 with margin. Larger slices
-        # still prune FILES via Catalyst-level bucket pruning on the
-        # bucketed corpus (write_corpus_bucketed), which has no such
-        # limit — that is the at-scale layout.
+        # fetch-prune point lookups (engine._pruned_images) push a
+        # slice of <= fetch_prune (default 200) image-ids as one
+        # parquet In filter for row-group skipping; past this
+        # threshold Spark degrades In to a min/max range (useless over
+        # uniform sha1 ids), and parquet evaluates In as a values-deep
+        # Or recursion that stack-overflows near ~2000 values. Larger
+        # slices read only their buckets' files on the bucketed corpus
+        # (write_corpus_bucketed), which has no such limit.
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "256")
         # keep bucketed scans ON even when a query has no
         # shuffle-avoidance benefit: the corpus fetch join relies on

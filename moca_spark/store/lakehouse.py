@@ -53,12 +53,13 @@ def write_corpus_bucketed(
     fetch join read O(slice) (engine._pruned_images pushes the slice
     ids; tools/fetch_bench.py measures the flatness):
 
-    - bucket pruning: the slice-derived In filters select only the
-      bucket files the wave's ids hash to (``SelectedBucketsCount``);
+    - bucket pruning: a small wave's pushed In filter, or a large
+      wave's bucket-file read, selects only the bucket files the
+      wave's ids hash to (``SelectedBucketsCount``);
     - row-group skipping: sorted image_id gives tight min/max stats
-      per row group, so each pushed-In chunk touches ~chunk-many row
-      groups; the bloom filters skip on exact membership even where
-      stats are loose. Row groups are capped at ``row_group_bytes``
+      per row group, so a pushed In of k ids touches ~k row groups;
+      the bloom filters skip on exact membership even where stats are
+      loose. Row groups are capped at ``row_group_bytes``
       (point lookups want granular skipping, not 128 MB scan units).
 
     One file per bucket (repartition matches the bucket hash). On a

@@ -647,7 +647,7 @@ def test_bucket_layout_validation_wrong_count(spark, tmp_path):
             budget=8, checkpoint_dir=str(tmp_path / f"chk{wrong}"),
             durable=False, fetch_prune=4, corpus_buckets=wrong)
         with pytest.warns(UserWarning, match="bucket"):
-            pruned = eng._pruned_images(sliced)
+            pruned = eng._pruned_images(sliced, len(urls))
         assert eng._bucket_files() == {}  # pruning disabled, cached
         assert pruned.count() == images.count()  # full-join fallback
     # the CORRECT count passes validation and keeps the prune path
@@ -674,10 +674,10 @@ def test_unbucketed_big_slice_warns_once(spark, tmp_path):
     sliced = spark.createDataFrame(
         [("w1", u) for u in urls], "run_id string, url string")
     with pytest.warns(UserWarning, match="UNBUCKETED"):
-        assert eng._pruned_images(sliced).count() == images.count()
+        assert eng._pruned_images(sliced, 8).count() == images.count()
     with warnings.catch_warnings(record=True) as seen:
         warnings.simplefilter("always")
-        eng._pruned_images(sliced).count()
+        eng._pruned_images(sliced, 8).count()
     assert not [w for w in seen if "UNBUCKETED" in str(w.message)]
 
 
@@ -1060,9 +1060,10 @@ def test_same_host_criteria_with_domain_selector(spark, tmp_path):
 
 def test_fetch_prune_parity_all_paths(spark, tmp_path):
     """Fetch-corpus pruning (engine._pruned_images) must be invisible to
-    semantics on every policy branch: default single-branch pruning
-    (every test above), pruning disabled, threshold-exceeded fallback,
-    and the bucketed multi-branch path."""
+    semantics on every unbucketed shape: the single pushed In (every
+    test above), pruning disabled, and the threshold-exceeded full
+    join. The bucketed shapes are covered by
+    test_fetch_prune_bucket_level_crawl_parity."""
     edges = zipf_graph(n_hosts=4, pages_per_host=8)
     works = [W("w1", "http://host0.test/p0", max_depth=4)]
     # pruning disabled
@@ -1072,38 +1073,6 @@ def test_fetch_prune_parity_all_paths(spark, tmp_path):
     # threshold smaller than any slice -> full-join fallback
     got, want = run_both(spark, tmp_path, works, edges, budget=3,
                          fetch_prune=1)
-    assert_match(got, want)
-
-
-def test_fetch_prune_bucketed_corpus(spark, tmp_path):
-    """Crawl over a write_corpus_bucketed corpus with bucket-aligned
-    multi-branch pruning (FETCH_PRUNE_CHUNK forced tiny so a real
-    slice spans several chunks); parity with the oracle proves chunked
-    branch scans reconstruct exactly the slice's corpus rows."""
-    from moca_spark.store.lakehouse import (
-        read_corpus_bucketed,
-        write_corpus_bucketed,
-    )
-
-    edges = zipf_graph(n_hosts=4, pages_per_host=8)
-    works = [W("w1", "http://host0.test/p0", max_depth=4)]
-    urls = oracle_corpus_urls(edges, works)
-    corpus_dir = str(tmp_path / "corpus")
-    write_corpus_bucketed(
-        spark, images_for_urls(spark, sorted(urls)), corpus_dir, n_buckets=4)
-    # fresh-session re-registration path
-    spark.sql(f"DROP TABLE IF EXISTS "
-              f"{__import__('moca_spark.store.lakehouse', fromlist=['x'])._corpus_table_name(corpus_dir)}")
-    images = read_corpus_bucketed(spark, corpus_dir)
-    eng = CrawlEngine(
-        spark, links_df(spark, edges), images, budget=3,
-        checkpoint_dir=str(tmp_path / "chk"), n_salts=4, durable=False,
-        corpus_buckets=4,
-    )
-    eng.FETCH_PRUNE_CHUNK = 2  # force multi-branch on small slices
-    eng.add_works(works)
-    got = eng.run()
-    want = oracle_crawl(works, edges, budget=3, corpus_urls=urls)
     assert_match(got, want)
 
 
@@ -1141,7 +1110,7 @@ def test_fetch_prune_bucket_level_above_threshold(spark, tmp_path):
     assert len(slice_ids) > 4  # above the id threshold -> bucket path
     sliced = spark.createDataFrame(
         [("w1", id2url[i]) for i in slice_ids], "run_id string, url string")
-    pruned = eng._pruned_images(sliced)
+    pruned = eng._pruned_images(sliced, len(slice_ids))
     # reads only the touched buckets' files
     read_buckets = {int(re.search(r"_(\d{5})\.c000", f).group(1))
                     for f in pruned.inputFiles()}
@@ -1152,91 +1121,134 @@ def test_fetch_prune_bucket_level_above_threshold(spark, tmp_path):
     assert got < {i for rows in by_bucket.values() for i in rows}
 
 
-def test_fetch_prune_bucket_level_crawl_parity(spark, tmp_path):
+@pytest.mark.parametrize("fetch_prune", [1, 3])
+def test_fetch_prune_bucket_level_crawl_parity(spark, tmp_path, fetch_prune):
     """Crawl parity with fetch_prune forced tiny over a bucketed
-    corpus: every wave's slice overflows the id threshold, so fetches
-    run through the bucket-level prune path end-to-end."""
-    from moca_spark.store.lakehouse import write_corpus_bucketed
+    corpus: the one-seed first wave takes the pushed In, and later
+    waves overflow the threshold into the bucket-file prune, so the
+    crawl crosses the In -> bucket boundary mid-run. The corpus is
+    re-registered as in a fresh session (read_corpus_bucketed)."""
+    from moca_spark.store.lakehouse import (
+        _corpus_table_name,
+        read_corpus_bucketed,
+        write_corpus_bucketed,
+    )
 
     edges = zipf_graph(n_hosts=4, pages_per_host=8)
     works = [W("w1", "http://host0.test/p0", max_depth=4)]
     urls = oracle_corpus_urls(edges, works)
     corpus_dir = str(tmp_path / "corpus")
-    images = write_corpus_bucketed(
+    write_corpus_bucketed(
         spark, images_for_urls(spark, sorted(urls)), corpus_dir,
         n_buckets=4)
+    spark.sql(f"DROP TABLE IF EXISTS {_corpus_table_name(corpus_dir)}")
+    images = read_corpus_bucketed(spark, corpus_dir)
     eng = CrawlEngine(
         spark, links_df(spark, edges), images, budget=3,
         checkpoint_dir=str(tmp_path / "chk"), n_salts=4, durable=False,
-        fetch_prune=1, corpus_buckets=4,
+        fetch_prune=fetch_prune, corpus_buckets=4,
     )
+    slice_rows = []
+    inner = eng._pruned_images
+
+    def pruned(sliced, n_rows):
+        slice_rows.append(n_rows)
+        return inner(sliced, n_rows)
+
+    eng._pruned_images = pruned
     eng.add_works(works)
     got = eng.run()
     want = oracle_crawl(works, edges, budget=3, corpus_urls=urls)
     assert_match(got, want)
+    assert min(slice_rows) <= fetch_prune < max(slice_rows)
+
+
+def _slice_ids(sliced):
+    from pyspark.sql import functions as F
+
+    return {r.image_id for r in sliced.select(
+        F.sha1(F.encode("url", "UTF-8")).alias("image_id")).collect()}
+
+
+def _multi_run_slice(spark, urls):
+    """Two runs over the same URLs: every image_id sits on two rows
+    (sha1(url) is run-independent)."""
+    return spark.createDataFrame(
+        [(f"w{r}", u) for r in range(2) for u in urls],
+        "run_id string, url string",
+    )
 
 
 def test_fetch_prune_multi_run_duplicate_ids(spark, tmp_path):
-    """Regression (round-3 advice, HIGH): _pruned_images must count
-    DISTINCT image-ids against fetch_prune_threshold. A multi-run slice
-    carries the same image_id on several rows (sha1(url) is
-    run-independent); limiting raw rows before dedup could collect a
-    <=threshold id set that MISSES ids from uncollected rows, pass the
-    fallback guard, and silently prune real fetches into misses."""
-    from pyspark.sql import functions as F
-
-    from moca_spark.sources.synth import links_df
-
-    urls = [f"http://host0.test/p{i}" for i in range(8)]
+    """A multi-run slice of <= fetch_prune ROWS is pruned to exactly
+    its distinct image-ids (the plain collect dedups on the driver);
+    one of more rows, even with few distinct ids, takes the full
+    corpus on an unbucketed layout — no slice id is ever pruned into
+    a miss."""
+    urls = [f"http://host0.test/p{i}" for i in range(12)]
     images = images_for_urls(spark, urls)
+    sliced = _multi_run_slice(spark, urls[:8])  # 16 rows, 8 distinct ids
     eng = CrawlEngine(
         spark, links_df(spark, [(urls[0], urls[1])]), images,
         budget=8, checkpoint_dir=str(tmp_path / "chk"), durable=False,
-        fetch_prune=7,  # 16 slice rows, 8 distinct ids, threshold 7
+        fetch_prune=16,
     )
-    sliced = spark.createDataFrame(
-        [(f"w{r}", u) for r in range(2) for u in urls],
-        "run_id string, url string",
-    )
-    pruned = eng._pruned_images(sliced)
-    # 8 distinct ids > threshold 7 -> MUST fall back to the full corpus
-    assert pruned.count() == images.count()
-    # and under the threshold the pruned corpus covers every slice id
-    eng.fetch_prune_threshold = 8
-    got_ids = {r.image_id for r in eng._pruned_images(sliced)
-               .select("image_id").collect()}
-    want_ids = {r.image_id for r in sliced.select(
-        F.sha1(F.encode("url", "UTF-8")).alias("image_id")).collect()}
-    assert got_ids == want_ids
+    got = {r.image_id for r in eng._pruned_images(sliced, 16)
+           .select("image_id").collect()}
+    assert got == _slice_ids(sliced)
+    eng.fetch_prune_threshold = 15
+    with pytest.warns(UserWarning, match="UNBUCKETED"):
+        assert eng._pruned_images(sliced, 16).count() == images.count()
 
 
 def test_fetch_prune_multi_run_duplicate_ids_bucketed(spark, tmp_path):
-    """Same regression on the bucketed branch (corpus_buckets set)."""
-    from pyspark.sql import functions as F
-
-    from moca_spark.sources.synth import links_df
+    """Same rule on a bucketed corpus: above fetch_prune rows the
+    bucket-file prune still covers every distinct slice id."""
     from moca_spark.store.lakehouse import write_corpus_bucketed
 
-    urls = [f"http://host0.test/p{i}" for i in range(8)]
-    corpus_dir = str(tmp_path / "corpus")
+    urls = [f"http://host0.test/p{i}" for i in range(12)]
     images = write_corpus_bucketed(
-        spark, images_for_urls(spark, urls), corpus_dir, n_buckets=4)
+        spark, images_for_urls(spark, urls), str(tmp_path / "corpus"),
+        n_buckets=4)
+    sliced = _multi_run_slice(spark, urls[:8])
     eng = CrawlEngine(
         spark, links_df(spark, [(urls[0], urls[1])]), images,
         budget=8, checkpoint_dir=str(tmp_path / "chk"), durable=False,
-        fetch_prune=7, corpus_buckets=4,
+        fetch_prune=16, corpus_buckets=4,
     )
-    sliced = spark.createDataFrame(
-        [(f"w{r}", u) for r in range(2) for u in urls],
-        "run_id string, url string",
+    got = {r.image_id for r in eng._pruned_images(sliced, 16)
+           .select("image_id").collect()}
+    assert got == _slice_ids(sliced)
+    eng.fetch_prune_threshold = 15
+    got = {r.image_id for r in eng._pruned_images(sliced, 16)
+           .select("image_id").collect()}
+    assert _slice_ids(sliced) <= got
+
+
+def test_fetch_prune_in_boundary(spark, tmp_path):
+    """A slice of exactly fetch_prune rows plans one pushed
+    In(image_id) scan; one row more plans none (bucket files instead)."""
+    from moca_spark.store.lakehouse import write_corpus_bucketed
+
+    urls = [f"http://host0.test/p{i}" for i in range(40)]
+    images = write_corpus_bucketed(
+        spark, images_for_urls(spark, urls), str(tmp_path / "corpus"),
+        n_buckets=8)
+    eng = CrawlEngine(
+        spark, links_df(spark, [(urls[0], urls[1])]), images,
+        budget=8, checkpoint_dir=str(tmp_path / "chk"), durable=False,
+        fetch_prune=4, corpus_buckets=8,
     )
-    assert eng._pruned_images(sliced).count() == images.count()
-    eng.fetch_prune_threshold = 8
-    got_ids = {r.image_id for r in eng._pruned_images(sliced)
-               .select("image_id").collect()}
-    want_ids = {r.image_id for r in sliced.select(
-        F.sha1(F.encode("url", "UTF-8")).alias("image_id")).collect()}
-    assert got_ids == want_ids
+
+    def in_scans(n):
+        sliced = spark.createDataFrame(
+            [("w1", u) for u in urls[:n]], "run_id string, url string")
+        pruned = eng._pruned_images(sliced, n)
+        return pruned._jdf.queryExecution().executedPlan().toString() \
+            .count("In(image_id")
+
+    assert in_scans(4) == 1
+    assert in_scans(5) == 0
 
 
 def test_links_prune_semi_join_fallback_parity(spark, tmp_path):

@@ -1,27 +1,21 @@
 """Fetch-join pruning microbench: per-wave fetch cost must be
 independent of corpus size.
 
-The engine's fetch phase (crawl/engine.py CrawlEngine._fetch) probes the
-image corpus with the wave's bounded slice. Unpruned, every wave scans
-the WHOLE corpus table — cost grows linearly with corpus size and
-dominates everything at a 100 TB corpus. With slice-id pruning
-(engine._pruned_images: sorted ids, chunked pushed In filters) over a
-sorted/bucketed/bloom-filtered corpus (store/lakehouse.py
-write_corpus_bucketed), the scan reads O(slice) row groups.
+Drives the engine's fetch-corpus pruning (crawl/engine.py
+CrawlEngine._pruned_images) against corpora at S and 8S rows and
+reports corpus rows READ (scan numOutputRows) + wall time per shape:
 
-This tool drives the ENGINE's pruning code path (_pruned_images) with
-a fixed 2,000-URL slice against corpora at S and 8S rows, in three
-layouts, and reports corpus rows READ (scan numOutputRows) + wall
-time:
-
-    full      — no pruning, plain parquet        (the round-2 shape)
-    pruned    — chunked In pruning, plain parquet (unsorted)
-    bucketed  — chunked In pruning, bucketed+sorted+bloom corpus
+    full          — no pruning, plain parquet (the round-2 shape)
+    single_in     — the same <= fetch_prune-row slice pushed as one In
+                    into a bucketed+sorted+bloom corpus
+                    (store/lakehouse.py write_corpus_bucketed)
+    bucket_level  — a 24-row slice above fetch_prune=16: only its
+                    buckets' files are read
 
 Evidence target: `full` rows-read grows 8x with the corpus;
-`bucketed` rows-read stays ~flat (O(slice x row-group)). Usage:
+`single_in` rows-read stays ~flat (O(slice x row-group)). Usage:
 
-    python tools/fetch_bench.py [base_corpus_rows] [slice_rows]
+    python tools/fetch_bench.py [base_corpus_rows] [slice_rows<=256]
 """
 
 from __future__ import annotations
@@ -45,8 +39,7 @@ REPS = 5
 
 
 def scan_rows_read(df) -> int:
-    """Sum numOutputRows over every parquet scan in the executed plan
-    (the pruned plan unions one scan branch per id chunk)."""
+    """Sum numOutputRows over every parquet scan in the executed plan."""
     jp = df._jdf.queryExecution().executedPlan()
     if jp.nodeName() == "AdaptiveSparkPlan":
         jp = jp.executedPlan()
@@ -81,21 +74,23 @@ def measure(spark, sliced, images, prune_threshold: int,
     eng = CrawlEngine(spark, links0, images, durable=False,
                       fetch_prune=prune_threshold,
                       corpus_buckets=corpus_buckets)
+    n_rows = sliced.count()
+
+    def joined():
+        return sliced.withColumn(
+            "image_id", F.sha1(F.encode("url", "UTF-8"))
+        ).join(eng._pruned_images(sliced, n_rows), "image_id", "left")
+
     times = []
     for _ in range(REPS):
         t0 = time.time()
-        joined = sliced.withColumn(
-            "image_id", F.sha1(F.encode("url", "UTF-8"))
-        ).join(eng._pruned_images(sliced), "image_id", "left")
-        joined.write.format("noop").mode("overwrite").save()
+        joined().write.format("noop").mode("overwrite").save()
         times.append(time.time() - t0)
     # rows-read metric from an executed QueryExecution (untimed rep)
-    joined = sliced.withColumn(
-        "image_id", F.sha1(F.encode("url", "UTF-8"))
-    ).join(eng._pruned_images(sliced), "image_id", "left").drop("bytes")
-    joined.collect()
+    last = joined().drop("bytes")
+    last.collect()
     return {"sec": round(statistics.median(times), 3),
-            "rows_read": scan_rows_read(joined)}
+            "rows_read": scan_rows_read(last)}
 
 
 def corpus_of(pages):
@@ -115,7 +110,7 @@ def corpus_of(pages):
 
 def main() -> None:
     base = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_slice = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000
+    n_slice = int(sys.argv[2]) if len(sys.argv) > 2 else 200
     spark = get_spark(app_name="fetch-bench", master="local[8]",
                       shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
@@ -136,9 +131,8 @@ def main() -> None:
             pages.sample(2.0 * n_slice / n, seed=7).limit(n_slice)
             .localCheckpoint(eager=True)
         )
-        # bucket-LEVEL pruning regime (slices above fetch_prune's id
-        # threshold): the slice's distinct BUCKET ids are pushed
-        # instead of its (unbounded) id list. Uniform sha1 ids cover
+        # bucket-LEVEL pruning regime (slices above fetch_prune): only
+        # the slice's buckets' files are read. Uniform sha1 ids cover
         # all B buckets once |slice| >> B, so the mechanism pays off
         # only when B exceeds the slice size — which is exactly the
         # production layout (B = corpus_bytes / target_file_size, e.g.
@@ -151,20 +145,18 @@ def main() -> None:
         )
         out["sizes"][n] = {
             "full": measure(spark, sliced, plain, prune_threshold=0),
-            "pruned": measure(spark, sliced, plain, prune_threshold=10_000),
-            "bucketed": measure(spark, sliced, bucketed,
-                                prune_threshold=10_000, corpus_buckets=64),
+            "single_in": measure(spark, sliced, bucketed,
+                                 prune_threshold=n_slice, corpus_buckets=64),
             "bucket_level": measure(spark, bucket_slice, bucketed,
                                     prune_threshold=16, corpus_buckets=64),
         }
     s1, s8 = (out["sizes"][base * m] for m in (1, 8))
     out["rows_read_growth_8x"] = {
         k: round(s8[k]["rows_read"] / max(s1[k]["rows_read"], 1), 2)
-        for k in ("full", "pruned", "bucketed", "bucket_level")
+        for k in s1
     }
     out["sec_growth_8x"] = {
-        k: round(s8[k]["sec"] / max(s1[k]["sec"], 1e-9), 2)
-        for k in ("full", "pruned", "bucketed", "bucket_level")
+        k: round(s8[k]["sec"] / max(s1[k]["sec"], 1e-9), 2) for k in s1
     }
     # bucket-level pruning reads a FRACTION (touched/B) of the corpus
     # at any scale — report it against the full scan

@@ -164,7 +164,8 @@ def audit(tmp: str) -> int:
     # 6c. fetch-corpus pruning (engine._pruned_images): the per-wave
     #     fetch join must read O(slice) of the corpus, not all of it —
     #     plain parquet: the slice-id In filter is pushed to the scan;
-    #     bucketed corpus (write_corpus_bucketed): buckets are pruned.
+    #     bucketed corpus (write_corpus_bucketed): buckets are pruned;
+    #     a slice above fetch_prune reads only its buckets' files.
     from moca_spark.crawl.engine import CrawlEngine
     from moca_spark.store.lakehouse import write_corpus_bucketed
 
@@ -175,16 +176,27 @@ def audit(tmp: str) -> int:
     plain = spark.read.parquet(f"{corp_dir}/plain")
     slice_fixture = seeds.limit(20).select("url")
     eng_p = CrawlEngine(spark, links0, plain, durable=False)
-    p = plan_of(eng_p._pruned_images(slice_fixture))
+    p = plan_of(eng_p._pruned_images(slice_fixture, 20))
     check("fetch prune: In(image_id) pushed to plain corpus scan",
           "PushedFilters: [In(image_id" in p)
     bucketed = write_corpus_bucketed(spark, plain, f"{corp_dir}/bucketed",
                                      n_buckets=16)
     eng_b = CrawlEngine(spark, links0, bucketed, durable=False)
-    p = plan_of(eng_b._pruned_images(slice_fixture))
+    p = plan_of(eng_b._pruned_images(slice_fixture, 20))
     check("fetch prune: bucket pruning on bucketed corpus",
           "SelectedBucketsCount" in p and "out of 16" in p,
           detail="" if "SelectedBucketsCount" in p else "no bucket pruning in scan")
+    eng_f = CrawlEngine(spark, links0, bucketed, durable=False,
+                        fetch_prune=4, corpus_buckets=16)
+    small = seeds.limit(8).select("url")
+    touched = {r._b for r in small.select(F.pmod(
+        F.hash(F.sha1(F.encode("url", "UTF-8"))), F.lit(16)).alias("_b"))
+        .collect()}
+    read = {int(f.rsplit("_", 1)[1][:5])
+            for f in eng_f._pruned_images(small, 8).inputFiles()}
+    check("fetch prune: slice above fetch_prune reads only its buckets' files",
+          read == touched and len(read) < 16,
+          detail=f"read buckets {sorted(read)}, touched {sorted(touched)}")
 
     # 6d. links host-prune above the literal-list threshold: the
     #     join-based fallback must insert a dynamic partition pruning
