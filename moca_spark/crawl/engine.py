@@ -16,14 +16,17 @@ phases in order, each with explicit inputs and outputs:
   _expand       parents with depth < max_depth join the links graph
                 (AHrefCriteria.scala:16-21), then the compiled criteria
                 chain (criteria/stages.py);
-  consolidate_admit  min (depth, parent_rank) per (run, url); optional
-                bloom pre-filter, then exact classification vs seen —
-                admit unseen or strictly-smaller depth (re-crawl, T8);
+  consolidate_admit  min (depth, parent_rank) per (run, url), then
+                SeenState.admit: the optional bloom/cuckoo pre-filter
+                (SeenFilter, filters/seen_filter.py), then exact
+                classification vs seen — admit unseen or strictly-
+                smaller depth (re-crawl, T8);
   merge         frontier = rest ∪ fresh, unmerged: the next slice's
                 exchange keeps min (depth, seq) per (run, url) (J2);
   _commit       append the wave's results and events
                 (store/lakehouse.py, the Akka journal analog), fold the
-                seen deltas every ``fold_every`` waves. Memory mode
+                seen state (its deltas and its filter's) every
+                ``fold_every`` waves. Memory mode
                 (durable=False: localCheckpoint, no resume — tests/
                 bench) or the append-only event journal (durable=
                 "eventlog", the default): O(delta) writes per wave while
@@ -44,7 +47,10 @@ Scale notes (the 100 TB story):
   expand path; the links-graph join broadcasts the (small) parent side
   at runtime.
 - The SEEN table (the 10^10 monster) is an LSM: folded base + per-wave
-  deltas (SeenState). The base is hash-partitioned and
+  deltas (SeenState), with its optional approximate filter kept in the
+  same holder as a second LSM over the same keys (sharded shard-table
+  base + stacked key deltas, folded with the seen deltas). The base is
+  hash-partitioned and
   sorted by STATE_KEYS, preserved through AQE-off localCheckpoints
   (_materialize), so the per-wave admission join runs with ZERO
   exchange and ZERO sort on the base side (tools/plan_audit.py asserts
@@ -76,6 +82,7 @@ from pyspark.sql import functions as F
 
 from moca_spark.criteria.dsl import Work
 from moca_spark.criteria.stages import apply_criteria
+from moca_spark.filters.seen_filter import SeenFilter, seen_filter
 from moca_spark.functions.urls import (
     canonicalize_str,
     canonicalize_udf,
@@ -88,6 +95,30 @@ from moca_spark.store.lakehouse import EventLogStore, _reconstruct_state
 
 SEQ_WAVE_STRIDE = 1 << 32
 POLITENESS_INTERVAL_S = 5  # reference default, role/Task.scala:12
+# run_id dictionary trim (round 5, after the host-string trim): run_id
+# is tiny-cardinality (one per Work), so the hot loop carries a dense
+# int ordinal assigned in SORTED run_id order instead of the string.
+# (run_ord, url) <-> (run_id, url) is a bijection within one run()
+# execution, so exact-identity joins stay exact, and sorted assignment
+# makes ORDER BY (depth, seq, _key, run_ord, url) the SAME total order
+# as the ordering contract's (depth, seq, _key, run_id, url) — no
+# oracle change needed. Strings are re-attached on the budget-bounded
+# slice and at every boundary (journal, CrawlResult), exactly like the
+# host string. Same-JVM interleaved A/B (tools/runid_ab.py of commit
+# 4424178, 8M rows): trim/carry 1.12 at local[8], 1.25 at local[32].
+# Above this many runs the reverse-map array literal would bloat every
+# plan — the trim disables itself (strings carried, still correct).
+RUNID_TRIM_MAX_RUNS = 4096
+# (round 6) a wave whose slice holds at most this many rows gets an
+# EXPLICIT broadcast hint on the parent side of the expand join (the
+# parent count is bounded by the slice count, which the wave measures
+# exactly via the seen-delta checkpoint), and — on the plain exact
+# path, where the consolidated candidates have a single consumer — the
+# whole expand→consolidate→admit chain fuses into the one `fresh`
+# materialization instead of paying a separate cand2 checkpoint job.
+# 200k rows ~ tens of MB broadcast. Bigger waves keep the AQE-planned
+# checkpointed shape (runtime broadcast + skew-join handling).
+EXPAND_BROADCAST_MAX = 200_000
 
 # Canonical state key: a 64-bit hash LEADS every state join/group/sort
 # so per-row comparisons and sorts touch an 8-byte long first and the
@@ -177,12 +208,18 @@ class SeenState:
     full-width AQE-off exchanges. Once it crosses (the 10^10
     trajectory, immediately on any real crawl) the exchange-free
     sorted-base sort-merge path is used unchanged. Row bound, not
-    bytes: ~100 B/row ⇒ 500k rows ~ 50 MB broadcast."""
+    bytes: ~100 B/row ⇒ 500k rows ~ 50 MB broadcast.
+
+    ``filter`` (the engine's ``use_bloom``; filters/seen_filter.py) is
+    the optional approximate summary of the same keys, kept in step
+    here: ``push`` stacks the delta's keys on it, ``fold`` folds it,
+    ``admit`` probes it."""
 
     base: DataFrame
     deltas: list[DataFrame] = field(default_factory=list)
     rows_bound: int | None = None
     broadcast_max: int = 0
+    filter: SeenFilter | None = None
 
     def small(self) -> bool:
         """True while the state is PROVABLY tiny: the admission joins
@@ -190,10 +227,40 @@ class SeenState:
         return self.rows_bound is not None and self.rows_bound <= self.broadcast_max
 
     def push(self, delta: DataFrame, n_rows: int) -> None:
-        """Stack one wave's consume delta of ``n_rows`` rows."""
+        """Stack one wave's consume delta of ``n_rows`` rows, and its
+        keys on the filter: a projection of the delta's checkpoint, no
+        extra materialization."""
         self.deltas.append(delta)
         if self.rows_bound is not None:
             self.rows_bound += n_rows
+        if self.filter is not None:
+            self.filter.add(delta.select(F.col("_key").alias("k")), n_rows)
+
+    def admit(self, cand: DataFrame, cols: list) -> DataFrame:
+        """``cand``'s admitted rows, projected to ``cols``: the exact
+        rule (admit_unseen), behind the filter when there is one (J1
+        north rule). A filter MISS is definitive — those rows are
+        admitted without touching the seen table; HITs go to the exact
+        join, which alone decides (false positives cost join work,
+        never correctness). The deletable cuckoo then evicts the keys
+        it re-admits (T8), so its hit set stays tight under re-crawls;
+        a deleted entry re-routes future candidates into the frontier
+        min-merge (harmless dup), never drops one, and the URL is
+        re-inserted when its re-crawl is sliced."""
+        if self.filter is None:
+            return self.admit_unseen(cand).select(*cols)
+        tagged = self.filter.probe(cand)
+        new = tagged.filter(~F.col("_maybe_seen")).select(*cols)
+        evict = self.filter.deletable
+        checked = self.admit_unseen(tagged.filter(F.col("_maybe_seen")),
+                                    keep_flag=evict)
+        if evict:
+            # small: filter-hit admissions; with a big state AQE-off
+            # keeps the base side of the admit join exchange-free
+            checked = _materialize(checked, aqe_off=not self.small())
+            self.filter.evict(checked.filter(F.col("_was_seen"))
+                              .select(F.col("_key").alias("k")))
+        return new.unionByName(checked.select(*cols))
 
     def admit_unseen(self, df: DataFrame, keep_flag: bool = False) -> DataFrame:
         """The J1/T8 admission rule over the base+delta seen state:
@@ -221,16 +288,19 @@ class SeenState:
             out = out.withColumn("_bd_delta", F.lit(None).cast("int"))
         bd = F.least("_bd_base", "_bd_delta")
         out = out.filter(bd.isNull() | (F.col("depth") < bd))
-        if keep_flag:  # re-crawl marker (cuckoo eviction needs it)
+        if keep_flag:  # re-crawl marker (cuckoo eviction, admit)
             out = out.withColumn("_was_seen", bd.isNotNull())
         return out.drop("_bd_base", "_bd_delta")
 
     def fold(self) -> DataFrame:
-        """Fold the pending deltas into the base (min best_depth per
-        (run, url)) — the LSM compaction. The base is already
-        hash-partitioned by STATE_KEYS from the previous fold, so only
-        the deltas shuffle; the rewrite cost is O(|seen|) local work,
-        amortized over ``fold_every`` waves. Returns the new base."""
+        """Fold the filter's deltas, then the pending deltas into the
+        base (min best_depth per (run, url)) — the LSM compaction. The
+        base is already hash-partitioned by STATE_KEYS from the
+        previous fold, so only the deltas shuffle; the rewrite cost is
+        O(|seen|) local work, amortized over ``fold_every`` waves.
+        Returns the new base."""
+        if self.filter is not None:
+            self.filter.fold()
         if not self.deltas:
             return self.base
         merged = self.base
@@ -292,12 +362,13 @@ def slice_phase(frontier: DataFrame, budget: int, n_salts: int,
     return sliced, rest
 
 
-def seen_delta(sliced: DataFrame, seen: SeenState) -> tuple[DataFrame, int]:
-    """(delta, n_rows): the slice's consume delta, pushed onto ``seen``
-    unless empty. Its count job is the wave's cache-populating action
-    on the slice, and the count doubles as the loop's emptiness signal
-    (an empty slice ⟺ an empty frontier, so run() needs no per-wave
-    isEmpty action) and picks the fetch-prune shape (_pruned_images).
+def seen_delta(sliced: DataFrame, seen: SeenState) -> int:
+    """The row count of the slice's consume delta, which is pushed onto
+    ``seen`` (and its filter) unless empty. Its count job is the wave's
+    cache-populating action on the slice, and the count doubles as the
+    loop's emptiness signal (an empty slice ⟺ an empty frontier, so
+    run() needs no per-wave isEmpty action) and picks the fetch-prune
+    shape (_pruned_images).
     Lazy checkpoint + count(): the count job IS the materialization
     (eager=True would run the same job internally), so the row count
     comes for free."""
@@ -312,12 +383,11 @@ def seen_delta(sliced: DataFrame, seen: SeenState) -> tuple[DataFrame, int]:
     n_rows = delta.count()
     if n_rows:
         seen.push(delta, n_rows)
-    return delta, n_rows
+    return n_rows
 
 
 def consolidate_admit(cand: DataFrame, seen: SeenState, wave: int,
-                      partition_selector, checkpoint: bool = False,
-                      filtered_admit=None) -> DataFrame:
+                      partition_selector, checkpoint: bool = False) -> DataFrame:
     """The wave's admitted ``fresh`` frontier rows, materialized:
     expand candidates (``run_id``, ``dst_url``, ``dst_host``,
     ``depth``, ``parent_rank``, and ``_run_ord`` in trim mode)
@@ -337,12 +407,15 @@ def consolidate_admit(cand: DataFrame, seen: SeenState, wave: int,
     is the same partition of rows as (run_id, dst_url): the ordinal <->
     run_id map is a bijection.
 
-    ``checkpoint`` materializes the consolidated candidates on their
-    own (AQE on) before admission; otherwise expand → criteria →
-    consolidate → admit → project fuse into the one ``fresh``
-    materialization. ``filtered_admit(cand2, cols)`` replaces the exact
-    admission with an approximate-filter one (CrawlEngine's bloom
-    modes). The materialization plans the admit joins: with a big state
+    The consolidated candidates are materialized on their own (AQE on)
+    before admission when ``checkpoint`` asks (a slice above
+    EXPAND_BROADCAST_MAX, whose skew-prone expand join keeps AQE) or
+    when ``seen`` has a filter (SeenState.admit probes them AND routes
+    both halves onward). Otherwise they have ONE consumer, the
+    admission join, and expand → criteria → consolidate → admit →
+    project fuse into the one ``fresh`` materialization (one job
+    instead of two per wave). The materialization plans the admit
+    joins (SeenState.admit): with a big state
     the AQE-off planning keeps the base side exchange-free/sort-free
     (see _materialize); with a provably small state the joins broadcast
     instead and AQE stays on to coalesce the tiny stages. It also makes
@@ -362,7 +435,7 @@ def consolidate_admit(cand: DataFrame, seen: SeenState, wave: int,
             "_key",
         )
     )
-    if checkpoint:
+    if checkpoint or seen.filter is not None:
         cand2 = cand2.localCheckpoint(eager=True)
     fresh_cols = [
         "_key", "run_id", "url",
@@ -372,11 +445,8 @@ def consolidate_admit(cand: DataFrame, seen: SeenState, wave: int,
         "depth",
         (F.lit(wave * SEQ_WAVE_STRIDE) + F.col("parent_rank")).alias("seq"),
     ]
-    if filtered_admit is None:
-        fresh = seen.admit_unseen(cand2).select(*fresh_cols)
-    else:
-        fresh = filtered_admit(cand2, fresh_cols)
-    return _materialize(fresh, aqe_off=not seen.small())
+    return _materialize(seen.admit(cand2, fresh_cols),
+                        aqe_off=not seen.small())
 
 
 def merge(rest: DataFrame, fresh: DataFrame) -> DataFrame:
@@ -456,9 +526,6 @@ class CrawlEngine:
         fold_every: int = 8,
         fetch_prune: int = 200,
         corpus_buckets: int = 0,
-        filter_delta_max_keys: int = 10_000_000,
-        runid_trim_max_runs: int = 4096,
-        expand_broadcast_max: int = 200_000,
         state_broadcast_max: int = 500_000,
     ):
         self.spark = spark
@@ -498,18 +565,12 @@ class CrawlEngine:
         self.corpus_buckets = corpus_buckets
         self._corpus_bucket_files: dict[int, list[str]] | None = None
         self._warned_unbucketed = False
-        # use_bloom: False | "sharded"
-        # (per-hash-range bitmap table — the 10^10 layout where one
-        # broadcast bloom would be ~18 GB; filters/sharded_bloom.py) |
-        # "cuckoo" (deletable variant, same sharded-table layout —
-        # filters/sharded_cuckoo.py: fingerprints of re-admitted URLs
-        # are EVICTED so the approximate hit set stays tight under
-        # re-crawls; inserts run per-shard on executors, a saturated
-        # shard degrades itself to the exact path while healthy shards
-        # keep prefiltering)
-        self.bloom_mode = use_bloom or False
-        self.n_bloom_shards = 64
-        self._bloom_shards = None  # DataFrame(shard, bits) when sharded
+        # use_bloom: False | "sharded" (per-hash-range bitmap table —
+        # the 10^10 layout where one broadcast bloom would be ~18 GB) |
+        # "cuckoo" (deletable variant, same layout): the seen state's
+        # filter (SeenState.filter, filters/seen_filter.py), built per
+        # run()
+        self.bloom_mode = use_bloom
         # input_hint per-row invariant enforced DURING the crawl:
         # decode each fetched image, PSNR >= 40 dB vs source pixels
         self.verify_fetch = verify_fetch
@@ -526,36 +587,8 @@ class CrawlEngine:
         # cross the wire ONCE per wave. Duplicates are at most one
         # fresh layer deep (rest is dedup output, fresh is unique per
         # (run, url)); a full min-merge fold runs only at run end,
-        # journal compaction, and resume reconstruction.
-        # run_id dictionary trim (round 5, after the host-string trim):
-        # run_id is tiny-cardinality (one per Work), so the hot
-        # loop carries a dense int ordinal assigned in SORTED run_id
-        # order instead of the string. (run_ord, url) <-> (run_id, url)
-        # is a bijection within one run() execution, so exact-identity
-        # joins stay exact, and sorted assignment makes ORDER BY
-        # (depth, seq, _key, run_ord, url) the SAME total order as the
-        # ordering contract's (depth, seq, _key, run_id, url) — no
-        # oracle change needed. Strings are re-attached on the
-        # budget-bounded slice and at every boundary (journal,
-        # CrawlResult), exactly like the host string. Same-JVM
-        # interleaved A/B (tools/runid_ab.py of commit 4424178, 8M
-        # rows): trim/carry 1.12 at local[8], 1.25 at local[32]. Above
-        # ``runid_trim_max_runs`` the reverse-map array literal would
-        # bloat every plan — the trim disables itself (strings carried,
-        # still correct).
-        self.runid_trim_max_runs = runid_trim_max_runs
-        # expand_broadcast_max (round 6): a wave whose slice holds at
-        # most this many rows gets an EXPLICIT broadcast hint on the
-        # parent side of the expand join (the parent count is bounded
-        # by the slice count, which the wave measures exactly via the
-        # seen-delta checkpoint), and — on the plain exact-dedup path,
-        # where the consolidated candidates have a single consumer —
-        # the whole expand→consolidate→admit chain fuses into the one
-        # `fresh` materialization instead of paying a separate cand2
-        # checkpoint job. Default 200k rows ~ tens of MB broadcast.
-        # Bigger waves keep the AQE-planned checkpointed shape (runtime
-        # broadcast + skew-join handling).
-        self.expand_broadcast_max = expand_broadcast_max
+        # journal compaction, and resume reconstruction. The hot loop
+        # carries run ordinals, not run_id strings (RUNID_TRIM_MAX_RUNS).
         # state_broadcast_max (round 6): the seen state's admission
         # joins broadcast while its exact row bound stays under this
         # threshold (SeenState.small; None after a resume)
@@ -567,27 +600,6 @@ class CrawlEngine:
         # The frontier 'host' column IS the partition key; criteria
         # filters keep using the real URL host/domain.
         self.partition_selector = partition_selector or url_host
-        # cuckoo mode: DataFrame(shard, bits, ok) like the sharded bloom
-        self._cuckoo_shards: DataFrame | None = None
-        # LSM maintenance for the sharded/cuckoo filters: the BASE
-        # shard table above is rewritten only at fold time; in between,
-        # each wave stacks its (tiny) add/del key frames here and
-        # probes them exactly (_probe_filter). Round-3 rewrote and
-        # re-serialized the WHOLE shard table every wave — at the
-        # 10^10 target that is GBs of filter blobs shuffled per wave,
-        # growing with capacity, forever.
-        self._filter_deltas: list[tuple[str, DataFrame]] = []
-        # The unfolded add-delta stack is probed via BROADCAST
-        # (_probe_filter) — bounded in the common case at fold_every x
-        # (budget x active hosts) 8-byte keys, but at 10^6 active hosts
-        # x budget 8 x fold_every 8 that is ~0.5 GB per wave, past the
-        # comfortable broadcast range. The bound is ENFORCED here: the
-        # stacked key count is tracked per wave (from the same
-        # materialization job the seen delta already pays) and an early
-        # _fold_filter fires once it crosses this threshold, so the
-        # broadcast can never exceed ~threshold x 8 bytes.
-        self.filter_delta_max_keys = filter_delta_max_keys
-        self._filter_delta_keys = 0
         self._results_acc: list[DataFrame] = []
         # memory mode keeps its results increments in _results_acc
         # and has no store at all; the journal needs a dir the caller
@@ -749,7 +761,7 @@ class CrawlEngine:
         carried run ordinal (trim mode, round 6): the criteria are
         driver-side constants, so the expand phase attaches them
         without the per-wave runs broadcast join. Built once per
-        run(), next to ``_run_ords``; bounded by runid_trim_max_runs
+        run(), next to ``_run_ords``; bounded by RUNID_TRIM_MAX_RUNS
         literals per array, exactly like _rerun_id."""
         by_id = {r["run_id"]: r for r in self.runs}
         return {
@@ -800,31 +812,6 @@ class CrawlEngine:
             rows_bound = None
             start = self.store.latest_wave()
             frontier, seen = self._reconstruct()
-            if self.bloom_mode == "cuckoo":  # T5 for the deletable
-                # filter: one distributed groupBy-build over the seen
-                # keys (the round-2 shape iterated the WHOLE seen set
-                # through the driver — hours after 10^8 fetches)
-                from moca_spark.filters.sharded_cuckoo import (
-                    build_sharded_cuckoo,
-                )
-
-                self._cuckoo_shards = build_sharded_cuckoo(
-                    seen.select(self._seen_key().alias("k")), "k",
-                    self.n_bloom_shards, self.bloom_capacity,
-                ).localCheckpoint(eager=True)
-            if self.bloom_mode == "sharded":
-                # T5 for the sharded bloom — without this rebuild a
-                # pre-resume seen URL probes as a definitive MISS and
-                # is admitted WITHOUT the exact join, breaking the
-                # depth-qualified re-crawl rule
-                from moca_spark.filters.sharded_bloom import (
-                    build_sharded_bloom,
-                )
-
-                self._bloom_shards = build_sharded_bloom(
-                    seen.select(self._seen_key().alias("k")), "k",
-                    self.n_bloom_shards, self.bloom_capacity,
-                ).localCheckpoint(eager=True)
         else:
             start = 0
             rows_bound = 0  # empty seen state
@@ -847,13 +834,17 @@ class CrawlEngine:
         # The dictionary is rebuilt per run(): a stale one from a
         # previous run() must never leak into this one
         rids = sorted({r["run_id"] for r in self.runs})
-        self._run_ords = rids if len(rids) <= self.runid_trim_max_runs else None
+        self._run_ords = rids if len(rids) <= RUNID_TRIM_MAX_RUNS else None
         self._run_criteria = (
             self._criteria_lookups() if self._run_ords is not None else None
         )
         frontier, seen = self._trim_state(frontier, seen)
-        self._seen = SeenState(seen, rows_bound=rows_bound,
-                               broadcast_max=self.state_broadcast_max)
+        # a resumed state rebuilds its filter from the seen keys (T5)
+        self._seen = SeenState(
+            seen, rows_bound=rows_bound,
+            broadcast_max=self.state_broadcast_max,
+            filter=seen_filter(self.bloom_mode, self.bloom_capacity,
+                               seen if rows_bound is None else None))
 
         runs_b = F.broadcast(self._runs_df())
         links = self._link_graph()
@@ -878,9 +869,9 @@ class CrawlEngine:
                 self.store.compact(wave)
                 frontier, seen = self._trim_state(*self._reconstruct())
                 self._seen = SeenState(seen, rows_bound=self._seen.rows_bound,
-                                       broadcast_max=self.state_broadcast_max)
+                                       broadcast_max=self.state_broadcast_max,
+                                       filter=self._seen.filter)
 
-        self._fold_filter()
         seen = self._seen.fold()
         # compact the one-fresh-layer-deep LSM view down to the merged
         # contract shape callers (and the oracle) see — re-deriving the
@@ -900,104 +891,6 @@ class CrawlEngine:
         for df in acc[1:]:
             out = out.unionByName(df)
         return out
-
-    def _probe_filter(self, cand2: DataFrame) -> DataFrame:
-        """Tag candidates with ``_maybe_seen`` against the LSM filter:
-        BASE shard-table probe (sharded bloom or cuckoo) OR exact
-        membership in the unfolded add-delta key stack. PASS-only
-        discipline holds by construction: delta membership only ADDS
-        maybe-hits (routed to the exact join, which alone decides);
-        del-deltas pending in the stack are ignored until fold — a
-        stale maybe costs join work, never correctness. The delta
-        broadcast is bounded and ENFORCED: the engine counts stacked
-        keys per wave and folds early once they cross
-        ``filter_delta_max_keys`` (default 10M ~ 80 MB broadcast), so
-        the exact-membership frame can never grow past that no matter
-        how many hosts a wave schedules."""
-        tagged = cand2.withColumn("_k", F.col("_key"))
-        if self.bloom_mode == "sharded" and self._bloom_shards is not None:
-            from moca_spark.filters.sharded_bloom import probe_sharded_bloom
-
-            tagged = probe_sharded_bloom(
-                tagged, "_k", self._bloom_shards, self.n_bloom_shards)
-        elif self.bloom_mode == "cuckoo" and self._cuckoo_shards is not None:
-            from moca_spark.filters.sharded_cuckoo import probe_sharded_cuckoo
-
-            tagged = probe_sharded_cuckoo(
-                tagged, "_k", self._cuckoo_shards, self.n_bloom_shards)
-        else:  # no base yet (fresh run before the first fold): the
-            # delta stack alone IS the filter state
-            tagged = tagged.withColumn("_maybe_seen", F.lit(False))
-        tagged = tagged.drop("_k")
-        adds = [df for kind, df in self._filter_deltas if kind == "add"]
-        if adds:
-            d = adds[0]
-            for extra in adds[1:]:
-                d = d.unionByName(extra)
-            d = d.distinct().withColumn("_in_delta", F.lit(True))
-            tagged = (
-                tagged.join(F.broadcast(d), tagged["_key"] == d["k"], "left")
-                .drop("k")
-                .withColumn(
-                    "_maybe_seen",
-                    F.col("_maybe_seen")
-                    | F.coalesce(F.col("_in_delta"), F.lit(False)),
-                )
-                .drop("_in_delta")
-            )
-        return tagged
-
-    def _fold_filter(self) -> None:
-        """Fold the pending add/del key deltas into the base filter
-        shard table — the filter-side LSM compaction, run alongside
-        SeenState.fold so the whole-table rewrite amortizes over
-        ``fold_every`` waves (round-3 rewrote every wave). Only shards
-        the deltas actually touch pass through the pandas
-        re-serialization; untouched base rows union through unchanged
-        (fold cost = O(touched shards), not O(shard table))."""
-        if not self._filter_deltas:
-            self._filter_delta_keys = 0
-            return
-        if self.bloom_mode == "sharded":
-            from moca_spark.filters.sharded_bloom import (
-                build_sharded_bloom,
-                merge_sharded_blooms,
-                shard_of,
-            )
-
-            adds = [df for kind, df in self._filter_deltas if kind == "add"]
-            if adds:
-                d = adds[0]
-                for extra in adds[1:]:
-                    d = d.unionByName(extra)
-                delta = build_sharded_bloom(
-                    d, "k", self.n_bloom_shards, self.bloom_capacity)
-                if self._bloom_shards is None:
-                    merged = delta
-                else:
-                    # bounded collect (<= n_bloom_shards values) over
-                    # the checkpointed key frames: base shards with no
-                    # delta keys skip the OR-merge rewrite entirely
-                    touched = sorted(r.s for r in d.select(
-                        shard_of(F.col("k"), self.n_bloom_shards).alias("s")
-                    ).distinct().collect())
-                    merged = self._bloom_shards.filter(
-                        ~F.col("shard").isin(touched)
-                    ).unionByName(merge_sharded_blooms(
-                        self._bloom_shards.filter(
-                            F.col("shard").isin(touched)),
-                        delta,
-                    ))
-                self._bloom_shards = merged.localCheckpoint(eager=True)
-        elif self.bloom_mode == "cuckoo":
-            from moca_spark.filters.sharded_cuckoo import apply_cuckoo_deltas
-
-            self._cuckoo_shards = apply_cuckoo_deltas(
-                self._cuckoo_shards, self._filter_deltas, "k",
-                self.n_bloom_shards, self.bloom_capacity,
-            ).localCheckpoint(eager=True)
-        self._filter_deltas = []
-        self._filter_delta_keys = 0
 
     def _needs_domains(self) -> bool:
         """True iff some run's criteria (same-domain) or any registered
@@ -1288,47 +1181,23 @@ class CrawlEngine:
         before committing anything for this wave."""
         sliced, rest = slice_phase(frontier, self.budget, self.n_salts,
                                    self.partition_selector, self._run_ords)
-        delta, n_delta = seen_delta(sliced, self._seen)
+        n_delta = seen_delta(sliced, self._seen)
         if n_delta == 0:
             sliced.unpersist()
             return None
-        if self.bloom_mode:
-            self._push_filter_adds(delta, n_delta)
         fetched = self._fetch(wave, sliced, n_delta)
         cand = self._expand(fetched, runs_b, links, n_delta)
-        # Checkpoint the candidates only when something consumes them
-        # twice (the approximate-filter paths probe them AND route both
-        # halves onward). On the plain exact path they have exactly ONE
-        # consumer — the admission join — so the wave FUSES expand →
-        # criteria → consolidate → admit → project into the single
-        # `fresh` materialization (one job instead of two per wave; the
-        # broadcast hint in _expand keeps the expand join sane without
-        # AQE when the parent side is provably small, and above the
-        # hint bound the checkpoint returns so the skew-prone expand
-        # join keeps AQE).
+        # the broadcast hint in _expand keeps a fused expand join sane
+        # without AQE while the parent side is provably small; above
+        # the bound the candidates checkpoint so the skew-prone expand
+        # join keeps AQE
         fresh = consolidate_admit(
             cand, self._seen, wave, self.partition_selector,
-            checkpoint=bool(self.bloom_mode)
-            or n_delta > self.expand_broadcast_max,
-            filtered_admit=self._filtered_admit if self.bloom_mode else None)
+            checkpoint=n_delta > EXPAND_BROADCAST_MAX)
         frontier_new = merge(rest, fresh)
         self._commit(wave, fetched, sliced, fresh)
         sliced.unpersist()
         return frontier_new
-
-    def _push_filter_adds(self, delta: DataFrame, n_rows: int) -> None:
-        """Stack the wave's filter add-delta: the SAME key set as the
-        seen delta — a projection of its checkpoint, no extra
-        materialization; O(delta) per-wave filter maintenance, shards
-        rewrite only at _fold_filter."""
-        self._filter_deltas.append(
-            ("add", delta.select(F.col("_key").alias("k"))))
-        self._filter_delta_keys += n_rows
-        if self._filter_delta_keys > self.filter_delta_max_keys:
-            # enforce the probe-broadcast bound: fold the stack into
-            # the shard base now instead of broadcasting an oversized
-            # exact-membership frame this wave
-            self._fold_filter()
 
     def _fetch(self, wave: int, sliced: DataFrame, n_delta: int) -> DataFrame:
         """The slice left-joined to the image+caption corpus on
@@ -1392,7 +1261,7 @@ class CrawlEngine:
         # is provably small, hint the broadcast instead of leaving the
         # strategy to AQE's runtime size estimate. Above the bound the
         # AQE path (runtime broadcast + skew join) stands.
-        if n_delta <= self.expand_broadcast_max:
+        if n_delta <= EXPAND_BROADCAST_MAX:
             parents = F.broadcast(parents)
         # src_domain/dst_domain come with the link rows (_link_graph)
         cand = (
@@ -1401,42 +1270,11 @@ class CrawlEngine:
         )
         return apply_criteria(cand, self.robots, self.custom_by_name)
 
-    def _filtered_admit(self, cand2: DataFrame, fresh_cols: list) -> DataFrame:
-        """consolidate_admit's admission under an approximate seen
-        filter (bloom pre-filter, J1 north rule): a MISS is definitive
-        — those rows are admitted without touching the seen table; HITs
-        go to the exact join, which alone decides (false positives cost
-        join work, never correctness)."""
-        seen = self._seen
-        tagged = self._probe_filter(cand2)
-        definitely_new = tagged.filter(~F.col("_maybe_seen")).select(*fresh_cols)
-        cuckoo = self.bloom_mode == "cuckoo"  # the deletable variant
-        checked = seen.admit_unseen(tagged.filter(F.col("_maybe_seen")),
-                                    keep_flag=cuckoo)
-        if cuckoo:
-            # small: filter-hit admissions; with a big state AQE-off
-            # keeps the base side of the admit join exchange-free
-            checked = _materialize(checked, aqe_off=not seen.small())
-            # T8 + deletability: evict fingerprints of re-admitted URLs
-            # so the hit set stays tight under re-crawls. PASS-only
-            # discipline holds: a deleted entry re-routes future
-            # candidates into the frontier min-merge (harmless dup),
-            # never drops one — and the URL is re-inserted when its
-            # re-crawl is sliced. The eviction is a stacked del-delta
-            # applied at fold time (per-shard, on executors).
-            # stacked UNCONDITIONALLY: deciding emptiness here would
-            # cost a per-wave driver action (a job over checked),
-            # and an empty del frame is free at fold time — its shard
-            # set is empty, so it touches nothing
-            self._filter_deltas.append(("del", checked.filter(
-                F.col("_was_seen")).select(F.col("_key").alias("k"))))
-        return definitely_new.unionByName(checked.select(*fresh_cols))
-
     def _commit(self, wave: int, fetched: DataFrame, sliced: DataFrame,
                 fresh: DataFrame) -> None:
         """The wave's results increment, then its events + marker (the
-        atomic journal commit); every ``fold_every`` waves the seen and
-        filter deltas fold. Per-host metrics are a view over the
+        atomic journal commit); every ``fold_every`` waves the seen
+        state folds (its filter too). Per-host metrics are a view over the
         results (CrawlResult.metrics), so a wave writes nothing else."""
         results_w = fetched.select(
             "run_id",
@@ -1495,5 +1333,4 @@ class CrawlEngine:
             with _aqe_off(self.spark):
                 self._results_acc.append(results_w.localCheckpoint(eager=False))
         if len(self._seen.deltas) >= self.fold_every:
-            self._fold_filter()
             self._seen.fold()

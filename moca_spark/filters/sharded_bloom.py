@@ -12,11 +12,17 @@ ROW of a DataFrame/table (shard int, bits binary):
   brings each candidate batch together with exactly its one bitmap
   row (co-partitioned — every executor holds only the shards it
   probes), then a vectorized numpy membership test per Arrow batch;
-- maintain: per-wave new keys build a delta table the same way;
-  OR-merge by shard is a groupBy on (shard) of a few-KB binaries.
+- maintain: new keys build a delta table the same way; OR-merge by
+  shard is a groupBy on (shard) of a few-KB binaries, and only the
+  shards the keys touch are rewritten (apply_bloom_deltas).
 
 Same discipline as filters/bloom.py: a MISS is definitive, a HIT goes
 to the exact anti-join. Parity with the monolithic filter is tested.
+
+The layout primitives both sharded filters share live here:
+``shard_of``, the one mapInPandas probe (``probe_shards``) and the one
+touched-shard fold (``fold_touched_shards``); filters/sharded_cuckoo.py
+plugs its own membership test and shard rewrite into them.
 """
 
 from __future__ import annotations
@@ -32,6 +38,62 @@ SHARD_SCHEMA = "shard int, bits binary"
 
 def shard_of(key_col: F.Column, n_shards: int) -> F.Column:
     return F.pmod(key_col, F.lit(n_shards)).cast("int")
+
+
+def probe_shards(candidates: DataFrame, key_col: str, shards: DataFrame,
+                 n_shards: int, member) -> DataFrame:
+    """Tag candidates with ``_maybe_seen`` against a shard table. The
+    join is a shard-key equi-join: each candidate partition meets
+    exactly one filter row per shard (filters total MBs across the
+    cluster, never one broadcast blob), then ``member(grp, blob)``
+    gives the membership of one shard's candidates in that shard's
+    serialized filter, per Arrow batch. Candidates whose shard has no
+    row yet are definitively new."""
+    from pyspark.sql.types import BooleanType, StructField, StructType
+
+    tagged = candidates.withColumn("shard", shard_of(F.col(key_col), n_shards))
+    joined = tagged.join(shards, "shard", "left")
+    out_schema = StructType(
+        list(candidates.schema.fields) + [StructField("_maybe_seen", BooleanType())]
+    )
+    table_cols = list(shards.columns)
+
+    def probe(pdfs):
+        for pdf in pdfs:
+            groups = []
+            # group by the int shard id (unique per filter row), never
+            # by the multi-KB serialized blob
+            for _shard, grp in pdf.groupby("shard", sort=False):
+                blob = grp["bits"].iloc[0]
+                if blob is None or (isinstance(blob, float) and pd.isna(blob)):
+                    grp = grp.assign(_maybe_seen=False)
+                else:
+                    grp = grp.assign(_maybe_seen=member(grp, bytes(blob)))
+                groups.append(grp)
+            res = pd.concat(groups) if groups else pdf.assign(_maybe_seen=False)
+            yield res.drop(columns=table_cols)
+
+    return joined.mapInPandas(probe, out_schema)
+
+
+def fold_touched_shards(shards: DataFrame | None, keys: DataFrame,
+                        key_col: str, n_shards: int, rewrite) -> DataFrame:
+    """Fold delta ``keys`` into a shard table, rewriting only the
+    shards they touch: ``rewrite(touched)`` returns the new rows of the
+    ``touched`` base shards (None: no base yet, build from the keys
+    alone). The touched set is a bounded collect (<= n_shards values)
+    over the key frames; base shards with no delta keys union through
+    unchanged, so the fold costs O(touched shards), not O(shard table)
+    — at the 10^10 target the base is GBs of filter blobs and a fold's
+    keys usually land in a fraction of the shards."""
+    if shards is None:
+        return rewrite(None)
+    touched = sorted(r.s for r in keys.select(
+        shard_of(F.col(key_col), n_shards).alias("s")).distinct().collect())
+    if not touched:
+        return shards
+    return shards.filter(~F.col("shard").isin(touched)).unionByName(
+        rewrite(shards.filter(F.col("shard").isin(touched))))
 
 
 def build_sharded_bloom(
@@ -71,34 +133,30 @@ def merge_sharded_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
 def probe_sharded_bloom(
     candidates: DataFrame, key_col: str, shards: DataFrame, n_shards: int,
 ) -> DataFrame:
-    """Tag candidates with ``_maybe_seen``. The join is shard-key
-    equi-join: each candidate partition meets exactly one bitmap row
-    (bitmaps total MBs across the cluster, never one broadcast blob).
-    Candidates whose shard has no bitmap yet are definitively new."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
+    """Tag candidates with ``_maybe_seen`` (probe_shards over bloom
+    bitmaps)."""
+    return probe_shards(
+        candidates, key_col, shards, n_shards,
+        lambda grp, blob: BloomFilter.from_bytes(blob).contains_many(
+            grp[key_col].to_numpy()))
 
-    tagged = candidates.withColumn("shard", shard_of(F.col(key_col), n_shards))
-    joined = tagged.join(shards, "shard", "left")
-    out_schema = StructType(
-        list(candidates.schema.fields) + [StructField("_maybe_seen", BooleanType())]
-    )
 
-    def probe(pdfs):
-        for pdf in pdfs:
-            groups = []
-            # group by the int shard id (unique per bitmap row), not
-            # the multi-KB serialized bitmap
-            for _shard, grp in pdf.groupby("shard", sort=False):
-                blob = grp["bits"].iloc[0]
-                if blob is None or (isinstance(blob, float) and pd.isna(blob)):
-                    grp = grp.assign(_maybe_seen=False)
-                else:
-                    bf = BloomFilter.from_bytes(bytes(blob))
-                    grp = grp.assign(
-                        _maybe_seen=bf.contains_many(grp[key_col].to_numpy())
-                    )
-                groups.append(grp)
-            res = pd.concat(groups) if groups else pdf.assign(_maybe_seen=False)
-            yield res.drop(columns=["shard", "bits"])
+def apply_bloom_deltas(
+    shards: DataFrame | None, deltas: list[tuple[str, DataFrame]],
+    key_col: str, n_shards: int, n_expected: int,
+) -> DataFrame:
+    """Fold a stack of ('add', keys) deltas into the shard table: one
+    bloom table built over the stacked keys, OR-merged into the touched
+    shards only (fold_touched_shards); ``shards=None`` builds from
+    scratch. A bloom cannot delete, so 'del' deltas are ignored — a
+    stale hit costs exact-join work, never a dropped URL."""
+    adds = [keys for kind, keys in deltas if kind == "add"]
+    keys = adds[0]
+    for extra in adds[1:]:
+        keys = keys.unionByName(extra)
 
-    return joined.mapInPandas(probe, out_schema)
+    def rewrite(touched):
+        delta = build_sharded_bloom(keys, key_col, n_shards, n_expected)
+        return delta if touched is None else merge_sharded_blooms(touched, delta)
+
+    return fold_touched_shards(shards, keys, key_col, n_shards, rewrite)

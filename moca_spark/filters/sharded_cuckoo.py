@@ -5,19 +5,21 @@ Round-2's cuckoo mode kept one driver-side CuckooFilter and funneled
 every wave's slice keys (and, on resume, the ENTIRE seen set) through
 ``toLocalIterator`` — a real driver bottleneck past moderate scale.
 This module gives the cuckoo filter the same layout as
-filters/sharded_bloom.py: key space sharded by ``pmod(key, n_shards)``,
-one serialized CuckooFilter (filters/cuckoo.py) per shard stored as a
+filters/sharded_bloom.py, and shares its ``shard_of``, probe and
+touched-shard fold: key space sharded by ``pmod(key, n_shards)``, one
+serialized CuckooFilter (filters/cuckoo.py) per shard stored as a
 DataFrame row ``(shard int, bits binary, ok boolean)``:
 
 - build:  groupBy(shard) -> applyInPandas constructs each shard's
   filter from its keys only (distributed, used for resume rebuild);
 - fold:   an ORDERED stack of add/delete key deltas is unioned with
-  the current shard rows and re-grouped; each shard applies its rows
+  the touched shards' rows and re-grouped; each shard applies its rows
   in stack order inside one pandas call — inserts stay sequential
   (partial-key cuckoo kicks need that) but PER SHARD on executors,
-  never on the driver. The engine stacks per-wave key deltas and folds
-  every ``fold_every`` waves (probing the stack exactly in between),
-  so per-wave maintenance is O(delta), not a whole-table rewrite;
+  never on the driver. The seen-state holder stacks per-wave key
+  deltas and folds every ``fold_every`` waves (probing the stack
+  exactly in between; filters/seen_filter.py), so per-wave
+  maintenance is O(delta), not a whole-table rewrite;
 - probe:  shard-key join brings each candidate batch together with its
   one filter row; vectorized membership per Arrow batch.
 
@@ -35,12 +37,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from moca_spark.filters.cuckoo import CuckooFilter
+from moca_spark.filters.sharded_bloom import (
+    fold_touched_shards,
+    probe_shards,
+    shard_of,
+)
 
 SHARD_SCHEMA = "shard int, bits binary, ok boolean"
-
-
-def shard_of(key_col: F.Column, n_shards: int) -> F.Column:
-    return F.pmod(key_col, F.lit(n_shards)).cast("int")
 
 
 def _apply_group(per_shard_capacity: int):
@@ -96,44 +99,33 @@ def apply_cuckoo_deltas(
 ) -> DataFrame:
     """Fold an ORDERED stack of ('add'|'del', keys) deltas into the
     shard table in one distributed groupBy — the LSM filter compaction
-    (engine._fold_filter). ``shards=None`` builds from scratch.
-
-    Only TOUCHED shards pass through the applyInPandas rewrite: the
-    delta key frames name their shard ids up front (a bounded collect,
-    <= n_shards values), so base shards that received no keys are
-    unioned through untouched — fold cost scales with touched shards,
-    not the shard-table size (at the 10^10 target the base is GBs of
-    filter blobs; a wave's deltas usually land in a fraction of the
-    shards). Per-wave maintenance is just stacking the (tiny) key
-    frames; the rewrite amortizes over the waves whose deltas are
-    stacked."""
+    (SeenFilter.fold). ``shards=None`` builds from scratch. Only the
+    shards the deltas touch pass through the applyInPandas rewrite
+    (fold_touched_shards); per-wave maintenance is just stacking the
+    (tiny) key frames, and the rewrite amortizes over the waves whose
+    deltas are stacked."""
     per_shard = max(n_expected // n_shards, 1)
     drows = None
     for i, (kind, keys) in enumerate(deltas):
         d = _delta_rows(keys, key_col, n_shards, kind, ord_=i)
         drows = d if drows is None else drows.unionByName(d)
-    if shards is None:
-        return drows.groupBy("shard").applyInPandas(
+
+    def rewrite(touched):
+        rows = drows
+        if touched is not None:
+            # k=0 sentinel (never read for bits rows): a NULL long
+            # would turn the pandas column float64 and silently
+            # truncate 64-bit keys to 53 bits of mantissa
+            rows = touched.select(
+                "shard", "bits", "ok",
+                F.lit(0).cast("long").alias("k"),
+                F.lit("bits").alias("kind"),
+                F.lit(-1).cast("long").alias("ord"),
+            ).unionByName(drows)
+        return rows.groupBy("shard").applyInPandas(
             _apply_group(per_shard), SHARD_SCHEMA)
-    # bounded: <= n_shards distinct values; the key frames are
-    # engine-checkpointed, so this scan is cheap and re-used below
-    touched = sorted(
-        r.shard for r in drows.select("shard").distinct().collect())
-    if not touched:
-        return shards
-    untouched = shards.filter(~F.col("shard").isin(touched))
-    # k=0 sentinel (never read for bits rows): a NULL long would
-    # turn the pandas column float64 and silently truncate 64-bit
-    # keys to 53 bits of mantissa
-    base_touched = shards.filter(F.col("shard").isin(touched)).select(
-        "shard", "bits", "ok",
-        F.lit(0).cast("long").alias("k"),
-        F.lit("bits").alias("kind"),
-        F.lit(-1).cast("long").alias("ord"),
-    )
-    folded = base_touched.unionByName(drows).groupBy("shard").applyInPandas(
-        _apply_group(per_shard), SHARD_SCHEMA)
-    return untouched.unionByName(folded)
+
+    return fold_touched_shards(shards, drows, "k", n_shards, rewrite)
 
 
 def build_sharded_cuckoo(
@@ -144,50 +136,15 @@ def build_sharded_cuckoo(
                                n_expected)
 
 
-def update_sharded_cuckoo(
-    shards: DataFrame, keys: DataFrame, key_col: str, n_shards: int,
-    n_expected: int, kind: str = "add",
-) -> DataFrame:
-    """Apply one add or delete delta to the shard table."""
-    return apply_cuckoo_deltas(shards, [(kind, keys)], key_col, n_shards,
-                               n_expected)
-
-
 def probe_sharded_cuckoo(
     candidates: DataFrame, key_col: str, shards: DataFrame, n_shards: int,
 ) -> DataFrame:
-    """Tag candidates with ``_maybe_seen``. Missing shard row = shard
-    never saw a key = definitively new; degraded shard (ok=false) =
-    maybe-seen for all its candidates (exact join decides)."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    tagged = candidates.withColumn("shard", shard_of(F.col(key_col), n_shards))
-    joined = tagged.join(shards, "shard", "left")
-    out_schema = StructType(
-        list(candidates.schema.fields)
-        + [StructField("_maybe_seen", BooleanType())]
-    )
-
-    def probe(pdfs):
-        for pdf in pdfs:
-            groups = []
-            # group by the int shard id — unique per filter row —
-            # never by the serialized blob (multi-KB/MB group keys are
-            # slow, and byte-identical bits with different ok flags
-            # would collapse two shards into one)
-            for _shard, grp in pdf.groupby("shard", sort=False):
-                blob = grp["bits"].iloc[0]
-                if blob is None or (isinstance(blob, float) and pd.isna(blob)):
-                    grp = grp.assign(_maybe_seen=False)
-                elif not bool(grp["ok"].iloc[0]):
-                    grp = grp.assign(_maybe_seen=True)
-                else:
-                    cf = CuckooFilter.from_bytes(bytes(blob))
-                    grp = grp.assign(
-                        _maybe_seen=cf.contains_many(grp[key_col].to_numpy())
-                    )
-                groups.append(grp)
-            res = pd.concat(groups) if groups else pdf.assign(_maybe_seen=False)
-            yield res.drop(columns=["shard", "bits", "ok"])
-
-    return joined.mapInPandas(probe, out_schema)
+    """Tag candidates with ``_maybe_seen`` (probe_shards). Missing
+    shard row = shard never saw a key = definitively new; degraded
+    shard (ok=false) = maybe-seen for all its candidates (exact join
+    decides)."""
+    return probe_shards(
+        candidates, key_col, shards, n_shards,
+        lambda grp, blob: True if not bool(grp["ok"].iloc[0])
+        else CuckooFilter.from_bytes(blob).contains_many(
+            grp[key_col].to_numpy()))

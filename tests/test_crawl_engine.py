@@ -557,25 +557,40 @@ def test_sharded_bloom_engine_parity(spark, tmp_path):
     assert_match(got, want)
 
 
-def test_sharded_bloom_resume_rebuild(spark, tmp_path):
-    """T5 for use_bloom='sharded': resume must rebuild the shard table
-    from the reconstructed seen set. Without the rebuild (latent
-    round-3 gap — only the monolith and cuckoo filters were rebuilt),
-    a pre-resume seen URL probes as a definitive MISS and is
-    re-admitted without the exact join, so cyclic graphs re-fetch
-    crawled pages after resume."""
+@pytest.mark.parametrize("mode", ["sharded", "cuckoo"])
+def test_sharded_bloom_resume_rebuild(spark, tmp_path, monkeypatch, mode):
+    """T5 for both filter kinds: resume must rebuild the seen state's
+    filter base from the reconstructed seen set. Without the rebuild
+    (latent round-3 gap for the sharded bloom), a pre-resume seen URL
+    probes as a definitive MISS and is re-admitted without the exact
+    join, so cyclic graphs re-fetch crawled pages after resume. The
+    first probe of the resumed run must see a base; a fresh run's
+    first probe has none."""
+    from moca_spark.filters.seen_filter import SeenFilter
+
+    has_base = []
+    inner = SeenFilter.probe
+
+    def probe(self, cand):
+        has_base.append(self.shards is not None)
+        return inner(self, cand)
+
+    monkeypatch.setattr(SeenFilter, "probe", probe)
     edges = zipf_graph(n_hosts=4, pages_per_host=6)
     works = [W("w1", "http://host0.test/p0", max_depth=4)]
     eng1, urls = make_engine(spark, tmp_path, works, edges, budget=2,
-                             durable="eventlog", use_bloom="sharded",
+                             durable="eventlog", use_bloom=mode,
                              bloom_capacity=10_000)
     eng1.run(max_waves=2)
+    assert has_base[0] is False
     eng2, _ = make_engine(spark, tmp_path, works, edges, budget=2,
-                          durable="eventlog", use_bloom="sharded",
+                          durable="eventlog", use_bloom=mode,
                           bloom_capacity=10_000)
-    assert eng2._bloom_shards is None
+    assert eng2._seen is None  # the holder is built per run()
+    del has_base[:]
     resumed = eng2.run(resume=True)
-    assert eng2._bloom_shards is not None  # base rebuilt from seen
+    assert has_base and has_base[0] is True  # base rebuilt from seen
+    assert eng2._seen.filter.kind == mode
     want = oracle_crawl(works, edges, budget=2, corpus_urls=urls)
     assert_match(resumed, want)
 
@@ -594,36 +609,41 @@ def test_filter_lsm_fold_parity(spark, tmp_path):
         assert_match(got, want)
 
 
-def test_filter_delta_broadcast_bound_early_fold(spark, tmp_path):
-    """_probe_filter broadcasts the unfolded add-delta key stack, so
-    the engine enforces ``filter_delta_max_keys``: once the stacked key
-    count crosses it, _fold_filter fires early (mid-wave) instead of
+def test_filter_delta_broadcast_bound_early_fold(spark, tmp_path,
+                                                 monkeypatch):
+    """SeenFilter.probe broadcasts the unfolded add-delta key stack, so
+    the filter enforces ``DELTA_MAX_KEYS``: once the stacked key count
+    crosses it, SeenFilter.fold fires early (mid-wave) instead of
     waiting for the fold_every cadence. Forced here with a 0-key bound
     and a cadence that would never fold during the run — a fold with a
     non-empty stack must fire every wave, and parity holds in both
     filter modes (round-4 verdict watch-item #2)."""
+    from moca_spark.filters import seen_filter
+    from moca_spark.filters.seen_filter import SeenFilter
+
+    monkeypatch.setattr(seen_filter, "DELTA_MAX_KEYS", 0)
+    stack_sizes = []
+    inner = SeenFilter.fold
+
+    def fold(self):
+        stack_sizes.append(len(self.deltas))
+        inner(self)
+
+    monkeypatch.setattr(SeenFilter, "fold", fold)
     edges = zipf_graph(n_hosts=5, pages_per_host=5)
     works = [W("w1", "http://host0.test/p0", max_depth=4)]
     for mode in ("sharded", "cuckoo"):
+        del stack_sizes[:]
         eng, urls = make_engine(
             spark, tmp_path / mode, works, edges, budget=2,
-            use_bloom=mode, bloom_capacity=10_000,
-            fold_every=10_000, filter_delta_max_keys=0)
-        stack_sizes = []
-        inner = eng._fold_filter
-
-        def fold(inner=inner, eng=eng, stack_sizes=stack_sizes):
-            stack_sizes.append(len(eng._filter_deltas))
-            inner()
-
-        eng._fold_filter = fold
+            use_bloom=mode, bloom_capacity=10_000, fold_every=10_000)
         got = eng.run()
         want = oracle_crawl(works, edges, budget=2, corpus_urls=urls)
         assert_match(got, want)
         # the cadence (10k) alone would fold only at run end; the bound
         # forces a non-empty fold per wave, keeping the stack bounded
         assert sum(1 for n in stack_sizes if n) >= got.waves
-        assert eng._filter_delta_keys == 0
+        assert eng._seen.filter.delta_keys == 0
 
 
 def test_bucket_layout_validation_wrong_count(spark, tmp_path):
@@ -1299,17 +1319,19 @@ def test_runid_trim_unsorted_work_ids(spark, tmp_path):
     assert dict(got.results.dtypes).get("run_id") == "string"
 
 
-def test_runid_trim_fallback_many_runs(spark, tmp_path):
-    """Above runid_trim_max_runs the trim disables itself (the
+def test_runid_trim_fallback_many_runs(spark, tmp_path, monkeypatch):
+    """Above RUNID_TRIM_MAX_RUNS the trim disables itself (the
     reverse-map literal would bloat every plan) and the hot loop
     carries run_id strings — parity must hold on that path too."""
+    from moca_spark.crawl import engine
+
+    monkeypatch.setattr(engine, "RUNID_TRIM_MAX_RUNS", 0)
     edges = chain_graph(n=4)
     works = [
         W("w1", "http://site0.test/0", max_depth=3),
         W("w2", "http://site0.test/2", max_depth=3),
     ]
-    got, want = run_both(spark, tmp_path, works, edges, budget=1,
-                         runid_trim_max_runs=0)
+    got, want = run_both(spark, tmp_path, works, edges, budget=1)
     assert_match(got, want)
 
 
@@ -1347,7 +1369,7 @@ def test_runid_trim_unknown_run_raises(spark, tmp_path):
         eng2.run(resume=True)
 
 
-def test_round6_paths_forced_parity(spark, tmp_path):
+def test_round6_paths_forced_parity(spark, tmp_path, monkeypatch):
     """Round-6 adaptive shapes pinned to the oracle: the engine picks
     between a small-state broadcast admission + fused expand/admit and
     the at-scale checkpointed SMJ shape by exact row-count bounds.
@@ -1358,9 +1380,13 @@ def test_round6_paths_forced_parity(spark, tmp_path):
     # big-state regime: broadcast/fusion thresholds at 0 means every
     # wave takes the checkpointed cand2 + sorted-base SortMergeJoin
     # path even on a toy state
-    got_big, want = run_both(spark, tmp_path, works, edges, budget=2,
-                             state_broadcast_max=0, expand_broadcast_max=0)
-    assert_match(got_big, want)
+    from moca_spark.crawl import engine
+
+    with monkeypatch.context() as m:
+        m.setattr(engine, "EXPAND_BROADCAST_MAX", 0)
+        got_big, want = run_both(spark, tmp_path, works, edges, budget=2,
+                                 state_broadcast_max=0)
+        assert_match(got_big, want)
     # small-state regime (the defaults on a toy crawl): broadcast
     # admission, fused expand -> admit, criteria literal lookups
     got_small, want2 = run_both(spark, tmp_path / "s", works, edges,

@@ -124,9 +124,9 @@ def test_sharded_cuckoo_build_probe_update(spark):
     from pyspark.sql import functions as F
 
     from moca_spark.filters.sharded_cuckoo import (
+        apply_cuckoo_deltas,
         build_sharded_cuckoo,
         probe_sharded_cuckoo,
-        update_sharded_cuckoo,
     )
 
     seen = spark.range(0, 3000, 1, 4).select(F.xxhash64("id").alias("k"))
@@ -143,13 +143,13 @@ def test_sharded_cuckoo_build_probe_update(spark):
 
     # add delta: 4000-4500 become maybe-seen
     delta = spark.range(4000, 4500, 1, 2).select(F.xxhash64("id").alias("k"))
-    shards2 = update_sharded_cuckoo(shards, delta, "k", 8, 6000, kind="add")
+    shards2 = apply_cuckoo_deltas(shards, [("add", delta)], "k", 8, 6000)
     probed2 = probe_sharded_cuckoo(cand, "k", shards2, n_shards=8).collect()
     assert all(r._maybe_seen for r in probed2 if r.orig >= 4000)
 
     # delete delta: evicted keys mostly pass as definitively-new again
     dels = spark.range(0, 3000, 2, 2).select(F.xxhash64("id").alias("k"))
-    shards3 = update_sharded_cuckoo(shards2, dels, "k", 8, 6000, kind="del")
+    shards3 = apply_cuckoo_deltas(shards2, [("del", dels)], "k", 8, 6000)
     probed3 = probe_sharded_cuckoo(
         spark.range(0, 3000, 2, 2).select(
             F.col("id").alias("orig"), F.xxhash64("id").alias("k")),
