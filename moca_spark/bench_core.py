@@ -84,9 +84,9 @@ def frontier_schedule_dedup(
     PLUS an unmerged fresh layer (n_frontier//8 rows — steady-state
     admit ratio). The candidates stand in for the expand output, and
     consolidate_admit fuses their consolidation into the admission
-    (the engine checkpoints them first only on bloom waves and on
-    slices above ``expand_broadcast_max``, where the expand join keeps
-    AQE).
+    (the engine checkpoints them first only when the seen state holds
+    a filter and on slices above ``EXPAND_BROADCAST_MAX``, where the
+    expand join keeps AQE).
 
     With ``materialize_dir`` the synthetic inputs are written to parquet
     first (untimed) and state tables are prepared from table scans —

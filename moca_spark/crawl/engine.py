@@ -967,13 +967,19 @@ class CrawlEngine:
         """64-bit bloom key over (run, url) — xxhash64, JVM-side."""
         return F.xxhash64(F.concat_ws("\x00", F.col(run_col), F.col(url_col)))
 
-    def _pruned_links(self, parents: DataFrame, links: DataFrame) -> DataFrame:
+    def _pruned_links(self, sliced: DataFrame, n_rows: int,
+                      parents: DataFrame, links: DataFrame) -> DataFrame:
         """The links-graph side (``links``, the run's _link_graph) of
         the expand join, pruned to the wave's scheduled hosts. Joining
         on (src_url, src_host) —
         src_url alone determines the match; the redundant src_host key
         enables partition pruning on a src_host-partitioned links
-        table. With links_canonical, two pruning shapes by host count:
+        table. The hosts come from the cached ``sliced`` of ``n_rows``
+        rows (a superset of the ``parents``' hosts, so the rows are the
+        same; collecting them from ``parents`` would run the fetch join
+        again): a plain narrow collect while ``n_rows`` bounds their
+        count, else at most prune_hosts_threshold + 1 distinct ones.
+        With links_canonical, two pruning shapes by host count:
 
         - <= prune_hosts_threshold hosts: a literal host-list filter —
           static PartitionFilters on the scan, each wave reads only the
@@ -984,14 +990,15 @@ class CrawlEngine:
           inserts a dynamicpruningexpression into the scan's
           PartitionFilters (DPP), so pruning survives ANY host count
           instead of silently disappearing (tools/plan_audit.py
-          asserts the DPP shape)."""
+          asserts the DPP shape). The semi join keeps ``parents`` as
+          its host side: DPP needs a selective filter there, and the
+          cached slice shows the optimizer none."""
         if not self.links_canonical:
             return links
-        hosts = [
-            r.src_host
-            for r in parents.select("src_host").distinct()
-            .limit(self.prune_hosts_threshold + 1).collect()
-        ]
+        hosts_df = sliced.select(url_host(F.col("url")).alias("src_host"))
+        if n_rows > self.prune_hosts_threshold:
+            hosts_df = hosts_df.distinct().limit(self.prune_hosts_threshold + 1)
+        hosts = sorted({r.src_host for r in hosts_df.collect()} - {None})
         if 0 < len(hosts) <= self.prune_hosts_threshold:
             return links.filter(F.col("src_host").isin(hosts))
         if hosts:
@@ -1034,7 +1041,7 @@ class CrawlEngine:
             })
             return self.images.filter(F.col("image_id").isin(ids))
         if self.corpus_buckets:
-            return self._bucket_pruned_images(sliced)
+            return self._bucket_pruned_images(sliced, n_rows)
         if not self._warned_unbucketed:
             import warnings
 
@@ -1138,7 +1145,7 @@ class CrawlEngine:
                 return False
         return True
 
-    def _bucket_pruned_images(self, sliced: DataFrame) -> DataFrame:
+    def _bucket_pruned_images(self, sliced: DataFrame, n_rows: int) -> DataFrame:
         """Bucket-level corpus pruning for slices ABOVE
         fetch_prune_threshold (a production wave at the 10^10 target
         schedules ~10^5-10^6 URLs, far past what one pushed In can
@@ -1151,9 +1158,13 @@ class CrawlEngine:
         metadata (no bucketed-join claim), which the fetch join never
         relied on — the slice side broadcasts. On Iceberg this is the
         ``bucket(B, image_id)`` partition-transform prune (README
-        divergence #6)."""
+        divergence #6).
+
+        From 8 rows per bucket on, the collect is skipped: n ids leave
+        each of B buckets untouched with chance (1 - 1/B)^n <= e^(-n/B),
+        at most e^-8 here, so its answer would be "every bucket"."""
         files_by_bucket = self._bucket_files()
-        if not files_by_bucket:
+        if not files_by_bucket or n_rows >= 8 * self.corpus_buckets:
             return self.images
         id_col = F.sha1(F.encode("url", "UTF-8"))
         # F.hash IS Spark's bucketing hash (Murmur3 seed 42)
@@ -1186,7 +1197,7 @@ class CrawlEngine:
             sliced.unpersist()
             return None
         fetched = self._fetch(wave, sliced, n_delta)
-        cand = self._expand(fetched, runs_b, links, n_delta)
+        cand = self._expand(sliced, fetched, runs_b, links, n_delta)
         # the broadcast hint in _expand keeps a fused expand join sane
         # without AQE while the parent side is provably small; above
         # the bound the candidates checkpoint so the skew-prone expand
@@ -1222,11 +1233,13 @@ class CrawlEngine:
             return fetched.join(v, "image_id", "left")
         return fetched.withColumn("psnr_ok", F.lit(None).cast("boolean"))
 
-    def _expand(self, fetched: DataFrame, runs_b: DataFrame,
-                links: DataFrame, n_delta: int) -> DataFrame:
+    def _expand(self, sliced: DataFrame, fetched: DataFrame,
+                runs_b: DataFrame, links: DataFrame,
+                n_delta: int) -> DataFrame:
         """The fetched parents' out-links that pass the criteria: one
         candidate row per (parent, link). Max-depth gates the PARENT
-        (MaxDepthCriteria)."""
+        (MaxDepthCriteria). The cached ``sliced`` sizes the links prune
+        (_pruned_links)."""
         parents_src = fetched.filter(F.col("bytes").isNotNull())
         if self._run_criteria is not None:
             # trim mode: literal-array lookups on the carried ordinal,
@@ -1255,7 +1268,7 @@ class CrawlEngine:
                   if "_run_ord" in fetched.columns else []),
             )
         )
-        links = self._pruned_links(parents, links)
+        links = self._pruned_links(sliced, n_delta, parents, links)
         # deliberate join strategy (round 6): the parent side is
         # bounded by the slice (n_delta rows, known exactly) — when it
         # is provably small, hint the broadcast instead of leaving the

@@ -1141,6 +1141,47 @@ def test_fetch_prune_bucket_level_above_threshold(spark, tmp_path):
     assert got < {i for rows in by_bucket.values() for i in rows}
 
 
+def test_fetch_prune_dense_slice_skips_bucket_collect(spark, tmp_path):
+    """A slice of >= 8 rows per corpus bucket gets back the corpus
+    frame itself, with no bucket-id collect: each bucket is then
+    untouched with chance <= e^-8, so the collect would answer "every
+    bucket". The slice's rows all hash to ONE bucket, so one row fewer
+    takes the collect and reads only that bucket's files."""
+    import hashlib
+    import re
+
+    from pyspark.sql import functions as F
+
+    from moca_spark.store.lakehouse import write_corpus_bucketed
+
+    urls = [f"http://host0.test/p{i}" for i in range(40)]
+    images = write_corpus_bucketed(
+        spark, images_for_urls(spark, urls), str(tmp_path / "corpus"),
+        n_buckets=8)
+    eng = CrawlEngine(
+        spark, links_df(spark, [(urls[0], urls[1])]), images,
+        budget=8, checkpoint_dir=str(tmp_path / "chk"), durable=False,
+        fetch_prune=4, corpus_buckets=8,
+    )
+    id2url = {hashlib.sha1(u.encode()).hexdigest(): u for u in urls}
+    by_bucket: dict[int, list[str]] = {}
+    for r in images.select(
+            "image_id",
+            F.pmod(F.hash("image_id"), F.lit(8)).alias("_b")).collect():
+        by_bucket.setdefault(r._b, []).append(id2url[r.image_id])
+    bucket, bucket_urls = max(by_bucket.items(), key=lambda kv: len(kv[1]))
+    rows = [(f"w{r}", u) for r in range(64) for u in bucket_urls]
+
+    def pruned(n):
+        sliced = spark.createDataFrame(rows[:n], "run_id string, url string")
+        return eng._pruned_images(sliced, n)
+
+    assert pruned(64) is eng.images
+    read_buckets = {int(re.search(r"_(\d{5})\.c000", f).group(1))
+                    for f in pruned(63).inputFiles()}
+    assert read_buckets == {bucket}
+
+
 @pytest.mark.parametrize("fetch_prune", [1, 3])
 def test_fetch_prune_bucket_level_crawl_parity(spark, tmp_path, fetch_prune):
     """Crawl parity with fetch_prune forced tiny over a bucketed

@@ -111,45 +111,45 @@ def corpus_of(pages):
 def main() -> None:
     base = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_slice = int(sys.argv[2]) if len(sys.argv) > 2 else 200
-    spark = get_spark(app_name="fetch-bench", master="local[8]",
+    spark = get_spark(app_name="fetch-bench", master="local[4]",
                       shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {"slice_rows": n_slice, "reps": REPS, "sizes": {}}
     for mult in (1, 8):
         n = base * mult
-        tmp = tempfile.mkdtemp(prefix=f"fetchbench-{n}-")
-        pages = scale_frontier(spark, n, 2_000, 16).select("url")
-        corpus_of(pages).write.mode("overwrite").parquet(f"{tmp}/plain")
-        plain = spark.read.parquet(f"{tmp}/plain")
-        # 1 MB row groups: point lookups want granular skipping units
-        bucketed = write_corpus_bucketed(spark, plain, f"{tmp}/bucketed", 64,
-                                         row_group_bytes=1024 * 1024)
-        # fixed slice: uniform sample of the corpus's URL space, same
-        # size at both corpus scales (the wave slice does not grow with
-        # the corpus)
-        sliced = (
-            pages.sample(2.0 * n_slice / n, seed=7).limit(n_slice)
-            .localCheckpoint(eager=True)
-        )
-        # bucket-LEVEL pruning regime (slices above fetch_prune): only
-        # the slice's buckets' files are read. Uniform sha1 ids cover
-        # all B buckets once |slice| >> B, so the mechanism pays off
-        # only when B exceeds the slice size — which is exactly the
-        # production layout (B = corpus_bytes / target_file_size, e.g.
-        # 10 TB / 100 MB = 10^5 buckets vs 10^4-10^5-URL slices). The
-        # sandbox scales both down: a 24-id slice over 64 buckets
-        # touches ~20 of them; rows_read must be ~1/3 of `full`.
-        bucket_slice = (
-            pages.sample(100.0 / n, seed=11).limit(24)
-            .localCheckpoint(eager=True)
-        )
-        out["sizes"][n] = {
-            "full": measure(spark, sliced, plain, prune_threshold=0),
-            "single_in": measure(spark, sliced, bucketed,
-                                 prune_threshold=n_slice, corpus_buckets=64),
-            "bucket_level": measure(spark, bucket_slice, bucketed,
-                                    prune_threshold=16, corpus_buckets=64),
-        }
+        with tempfile.TemporaryDirectory(prefix=f"fetchbench-{n}-") as tmp:
+            pages = scale_frontier(spark, n, 2_000, 16).select("url")
+            corpus_of(pages).write.mode("overwrite").parquet(f"{tmp}/plain")
+            plain = spark.read.parquet(f"{tmp}/plain")
+            # 1 MB row groups: point lookups want granular skipping units
+            bucketed = write_corpus_bucketed(spark, plain, f"{tmp}/bucketed", 64,
+                                             row_group_bytes=1024 * 1024)
+            # fixed slice: uniform sample of the corpus's URL space, same
+            # size at both corpus scales (the wave slice does not grow with
+            # the corpus)
+            sliced = (
+                pages.sample(2.0 * n_slice / n, seed=7).limit(n_slice)
+                .localCheckpoint(eager=True)
+            )
+            # bucket-LEVEL pruning regime (slices above fetch_prune): only
+            # the slice's buckets' files are read. Uniform sha1 ids cover
+            # all B buckets once |slice| >> B, so the mechanism pays off
+            # only when B exceeds the slice size — which is exactly the
+            # production layout (B = corpus_bytes / target_file_size, e.g.
+            # 10 TB / 100 MB = 10^5 buckets vs 10^4-10^5-URL slices). The
+            # sandbox scales both down: a 24-id slice over 64 buckets
+            # touches ~20 of them; rows_read must be ~1/3 of `full`.
+            bucket_slice = (
+                pages.sample(100.0 / n, seed=11).limit(24)
+                .localCheckpoint(eager=True)
+            )
+            out["sizes"][n] = {
+                "full": measure(spark, sliced, plain, prune_threshold=0),
+                "single_in": measure(spark, sliced, bucketed,
+                                     prune_threshold=n_slice, corpus_buckets=64),
+                "bucket_level": measure(spark, bucket_slice, bucketed,
+                                        prune_threshold=16, corpus_buckets=64),
+            }
     s1, s8 = (out["sizes"][base * m] for m in (1, 8))
     out["rows_read_growth_8x"] = {
         k: round(s8[k]["rows_read"] / max(s1[k]["rows_read"], 1), 2)

@@ -216,8 +216,11 @@ def audit(tmp: str) -> int:
     parents_fix = spark.createDataFrame(
         [(f"http://h{i}.test/a", f"h{i}.test", 1) for i in range(5)],
         ["src_url", "src_host", "depth"]).filter(F.col("depth") < 3)
-    p = plan_of(parents_fix.join(eng_l._pruned_links(parents_fix, eng_l.links),
-                                 ["src_url", "src_host"]))
+    slice_fix = spark.createDataFrame(
+        [(f"http://h{i}.test/a",) for i in range(5)], ["url"])
+    p = plan_of(parents_fix.join(
+        eng_l._pruned_links(slice_fix, 5, parents_fix, eng_l.links),
+        ["src_url", "src_host"]))
     check("links prune: DPP on partitioned scan past host threshold",
           "dynamicpruning" in p)
 

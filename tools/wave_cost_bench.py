@@ -40,19 +40,18 @@ def main() -> None:
     use_bloom = sys.argv[2] if len(sys.argv) > 2 else False
     if use_bloom not in (False, "sharded", "cuckoo"):
         raise SystemExit(f"unknown filter mode {use_bloom!r}")
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     edges = chain_graph(n=n)
     urls = sorted({u for e in edges for u in e})
-    eng = CrawlEngine(
-        spark, links_df(spark, edges), images_for_urls(spark, urls),
-        budget=1, durable="eventlog",
-        checkpoint_dir=tempfile.mkdtemp(prefix="wavecost-"),
-        n_salts=2,
-        use_bloom=use_bloom, bloom_capacity=1_000_000,
-    )
-    eng.add_works([Work("w1", urls[0], CriteriaSpec(max_depth=10_000))])
-    res = eng.run()
+    with tempfile.TemporaryDirectory(prefix="wavecost-") as chk:
+        eng = CrawlEngine(
+            spark, links_df(spark, edges), images_for_urls(spark, urls),
+            budget=1, durable="eventlog", checkpoint_dir=chk, n_salts=2,
+            use_bloom=use_bloom, bloom_capacity=1_000_000,
+        )
+        eng.add_works([Work("w1", urls[0], CriteriaSpec(max_depth=10_000))])
+        res = eng.run()
     ts = eng.wave_times
     third = max(1, len(ts) // 3)
     head, tail = ts[:third], ts[-third:]
