@@ -251,10 +251,8 @@ class SeenState:
             return self.admit_unseen(cand).select(*cols)
         tagged = self.filter.probe(cand)
         new = tagged.filter(~F.col("_maybe_seen")).select(*cols)
-        evict = self.filter.deletable
-        checked = self.admit_unseen(tagged.filter(F.col("_maybe_seen")),
-                                    keep_flag=evict)
-        if evict:
+        checked = self.admit_unseen(tagged.filter(F.col("_maybe_seen")))
+        if self.filter.deletable:
             # small: filter-hit admissions; with a big state AQE-off
             # keeps the base side of the admit join exchange-free
             checked = _materialize(checked, aqe_off=not self.small())
@@ -262,10 +260,11 @@ class SeenState:
                               .select(F.col("_key").alias("k")))
         return new.unionByName(checked.select(*cols))
 
-    def admit_unseen(self, df: DataFrame, keep_flag: bool = False) -> DataFrame:
+    def admit_unseen(self, df: DataFrame) -> DataFrame:
         """The J1/T8 admission rule over the base+delta seen state:
         keep rows never seen, or seen only at a strictly larger depth
-        (re-crawl). One left join against the (big) base — which is
+        (re-crawl, marked ``_was_seen`` for the cuckoo's eviction; a
+        projection without it prunes it from the plan). One left join against the (big) base — which is
         hash-partitioned AND sorted by STATE_KEYS from the fold, so it
         joins with no exchange and no sort — and one against the
         (small) delta stack. While the whole state is provably small
@@ -288,9 +287,8 @@ class SeenState:
             out = out.withColumn("_bd_delta", F.lit(None).cast("int"))
         bd = F.least("_bd_base", "_bd_delta")
         out = out.filter(bd.isNull() | (F.col("depth") < bd))
-        if keep_flag:  # re-crawl marker (cuckoo eviction, admit)
-            out = out.withColumn("_was_seen", bd.isNotNull())
-        return out.drop("_bd_base", "_bd_delta")
+        return out.withColumn("_was_seen", bd.isNotNull()) \
+            .drop("_bd_base", "_bd_delta")
 
     def fold(self) -> DataFrame:
         """Fold the filter's deltas, then the pending deltas into the
